@@ -21,263 +21,53 @@ Scale notes (100 TB source):
 
 from __future__ import annotations
 
+from math import prod
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo_olap_spark.cube.measures import (
+    FAMILIES,
+    PARTIALS,
+    build_aggs,
+    hist_bank,
+    hist_bin_sql,
+    storage,
+    weight_sql,
+)
 from mongo_olap_spark.cube.spec import CubeSpec, Measure
-from mongo_olap_spark.functions.expressions import SUM_DECIMAL
-
-
-def _measure_aggs(m: Measure, mult: str | None = None) -> list:
-    """Aggregate expressions for one measure's storage columns.
-
-    With ``mult`` (a ±1 multiplicity column), produces *signed* partials
-    for incremental maintenance: sum(x*mult), sum(mult) — insert adds,
-    delete retracts. Without it, plain build aggregates.
-    """
-    n = m.name
-    src = F.expr(m.source_path) if m.op != "count" else None
-    _VAR_OPS = ("var_pop", "var_samp", "stddev_pop", "stddev_samp")
-    if m.op in _VAR_OPS:
-        # dispersion family: decomposed (Σx, Σx², n) exact DECIMAL
-        # partials — x² squared in DOUBLE first (decimal(38,6)² would
-        # overflow), then exact decimal accumulation; signed under
-        # mult, so the family is fully retractable like sum/avg
-        d = src.cast("double")
-        sq = (d * d).cast(SUM_DECIMAL)
-        if mult is not None:
-            sign = F.col(mult).cast("long")
-            return [
-                F.sum(src.cast(SUM_DECIMAL) * sign).alias(f"{n}_sum"),
-                F.sum(sq * sign).alias(f"{n}_sum2"),
-                F.sum(F.when(src.isNotNull(), sign).otherwise(F.lit(0))).alias(f"{n}_cnt"),
-            ]
-        return [
-            F.sum(src.cast(SUM_DECIMAL)).alias(f"{n}_sum"),
-            F.sum(sq).alias(f"{n}_sum2"),
-            F.count(src).alias(f"{n}_cnt"),
-        ]
-    if mult is not None:
-        sign = F.col(mult).cast("long")
-        if m.op == "count":
-            return [F.sum(sign).alias(f"{n}_cnt")]
-        if m.op == "sum":
-            return [F.sum(src.cast(SUM_DECIMAL) * sign).alias(f"{n}_sum")]
-        if m.op == "avg":
-            return [
-                F.sum(src.cast(SUM_DECIMAL) * sign).alias(f"{n}_sum"),
-                F.sum(F.when(src.isNotNull(), sign).otherwise(F.lit(0))).alias(f"{n}_cnt"),
-            ]
-        # min/max/distinct: valid for the *insert* rows of the batch; a
-        # delete touching one forces a cell recompute (streaming/ivm) —
-        # neither a runner-up min nor a set removal is derivable from
-        # the stored partial.
-        if m.op == "min":
-            return [F.min(F.when(sign > 0, src)).alias(f"{n}_min")]
-        if m.op == "max":
-            return [F.max(F.when(sign > 0, src)).alias(f"{n}_max")]
-        if m.op == "distinct":
-            return [_hll_agg(F.when(sign > 0, src), m).alias(f"{n}_hll")]
-        if m.op == "topk":
-            # mass partial rides along (insert rows only, like the map)
-            return [
-                _topk_agg(m, mult=mult).alias(f"{n}_tk"),
-                F.sum(F.when((sign > 0) & src.isNotNull(), sign)
-                      .otherwise(F.lit(0))).cast("long").alias(f"{n}_tkn"),
-            ]
-        if m.op == "quantile":
-            # signed bin counts: insert adds, delete retracts — the
-            # histogram sketch IS retraction-maintainable (integer
-            # vector addition), unlike min/max/HLL
-            return [_hist_agg(src, m, weight=mult).alias(f"{n}_hist")]
-        raise AssertionError(m.op)
-    if m.op == "count":
-        return [F.count(F.lit(1)).alias(f"{n}_cnt")]
-    if m.op == "sum":
-        return [F.sum(src.cast(SUM_DECIMAL)).alias(f"{n}_sum")]
-    if m.op == "avg":
-        return [
-            F.sum(src.cast(SUM_DECIMAL)).alias(f"{n}_sum"),
-            F.count(src).alias(f"{n}_cnt"),
-        ]
-    if m.op == "min":
-        return [F.min(src).alias(f"{n}_min")]
-    if m.op == "max":
-        return [F.max(src).alias(f"{n}_max")]
-    if m.op == "distinct":
-        return [_hll_agg(src, m).alias(f"{n}_hll")]
-    if m.op == "topk":
-        # {n}_tkn = the cell's true item mass (non-null rows): the
-        # serve compares it to the map's Σcounts — equality certifies
-        # the frequent-items sketch never purged, i.e. the EXACT
-        # regime (r15, found at sf100: a saturated approx_top_k
-        # returns an EMPTY result, not a truncated one)
-        return [
-            _topk_agg(m).alias(f"{n}_tk"),
-            F.count(src).alias(f"{n}_tkn"),
-        ]
-    if m.op == "quantile":
-        return [_hist_agg(src, m).alias(f"{n}_hist")]
-    raise AssertionError(m.op)
-
-
-def hist_bin_expr(src, m: Measure):
-    """1-based storage index of ``src``'s histogram bin: 0 = underflow
-    (< lo), 1..nbins = [lo, hi) in fixed linear bins, nbins + 1 =
-    overflow (≥ hi). NULL for NULL input (contributes to no bin)."""
-    lo, hi, nb = float(m.lo), float(m.hi), int(m.nbins)
-    w = (hi - lo) / nb
-    raw = (F.floor((src.cast("double") - F.lit(lo)) / F.lit(w)) + 1).cast("int")
-    return F.when(src.isNull(), F.lit(None).cast("int")).otherwise(
-        F.least(F.lit(nb + 1), F.greatest(F.lit(0), raw))
-    )
-
-
-def _hist_agg(src, m: Measure, weight=None):
-    """Mergeable fixed-bin histogram partial as ONE agg expression:
-    an array of nbins + 2 per-bin signed sums. Each element is a plain
-    ``sum(CASE WHEN bin = i THEN w ELSE 0)`` — JVM-side,
-    whole-stage-codegen'd, map-side combined; the array wrapper is a
-    post-aggregation projection Catalyst splits out automatically. No
-    collect_list, no UDF: per-cell state is a fixed ~8·(nbins+2)-byte
-    vector regardless of source size.
-
-    Built as ONE ``F.expr`` SQL string, not nbins·6 Column calls: in
-    classic (py4j) mode every Column operation is a driver round trip,
-    and ~600 of them cost >1 s of PLAN time per micro-batch — measured
-    r9; the single-string form plans in ~10 ms. ``src`` is accepted
-    for signature parity but the SQL is derived from the measure's
-    source path (the same expression the Column form wrapped).
-    """
-    lo, hi, nb = float(m.lo), float(m.hi), int(m.nbins)
-    w = (hi - lo) / nb
-    s = f"({m.source_path})"
-    idx = (
-        f"(CASE WHEN {s} IS NULL THEN CAST(NULL AS INT) "
-        f"ELSE least({nb + 1}, greatest(0, "
-        f"CAST(floor((CAST({s} AS DOUBLE) - {lo!r}D) / {w!r}D) + 1 AS INT))) END)"
-    )
-    wsql = "1L" if weight is None else f"CAST({weight} AS BIGINT)"
-    elems = ", ".join(
-        f"sum(CASE WHEN {idx} = {i} THEN {wsql} ELSE 0L END)" for i in range(nb + 2)
-    )
-    return F.expr(f"array({elems})")
-
-
-def _topk_agg(m: Measure, mult: str | None = None):
-    """Bounded frequent-items partial: a map<item, long> of the cell's
-    up-to-``max_items`` most frequent values, built from the native
-    ``approx_top_k`` aggregate (Datasketches frequent-items — JVM-side,
-    map-side combined) with k = maxItemsTracked = the measure's
-    capacity, so the FULL tracked state is extracted, not just the
-    top k. The sketch tracks NULL as an item; the ``filter`` drops it
-    (NULL never counts — SQL COUNT semantics, same policy as the
-    distinct measure). Result is an empty map (never SQL NULL) for an
-    all-null/empty cell.
-
-    With ``mult``, only insert rows (+1) accumulate — a delete touching
-    a topk cube triggers the bounded cell-rescan repair, same policy as
-    min/max/HLL (spec._OPS: not retractable, truncation discards
-    evicted items' history).
-
-    EXACT regime: while a cell's cardinality ≤ max_items the sketch
-    never evicts and counts are exact (verified empirically at the
-    boundary: 10k distinct @ maxItemsTracked=10k returns all 10k items
-    with exact counts); beyond it, heavy items keep accurate counts
-    within the frequent-items error bound while the long tail truncates.
-    """
-    s = f"({m.source_path})"
-    if mult is not None:
-        s = f"(CASE WHEN CAST({mult} AS BIGINT) > 0 THEN {s} END)"
-    cap = m.capacity
-    return F.expr(
-        f"map_from_entries(filter(approx_top_k({s}, {cap}, {cap}), "
-        "e -> e.item IS NOT NULL))"
-    )
-
-
-def _hll_agg(col, m: Measure):
-    """Mergeable HLL-sketch partial (Datasketches via the native
-    ``hll_sketch_agg`` — JVM-side, map-side combined like any agg).
-    Null inputs contribute nothing; an all-null/empty group yields an
-    *empty sketch* (estimate 0), never SQL NULL (verified behavior)."""
-    return F.hll_sketch_agg(col) if m.lgk is None else F.hll_sketch_agg(col, m.lgk)
 
 
 def cell_aggs(spec: CubeSpec, mult: str | None = None) -> list:
-    aggs: list = []
-    for m in spec.measures:
-        aggs.extend(_measure_aggs(m, mult))
-    return aggs
+    """Build aggregates of every storage column. With ``mult`` (a ±1
+    multiplicity column) the partials are *signed* for incremental
+    maintenance: insert adds, delete retracts."""
+    return [a for m in spec.measures for a in build_aggs(m, mult)]
 
 
-#: measure ops whose storage partials re-aggregate EXACTLY through an
-#: intermediate grouping level (decimal/integer sums, min/max) — the
-#: gate for the two-level histogram build below. distinct/topk stay
-#: single-level: their sketch bytes are representation-sensitive to
-#: the merge path even when estimates agree.
-_REAGG_OPS = frozenset(
-    {"count", "sum", "avg", "min", "max", "quantile",
-     "var_pop", "var_samp", "stddev_pop", "stddev_samp"}
-)
-
-
-def _merge_measure_aggs(m: Measure, mult: str | None) -> list:
+def _merge_aggs(m: Measure, mult: str | None) -> list:
     """Second-level aggregates that merge one measure's level-1
-    storage partials without changing value, dtype, OR nullability.
-
-    Nullability parity matters: the single-level build's count-shaped
-    partials come from ``F.count`` (non-nullable) in the unsigned
-    build but ``F.sum`` (nullable) in the signed delta path — the
-    coalesce mirrors exactly that split, so cell schemas written by
-    either plan are byte-identical. The coalesce can never fire on a
-    live group (level 1 always emits a non-null count partial)."""
-    n = m.name
-    zero = F.lit(0)
-    cnt = (F.sum(f"{n}_cnt") if mult is not None
-           else F.coalesce(F.sum(f"{n}_cnt"), zero))
-    if m.op == "count":
-        return [cnt.cast("long").alias(f"{n}_cnt")]
-    if m.op == "sum":
-        return [F.sum(f"{n}_sum").cast(SUM_DECIMAL).alias(f"{n}_sum")]
-    if m.op == "avg":
-        return [
-            F.sum(f"{n}_sum").cast(SUM_DECIMAL).alias(f"{n}_sum"),
-            cnt.cast("long").alias(f"{n}_cnt"),
-        ]
-    if m.op == "min":
-        return [F.min(f"{n}_min").alias(f"{n}_min")]
-    if m.op == "max":
-        return [F.max(f"{n}_max").alias(f"{n}_max")]
-    if m.op in ("var_pop", "var_samp", "stddev_pop", "stddev_samp"):
-        return [
-            F.sum(f"{n}_sum").cast(SUM_DECIMAL).alias(f"{n}_sum"),
-            F.sum(f"{n}_sum2").cast(SUM_DECIMAL).alias(f"{n}_sum2"),
-            cnt.cast("long").alias(f"{n}_cnt"),
-        ]
-    raise AssertionError(m.op)
-
-
-def _bin_idx_sql(m: Measure) -> str:
-    """SQL for a quantile measure's bin index (NULL source → NULL bin;
-    under/overflow clamped to the flanking buckets) — the same
-    expression ``_hist_agg`` branches on per bucket."""
-    lo, hi, nb = float(m.lo), float(m.hi), int(m.nbins)
-    w = (hi - lo) / nb
-    s = f"({m.source_path})"
-    return (
-        f"(CASE WHEN {s} IS NULL THEN CAST(NULL AS INT) "
-        f"ELSE least({nb + 1}, greatest(0, "
-        f"CAST(floor((CAST({s} AS DOUBLE) - {lo!r}D) / {w!r}D) + 1 AS INT))) END)"
-    )
+    partials without changing value, dtype OR nullability. The plain
+    build's count partials are non-nullable ``F.count``s, so on the
+    unsigned plan a partial with a non-NULL empty value coalesces to
+    it (it can never fire on a live group); the signed delta path's
+    ``F.sum`` partials stay nullable."""
+    out = []
+    for c, s in storage(m):
+        p = PARTIALS[s]
+        agg = p.rollup(c, m)
+        if mult is None and p.empty is not None:
+            agg = F.coalesce(agg, F.expr(p.empty))
+        out.append(agg.alias(c))
+    return out
 
 
 def _hist_two_level(df: DataFrame, spec: CubeSpec,
                     mult: str | None) -> DataFrame:
     """Histogram cube build as (dims, bin) → dims (optimization r16).
 
-    The single-level ``_hist_agg`` evaluates nbins + 2 CASE aggregates
-    per source row — ~100 extra branchy ops/row that dominate the scan
+    The single-level histogram evaluates nbins + 2 CASE aggregates per
+    source row — ~100 extra branchy ops/row that dominate the scan
     stage (measured 1.27 s vs 0.14 s for the plain agg at sf0.1, and
     the same per-row multiplier at 100 TB). Grouping by (dims, bin)
     first costs one bin computation per row; the second level then
@@ -287,89 +77,43 @@ def _hist_two_level(df: DataFrame, spec: CubeSpec,
     and dtypes are bit-identical to the single-level build (integer
     sums reorder freely), pinned by tests/test_cube_quantile.py.
 
-    Gated to specs whose measures are all exactly re-aggregable
-    (``_REAGG_OPS``) with ≥ 1 quantile measure; everything else keeps
-    the single-level plan. r17 generalization: N quantile measures
-    group level 1 by one ``__bin_<name>`` column per measure — the
-    level-1 cell fan-out is ∏(nbins+2) per (dims) group, which the
-    gate caps (see ``_hist_two_level_ok``) so the two-level plan never
-    exceeds the per-row CASE-bank cost it replaces. The single-measure
-    plan is byte-identical to r16 (map-addressed rebuild); the multi
-    path rebuilds each histogram with a CASE bank at LEVEL 2, where it
-    runs over |cells|·∏bins tiny rows instead of every source row.
+    Gated to specs whose measures are all exactly re-aggregable with
+    ≥ 1 quantile measure (``_hist_two_level_ok``). N quantile measures
+    group level 1 by one ``__bin_<name>`` column each; the level-1
+    fan-out ∏(nbins+2) per (dims) group is capped so the two-level
+    plan never exceeds the per-row CASE-bank cost it replaces. One
+    quantile measure rebuilds its vector by a key-addressed map lookup
+    (merge order never matters); several rebuild theirs with a CASE
+    bank at LEVEL 2, over |cells|·∏bins tiny rows instead of every
+    source row. The two give different physical plans.
     """
-    qms = [m for m in spec.measures if m.op == "quantile"]
-    if len(qms) > 1:
-        return _hist_two_level_multi(df, spec, qms, mult)
-    qm = qms[0]
-    lo, hi, nb = float(qm.lo), float(qm.hi), int(qm.nbins)
-    w = (hi - lo) / nb
-    s = f"({qm.source_path})"
-    bin_sql = (
-        f"(CASE WHEN {s} IS NULL THEN CAST(NULL AS INT) "
-        f"ELSE least({nb + 1}, greatest(0, "
-        f"CAST(floor((CAST({s} AS DOUBLE) - {lo!r}D) / {w!r}D) + 1 AS INT))) END)"
+    hists = [m for m in spec.measures if m.op == "quantile"]
+    bins = {m.name: "__bin" if len(hists) == 1 else f"__bin_{m.name}" for m in hists}
+    lvl1 = df.groupBy(
+        *[d.expr() for d in spec.dimensions],
+        *[F.expr(hist_bin_sql(m)).alias(bins[m.name]) for m in hists],
+    ).agg(
+        F.expr(f"sum({weight_sql(mult)})").alias("__rows"),
+        *[a for m in spec.measures if m not in hists for a in build_aggs(m, mult)],
     )
-    wsql = "1L" if mult is None else f"CAST({mult} AS BIGINT)"
-    dims = [d.expr() for d in spec.dimensions]
-    dim_names = [d.name for d in spec.dimensions]
-    lvl1_aggs = [F.expr(f"sum({wsql})").alias("__rows")]
+    lvl2: list = []
     for m in spec.measures:
-        if m.op != "quantile":
-            lvl1_aggs.extend(_measure_aggs(m, mult))
-    lvl1 = df.groupBy(*dims, F.expr(bin_sql).alias("__bin")).agg(*lvl1_aggs)
-    # bin-vector rebuild: key-addressed map lookup, so merge order
-    # never matters; one F.expr string (py4j plan-time cost — see
-    # _hist_agg's docstring)
-    # outer CAST: nullability parity with the single-level build
-    # (array of sums has nullable elements; the coalesce'd transform
-    # elements would read non-nullable)
-    hist = F.expr(
-        f"CAST(transform(sequence(0, {nb + 1}), i -> coalesce(element_at("
-        "map_from_entries(array_agg(CASE WHEN __bin IS NOT NULL THEN "
-        "struct(__bin, __rows) END)), CAST(i AS INT)), 0L)) "
-        "AS ARRAY<BIGINT>)"
-    )
-    lvl2_aggs: list = []
-    for m in spec.measures:
-        if m.op == "quantile":
-            lvl2_aggs.append(hist.alias(f"{m.name}_hist"))
+        if m not in hists:
+            lvl2.extend(_merge_aggs(m, mult))
+        elif len(hists) == 1:
+            # outer CAST: nullability parity with the single-level build
+            # (an array of sums has nullable elements; the coalesce'd
+            # transform elements would read non-nullable)
+            lvl2.append(F.expr(
+                f"CAST(transform(sequence(0, {int(m.nbins) + 1}), i -> "
+                "coalesce(element_at(map_from_entries(array_agg(CASE WHEN "
+                "__bin IS NOT NULL THEN struct(__bin, __rows) END)), "
+                "CAST(i AS INT)), 0L)) AS ARRAY<BIGINT>)"
+            ).alias(f"{m.name}_hist"))
         else:
-            lvl2_aggs.extend(_merge_measure_aggs(m, mult))
-    return lvl1.groupBy(*dim_names).agg(*lvl2_aggs)
-
-
-def _hist_two_level_multi(df: DataFrame, spec: CubeSpec,
-                          qms: list, mult: str | None) -> DataFrame:
-    """N-quantile two-level build (see ``_hist_two_level``)."""
-    wsql = "1L" if mult is None else f"CAST({mult} AS BIGINT)"
-    dims = [d.expr() for d in spec.dimensions]
-    dim_names = [d.name for d in spec.dimensions]
-    bin_cols = [
-        F.expr(_bin_idx_sql(m)).alias(f"__bin_{m.name}") for m in qms
-    ]
-    lvl1_aggs = [F.expr(f"sum({wsql})").alias("__rows")]
-    for m in spec.measures:
-        if m.op != "quantile":
-            lvl1_aggs.extend(_measure_aggs(m, mult))
-    lvl1 = df.groupBy(*dims, *bin_cols).agg(*lvl1_aggs)
-    lvl2_aggs: list = []
-    for m in spec.measures:
-        if m.op == "quantile":
-            nb = int(m.nbins)
-            # same CASE-bank construct as the single-level _hist_agg
-            # (identical dtype/nullability), but over level-1 rows:
-            # |cells|·∏bins instead of every source row
-            elems = ", ".join(
-                f"sum(CASE WHEN __bin_{m.name} = {i} THEN __rows "
-                f"ELSE 0L END)"
-                for i in range(nb + 2)
-            )
-            lvl2_aggs.append(
-                F.expr(f"array({elems})").alias(f"{m.name}_hist"))
-        else:
-            lvl2_aggs.extend(_merge_measure_aggs(m, mult))
-    return lvl1.groupBy(*dim_names).agg(*lvl2_aggs)
+            lvl2.append(hist_bank(bins[m.name], int(m.nbins), "__rows")
+                        .alias(f"{m.name}_hist"))
+    return lvl1.groupBy(*spec.dim_names).agg(*lvl2)
 
 
 #: level-1 fan-out cap for the multi-quantile two-level build: the
@@ -379,31 +123,25 @@ _HIST_MULTI_FANOUT_CAP = 4096
 
 
 def _hist_two_level_ok(spec: CubeSpec) -> bool:
-    ops = [m.op for m in spec.measures]
-    nq = ops.count("quantile")
-    if nq == 0 or not set(ops) <= _REAGG_OPS:
+    hists = [m for m in spec.measures if m.op == "quantile"]
+    if not hists or not all(FAMILIES[m.op].reaggregable for m in spec.measures):
         return False
-    if nq == 1:
-        return True  # r16 gate: unconditional, plan byte-identical
-    fanout = 1
-    for m in spec.measures:
-        if m.op == "quantile":
-            fanout *= int(m.nbins) + 2
-            if fanout > _HIST_MULTI_FANOUT_CAP:
-                return False
-    return True
+    # one quantile measure: unconditional (r16 gate, plan byte-identical)
+    return (len(hists) == 1
+            or prod(int(m.nbins) + 2 for m in hists) <= _HIST_MULTI_FANOUT_CAP)
+
+
+def _cells(df: DataFrame, spec: CubeSpec, mult: str | None) -> DataFrame:
+    if spec.filter_sql:
+        df = df.filter(spec.filter_sql)
+    if _hist_two_level_ok(spec):
+        return _hist_two_level(df, spec, mult)
+    return df.groupBy(*[d.expr() for d in spec.dimensions]).agg(*cell_aggs(spec, mult))
 
 
 def build_cube(spark: SparkSession, spec: CubeSpec, source: DataFrame) -> DataFrame:
     """Materialize the cube cells for ``spec`` from ``source``."""
-    df = source
-    if spec.filter_sql:
-        df = df.filter(spec.filter_sql)
-    if _hist_two_level_ok(spec):
-        return _hist_two_level(df, spec, mult=None)
-    dims = [d.expr() for d in spec.dimensions]
-    df = df.groupBy(*dims).agg(*cell_aggs(spec))
-    return df
+    return _cells(source, spec, None)
 
 
 def delta_cells(spec: CubeSpec, cdc: DataFrame, mult_col: str = "mult") -> DataFrame:
@@ -413,10 +151,4 @@ def delta_cells(spec: CubeSpec, cdc: DataFrame, mult_col: str = "mult") -> DataF
     (insert/delete; an update is a −1/+1 pair). Output schema matches
     the cube cell table, ready for merge_cells().
     """
-    df = cdc
-    if spec.filter_sql:
-        df = df.filter(spec.filter_sql)
-    if _hist_two_level_ok(spec):
-        return _hist_two_level(df, spec, mult=mult_col)
-    dims = [d.expr() for d in spec.dimensions]
-    return df.groupBy(*dims).agg(*cell_aggs(spec, mult=mult_col))
+    return _cells(cdc, spec, mult_col)

@@ -353,9 +353,7 @@ class CubeCatalog(TableFormatAdapter):
                 path = os.path.join(self._dir(name), part["path"])
                 actual = {f.name for f in
                           self.spark.read.parquet(path).schema.fields}
-                expected = set(cand.dim_names)
-                for ms in cand.measures:
-                    expected.update(ms.storage_cols())
+                expected = set(cand.cell_columns)
                 # lattice/bookkeeping columns (__level, …) are not
                 # spec-derived; ignore them on the actual side
                 actual = {c for c in actual if not c.startswith("__")}
@@ -460,7 +458,7 @@ class CubeCatalog(TableFormatAdapter):
         """
         from dataclasses import replace as _dc_replace
 
-        from mongo_olap_spark.cube.build import _measure_aggs
+        from mongo_olap_spark.cube.measures import PARTIALS, build_aggs, storage
 
         spec = self.get_spec(name)
         if self.lattice_levels(name) is not None:
@@ -511,7 +509,7 @@ class CubeCatalog(TableFormatAdapter):
                 if spec.filter_sql:
                     df = df.filter(spec.filter_sql)
                 dims = [d.expr() for d in spec.dimensions]
-                aggs = [a for m in add for a in _measure_aggs(m)]
+                aggs = [a for m in add for a in build_aggs(m)]
                 backfill = df.groupBy(*dims).agg(*aggs)
                 bf_cols = [c for m in add for c in m.storage_cols()]
                 if spec.dimensions:
@@ -525,34 +523,18 @@ class CubeCatalog(TableFormatAdapter):
                         *[backfill[c] for c in bf_cols])
                 else:
                     new_cells = new_cells.crossJoin(backfill.select(*bf_cols))
+                # a join miss (group gone from the source) is an empty
+                # group for the new measures: build_cube's empty shape
+                # (count and topk mass 0, an empty topk map, sums NULL).
+                # A NULL mass would read as a pre-certificate legacy
+                # cell and make the serve refuse a fresh cube.
                 for m in add:
-                    for c in m.storage_cols():
-                        if c.endswith("_cnt"):
-                            # a join miss (group gone from the source)
-                            # is an empty group for the new measure:
-                            # count 0, sums stay NULL — build_cube's
-                            # empty shape
-                            new_cells = new_cells.withColumn(
-                                c, F.coalesce(F.col(c),
-                                              F.lit(0).cast("long")))
-                        elif c.endswith("_tkn"):
-                            # topk mass: a join-miss group has ZERO
-                            # mass — NULL is reserved for "mass
-                            # unknown" (pre-certificate legacy cells)
-                            # and would make the serve refuse a
-                            # freshly-evolved cube as legacy
-                            new_cells = new_cells.withColumn(
-                                c, F.coalesce(F.col(c),
-                                              F.lit(0).cast("long")))
-                        elif c.endswith("_tk"):
-                            # topk map: empty map, matching the shape
-                            # build_cube emits for a group with no
-                            # non-null values
+                    for c, s in storage(m):
+                        empty = PARTIALS[s].empty
+                        if empty is not None:
                             dt = new_cells.schema[c].dataType
                             new_cells = new_cells.withColumn(
-                                c, F.coalesce(
-                                    F.col(c),
-                                    F.expr("map()").cast(dt)))
+                                c, F.coalesce(F.col(c), F.expr(empty).cast(dt)))
             try:
                 self._write_snapshot(new_spec, new_cells,
                                      extra={"evolved": True},

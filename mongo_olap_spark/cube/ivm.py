@@ -30,24 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube.build import build_cube, delta_cells  # noqa: F401 (re-export)
+from mongo_olap_spark.cube.measures import PARTIALS, row_count_col, storage
 from mongo_olap_spark.cube.spec import CubeSpec
-from mongo_olap_spark.functions.expressions import SUM_DECIMAL
-
-
-def row_count_col(spec: CubeSpec) -> str:
-    """The storage column tracking cell row multiplicity (used to drop
-    empty cells after retraction): a count measure if present, else an
-    avg's count partial."""
-    for m in spec.measures:
-        if m.op == "count":
-            return f"{m.name}_cnt"
-    for m in spec.measures:
-        if m.op == "avg":
-            return f"{m.name}_cnt"
-    raise ValueError(
-        f"cube {spec.name}: retraction needs a count or avg measure to "
-        "track cell multiplicity; add a count measure"
-    )
 
 
 def merge_cells(
@@ -60,8 +44,10 @@ def merge_cells(
     """Merge signed cell deltas into the current cell table.
 
     Pure DataFrame plan: full-outer join on the dimension tuple
-    (null-safe — dimensions may legitimately be null), partial
-    addition, empty-cell eviction. This is the ``MERGE INTO`` of §4.3
+    (null-safe — dimensions may legitimately be null), each partial's
+    pairwise merge (signed addition for the retractable ones), eviction
+    of cells whose row count (``row_count_col``: a count measure, and
+    only a count) reaches 0. This is the ``MERGE INTO`` of §4.3
     expressed without a transactional table format; swap in Delta's
     MERGE at deployment for in-place upsert.
 
@@ -89,68 +75,9 @@ def merge_cells(
         joined = c.crossJoin(d)
 
     out = [F.coalesce(F.col(f"c.{k}"), F.col(f"d.{k}")).alias(k) for k in dims]
-    dec0 = F.lit(0).cast(SUM_DECIMAL)
     for m in spec.measures:
-        for col in m.storage_cols():
-            cc, dc = F.col(f"c.{col}"), F.col(f"d.{col}")
-            if col.endswith("_sum") or col.endswith("_sum2"):
-                out.append((F.coalesce(cc, dec0) + F.coalesce(dc, dec0)).cast(SUM_DECIMAL).alias(col))
-            elif col.endswith("_cnt"):
-                out.append((F.coalesce(cc, F.lit(0)) + F.coalesce(dc, F.lit(0))).cast("long").alias(col))
-            elif col.endswith("_min"):
-                out.append(F.least(cc, dc).alias(col))  # least/greatest skip nulls
-            elif col.endswith("_max"):
-                out.append(F.greatest(cc, dc).alias(col))
-            elif col.endswith("_hist"):
-                # signed element-wise addition — exact retraction: a
-                # delete's −1 bins cancel the insert's +1 bins, so
-                # incremental apply is bit-identical to rebuild in any
-                # batch order (integer vector addition is associative
-                # and commutative)
-                out.append(
-                    F.when(cc.isNull(), dc)
-                    .when(dc.isNull(), cc)
-                    .otherwise(F.zip_with(cc, dc, lambda x, y: x + y))
-                    .alias(col)
-                )
-            elif col.endswith("_tkn"):
-                # topk mass partial: signed long addition — but a side
-                # whose ROW is present (its {m}_tk map is non-null)
-                # with a NULL mass is a LEGACY cell ("mass unknown",
-                # upgrade_legacy_cells); propagate NULL so the merged
-                # cube stays uncertifiable instead of minting a
-                # definite-looking undercount. A side absent from the
-                # full-outer join (map NULL too) contributes 0.
-                tk_c, tk_d = F.col(f"c.{col[:-1]}"), F.col(f"d.{col[:-1]}")
-                cm = F.when(tk_c.isNotNull() & cc.isNull(),
-                            F.lit(None).cast("long")
-                            ).otherwise(F.coalesce(cc, F.lit(0)))
-                dm = F.when(tk_d.isNotNull() & dc.isNull(),
-                            F.lit(None).cast("long")
-                            ).otherwise(F.coalesce(dc, F.lit(0)))
-                out.append((cm + dm).cast("long").alias(col))
-            elif col.endswith("_tk"):
-                # mergeable-summary union: per-item count sum, truncate
-                # back to capacity (deterministic tie-break). Insert
-                # deltas only — a delete touching a topk cube goes
-                # through recompute_cells (spec._OPS: not retractable).
-                from mongo_olap_spark.cube.query import topk_merge_expr
-
-                out.append(
-                    F.when(cc.isNull(), dc)
-                    .when(dc.isNull(), cc)
-                    .otherwise(topk_merge_expr(cc, dc, m.capacity))
-                    .alias(col)
-                )
-            elif col.endswith("_hll"):
-                # hll_union propagates NULL if either side is NULL
-                # (verified), so coalesce the one-sided cases by hand.
-                out.append(
-                    F.when(cc.isNull(), dc)
-                    .when(dc.isNull(), cc)
-                    .otherwise(F.hll_union(cc, dc))
-                    .alias(col)
-                )
+        for col, suffix in storage(m):
+            out.append(PARTIALS[suffix].merge(f"c.{col}", f"d.{col}", m).alias(col))
     merged = joined.select(*out)
     return merged.filter(F.col(row_count_col(spec)) > 0)
 

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube.build import cell_aggs
-from mongo_olap_spark.cube.query import measure_rollup_exprs
+from mongo_olap_spark.cube.measures import cell_expr
+from mongo_olap_spark.cube.query import measure_asks, measure_rollup_exprs
 from mongo_olap_spark.cube.spec import CubeSpec
 
 LEVEL_COL = "__level"
@@ -89,45 +90,6 @@ def delta_cells_lattice(
     )
 
 
-def finalize_exprs(spec: CubeSpec, measures: list[str] | None = None):
-    """Row-wise measure finalization for rows that already are one
-    group each (an exact lattice-level hit): no aggregation needed."""
-    out = []
-    for m in spec.measures if measures is None else [spec.measure(x) for x in measures]:
-        n = m.name
-        if m.op == "count":
-            out.append(F.col(f"{n}_cnt").cast("long").alias(n))
-        elif m.op == "sum":
-            out.append(F.col(f"{n}_sum").cast("double").alias(n))
-        elif m.op == "avg":
-            out.append((F.col(f"{n}_sum").cast("double") / F.col(f"{n}_cnt")).alias(n))
-        elif m.op == "min":
-            out.append(F.col(f"{n}_min").alias(n))
-        elif m.op == "max":
-            out.append(F.col(f"{n}_max").alias(n))
-        elif m.op == "distinct":
-            out.append(F.hll_sketch_estimate(F.col(f"{n}_hll")).alias(n))
-        elif m.op == "quantile":
-            from mongo_olap_spark.cube.query import hist_quantile_expr
-
-            out.append(
-                hist_quantile_expr(F.col(f"{n}_hist"), m.default_q, m).alias(n)
-            )
-        elif m.op == "topk":
-            from mongo_olap_spark.cube.query import topk_entries_expr
-
-            out.append(topk_entries_expr(F.col(f"{n}_tk"), m.default_k).alias(n))
-        elif m.op in ("var_pop", "var_samp", "stddev_pop", "stddev_samp"):
-            from mongo_olap_spark.cube.query import dispersion_expr
-
-            out.append(
-                dispersion_expr(
-                    m.op, F.col(f"{n}_sum"), F.col(f"{n}_sum2"), F.col(f"{n}_cnt")
-                ).alias(n)
-            )
-    return out
-
-
 def materialized_levels(cells: DataFrame) -> list[int]:
     return [r[LEVEL_COL] for r in cells.select(LEVEL_COL).distinct().collect()]
 
@@ -152,7 +114,8 @@ def query_lattice(
         hit = df.filter(F.col(LEVEL_COL) == target)
         # each row IS one output group: finalize partials row-wise,
         # no aggregation (and hence no shuffle) at query time
-        return hit.select(*group_by, *finalize_exprs(spec, measures))
+        return hit.select(*group_by, *[cell_expr(m, op).alias(out)
+                                       for out, m, op in measure_asks(spec, measures)])
     # fall back: the finest superset level (fewest dims aggregated away
     # = smallest mask) whose kept-dims ⊇ group_by
     supersets = [

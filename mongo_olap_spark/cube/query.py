@@ -2,12 +2,11 @@
 
 The reference answers ``{cube, groupBy ⊆ dims, filters on dims,
 measures}`` from the materialized cells instead of the raw collection.
-Cells store decomposed partials, so second-level aggregation is:
+Cells store decomposed partials, so second-level aggregation is each
+measure's finalize over its partials' merge aggregates (the
+measure-family table, cube/measures.py), e.g.
 
-    sum  → SUM(partial_sum)
-    count→ SUM(partial_cnt)
     avg  → SUM(partial_sum) / SUM(partial_cnt)   (derived, never stored)
-    min  → MIN(partial_min) ; max → MAX(partial_max)
 
 Because sums are exact DECIMAL partials, a rollup is *bit-identical*
 to direct aggregation of the source — the pre-aggregation is invisible
@@ -23,6 +22,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo_olap_spark.cube.measures import (
+    DISPERSION_OPS,
+    hist_quantile_expr,
+    hist_sum_expr,
+    rollup_aggs,
+    rollup_expr,
+    row_count_col,
+    storage,
+)
 from mongo_olap_spark.cube.spec import CubeSpec, Measure
 
 #: unique token prefixing every in-plan topk exactness-certificate
@@ -34,243 +42,52 @@ from mongo_olap_spark.cube.spec import CubeSpec, Measure
 TOPK_CERT_SENTINEL = "[TOPK-CERT-E417]"
 
 
-def hist_sum_expr(col: str, nbins: int) -> Column:
-    """Roll histogram cells up to a group: element-wise sum of the
-    bin vectors, expressed as nbins + 2 plain ``sum(element_at(...))``
-    aggregates wrapped back into an array — JVM-side, map-side
-    combined, O(groups · nbins) state, never a source rescan. One
-    ``F.expr`` string, not per-bin Column calls (py4j plan-time cost —
-    see build._hist_agg)."""
-    elems = ", ".join(
-        f"coalesce(sum(element_at(`{col}`, {i + 1})), 0L)" for i in range(nbins + 2)
-    )
-    return F.expr(f"array({elems})")
-
-
-def hist_quantile_expr(hist: Column, q: float, m: Measure) -> Column:
-    """Quantile estimate from a (rolled-up) histogram vector.
-
-    Deterministic inverse-CDF with linear interpolation inside the
-    target bin: find the first bin whose cumulative count reaches
-    ``q · total`` (skipping empty bins), interpolate by the overshoot
-    fraction. Underflow/overflow mass clamps to lo/hi — the sketch
-    cannot resolve inside unbounded tails. NULL when the histogram is
-    empty. Pure expression tree (aggregate/transform HOFs over a
-    ~nbins-long array) — no UDF, O(nbins²) scalar ops per output row.
-    """
-    lo, hi, nb = float(m.lo), float(m.hi), int(m.nbins)
-    if not (0.0 < q <= 1.0):
-        raise ValueError(f"quantile q must be in (0, 1], got {q}")
-    w = (hi - lo) / nb
-    zero = F.lit(0).cast("long")
-    total = F.aggregate(hist, zero, lambda a, x: a + x)
-    target = F.lit(float(q)) * total.cast("double")
-    # cums[i+1] = count of the first i bins (leading 0 ⇒ 1-based prev)
-    cums = F.aggregate(
-        hist,
-        F.array(zero),
-        lambda acc, x: F.concat(acc, F.array(F.element_at(acc, -1) + x)),
-    )
-    # first 1-based bin index whose cumulative reaches the target rank
-    # and that actually holds mass (empty bins cannot contain the
-    # quantile; minimality ⇒ prev cumulative < target, so frac ∈ (0, 1])
-    flags = F.transform(
-        F.sequence(F.lit(1), F.lit(nb + 2)),
-        lambda i: (F.element_at(cums, (i + 1).cast("int")).cast("double") >= target)
-        & (F.element_at(hist, i.cast("int")) > 0),
-    )
-    i = F.array_position(flags, F.lit(True))
-    prev = F.element_at(cums, i.cast("int")).cast("double")
-    cnt = F.element_at(hist, i.cast("int")).cast("double")
-    left = F.lit(lo) + (i.cast("double") - 2.0) * F.lit(w)
-    frac = F.greatest(F.lit(0.0), F.least(F.lit(1.0), (target - prev) / cnt))
-    return (
-        F.when(total <= 0, F.lit(None).cast("double"))
-        .when(i == 0, F.lit(None).cast("double"))
-        .when(i == 1, F.lit(lo))  # underflow mass → range edge
-        .when(i == nb + 2, F.lit(hi))  # overflow mass → range edge
-        .otherwise(left + F.lit(w) * frac)
-    )
-
-
-def topk_truncate_expr(m: Column, max_items: int) -> Column:
-    """Cap a frequent-items map at ``max_items`` entries, evicting the
-    smallest counts (ties broken by item asc — deterministic, so
-    truncation is reproducible across merge orders). No-op (and no
-    sort) when the map is already within capacity."""
-    ent = F.array_sort(
-        F.map_entries(m),
-        lambda a, b: F.when(a["value"] > b["value"], -1)
-        .when(a["value"] < b["value"], 1)
-        .when(a["key"] < b["key"], -1)
-        .when(a["key"] > b["key"], 1)
-        .otherwise(0)
-        .cast("int"),
-    )
-    return F.when(
-        F.size(m) > max_items, F.map_from_entries(F.slice(ent, 1, max_items))
-    ).otherwise(m)
-
-
-def topk_merge_expr(a: Column, b: Column, max_items: int) -> Column:
-    """Scalar merge of two frequent-items maps: per-item count sum
-    (``map_zip_with`` — JVM-side, no UDF), then truncate back to
-    capacity. This is the mergeable-summaries union (Agarwal et al.,
-    PODS'12): associative up to truncation, exact while the union
-    cardinality stays ≤ max_items."""
-    zero = F.lit(0).cast("long")
-    merged = F.map_zip_with(
-        a, b, lambda k, x, y: F.coalesce(x, zero) + F.coalesce(y, zero)
-    )
-    return topk_truncate_expr(merged, max_items)
-
-
-def topk_union_agg(col: str, max_items: int) -> Column:
-    """Roll frequent-items cells up to a group: fold the per-cell maps
-    with :func:`topk_merge_expr`. Expressed as ``collect_list`` (a
-    partial-mergeable aggregate) + an ``aggregate`` HOF fold — all
-    JVM-side. Per-group transient state is O(cells_in_group ·
-    max_items) entries; for rollups where that product is large,
-    prefer the exact two-level route (:func:`topk_rollup`), which
-    streams through a window instead of folding per group."""
-    lst = F.collect_list(col)
-    merged = F.aggregate(
-        F.slice(lst, F.lit(2), F.greatest(F.size(lst) - 1, F.lit(0))),
-        F.element_at(lst, 1),
-        lambda acc, mm: topk_merge_expr(acc, mm, max_items),
-    )
-    # collect_list skips NULL maps; an all-empty group folds to {}.
-    # size(lst) == 0 (no cells at all) yields NULL — callers coalesce.
-    return F.when(F.size(lst) == 0, F.lit(None)).otherwise(merged)
-
-
-def topk_entries_expr(m_col: Column, k: int) -> Column:
-    """Top-k entries of a frequent-items map as an ordered
-    ``array<struct<item, count>>`` (count desc, item asc — the same
-    deterministic order truncation uses)."""
-    ent = F.array_sort(
-        F.map_entries(m_col),
-        lambda a, b: F.when(a["value"] > b["value"], -1)
-        .when(a["value"] < b["value"], 1)
-        .when(a["key"] < b["key"], -1)
-        .when(a["key"] > b["key"], 1)
-        .otherwise(0)
-        .cast("int"),
-    )
-    return F.transform(
-        F.slice(ent, 1, k),
-        lambda e: F.struct(e["key"].alias("item"), e["value"].alias("count")),
-    )
-
-
-_DISPERSION_OPS = ("var_pop", "var_samp", "stddev_pop", "stddev_samp")
-
-
-def dispersion_expr(op: str, s: Column, s2: Column, cnt: Column) -> Column:
-    """Variance/stddev derived from (Σx, Σx², n) partials — the
-    single-pass E[x²] − mean² form, clamped at 0 against floating
-    cancellation. ``s``/``s2`` are DECIMAL partials (already summed for
-    a rollup, or row-wise for a lattice finalize); every float step is
-    a fixed IEEE expression, so an oracle mirroring the same formula
-    over the same exact partials is bit-identical. Sample forms divide
-    by n − 1 and are NULL for n < 2 (Mongo $stdDevSamp semantics); an
-    all-null group yields NULL naturally (empty SUM is NULL)."""
-    n = cnt.cast("double")
-    sd = s.cast("double")
-    s2d = s2.cast("double")
-    mean = sd / n
-    if op in ("var_pop", "stddev_pop"):
-        # the n >= 1 gate is explicit because greatest() SKIPS nulls —
-        # clamping an all-null group's NULL variance would turn it 0.0
-        v = F.when(cnt < 1, F.lit(None).cast("double")).otherwise(
-            F.greatest(s2d / n - mean * mean, F.lit(0.0))
-        )
-    else:
-        v = F.when(cnt < 2, F.lit(None).cast("double")).otherwise(
-            F.greatest((s2d - n * (mean * mean)) / (n - F.lit(1.0)), F.lit(0.0))
-        )
-    return F.sqrt(v) if op.startswith("stddev") else v
-
-
-def dispersion_sql(op: str, name: str, *, rollup: bool = True) -> str:
-    """The ANSI twin of :func:`dispersion_expr` over the same storage
-    columns — mirrored operation-for-operation so DuckDB reproduces
-    the exact IEEE result (used by oracle queries and tests)."""
-    wrap = (lambda c: f"SUM({c})") if rollup else (lambda c: c)
-    s = f"CAST({wrap(f'{name}_sum')} AS DOUBLE)"
-    s2 = f"CAST({wrap(f'{name}_sum2')} AS DOUBLE)"
-    n = f"CAST({wrap(f'{name}_cnt')} AS DOUBLE)"
-    mean = f"({s} / {n})"
-    if op in ("var_pop", "stddev_pop"):
-        v = (
-            f"CASE WHEN {n} < 1 THEN NULL ELSE "
-            f"greatest({s2} / {n} - {mean} * {mean}, 0.0) END"
-        )
-    else:
-        v = (
-            f"CASE WHEN {n} < 2 THEN NULL ELSE "
-            f"greatest(({s2} - {n} * ({mean} * {mean})) / ({n} - 1.0), 0.0) END"
-        )
-    return f"sqrt({v})" if op.startswith("stddev") else v
-
-
-def measure_rollup_exprs(
-    spec: CubeSpec, measures: list[str] | None = None
-) -> list[Column]:
-    """Second-level aggregate expressions over cell partials.
-
-    Output column names are the measure names (``avg`` measures emit
-    ``<name>`` as the derived double).
-    """
-    out: list[Column] = []
-    for m in spec.measures if measures is None else [spec.measure(x) for x in measures]:
-        n = m.name
-        if m.op == "count":
-            out.append(F.sum(f"{n}_cnt").cast("long").alias(n))
-        elif m.op == "sum":
-            out.append(F.sum(f"{n}_sum").cast("double").alias(n))
-        elif m.op == "avg":
-            out.append(
-                (F.sum(f"{n}_sum").cast("double") / F.sum(f"{n}_cnt")).alias(n)
-            )
-        elif m.op == "min":
-            out.append(F.min(f"{n}_min").alias(n))
-        elif m.op == "max":
-            out.append(F.max(f"{n}_max").alias(n))
-        elif m.op == "distinct":
-            # union the cell sketches, estimate once per rollup group —
-            # O(groups) KB-sized register merges, never a source rescan
-            out.append(F.hll_sketch_estimate(F.hll_union_agg(f"{n}_hll")).alias(n))
-        elif m.op == "quantile":
-            # element-wise-sum the cell bin vectors, estimate once per
-            # rollup group at the measure's declared quantile
-            out.append(
-                hist_quantile_expr(
-                    hist_sum_expr(f"{n}_hist", int(m.nbins)), m.default_q, m
-                ).alias(n)
-            )
-        elif m.op == "topk":
-            # fold the cell maps, emit the measure's default top-k as
-            # ordered (item, count) structs. NOTE: the fold truncates
-            # to capacity at every merge step, so it is exact only
-            # while the UNION cardinality stays <= max_items;
-            # query_cube serves topk through the explode route instead
-            # (exact whenever the CELLS are exact — the r14 sf10 gate
-            # caught a wide rollup silently leaving the exact regime
-            # here). This expression remains for partial regrouping
-            # (cell-shaped outputs must stay bounded maps).
-            out.append(
-                topk_entries_expr(
-                    topk_union_agg(f"{n}_tk", m.capacity), m.default_k
-                ).alias(n)
-            )
-        elif m.op in _DISPERSION_OPS:
-            out.append(
-                dispersion_expr(
-                    m.op, F.sum(f"{n}_sum"), F.sum(f"{n}_sum2"), F.sum(f"{n}_cnt")
-                ).alias(n)
-            )
+def measure_asks(spec: CubeSpec, measures: list | None) -> list[tuple[str, Measure, str]]:
+    """``(output name, stored measure, op)`` per requested measure. A
+    name asks for a stored measure as itself; an ``(output, stored,
+    op)`` triple asks a stored measure for another op its family
+    serves (a stored ``var_pop`` answering ``stddev_samp``)."""
+    if measures is None:
+        return [(m.name, m, m.op) for m in spec.measures]
+    out = []
+    for x in measures:
+        if isinstance(x, str):
+            m = spec.measure(x)
+            out.append((x, m, m.op))
+        else:
+            name, stored, op = x
+            out.append((name, spec.measure(stored), op))
     return out
+
+
+def _rollups(asks: list[tuple[str, Measure, str]]) -> list[Column]:
+    return [rollup_expr(m, op).alias(out) for out, m, op in asks]
+
+
+def measure_rollup_exprs(spec: CubeSpec, measures: list | None = None) -> list[Column]:
+    """Second-level aggregate expressions over cell partials: each
+    measure's finalize over its partials' merge aggregates, named by
+    the requested output (see :func:`measure_asks`)."""
+    return _rollups(measure_asks(spec, measures))
+
+
+def _slice(cells: DataFrame, spec: CubeSpec, group_by: list[str] | None,
+           where: Column | str | None, **value_dims: str) -> tuple[DataFrame, list[str]]:
+    """Check ``group_by`` ⊆ the cube's dims (None = all of them) and
+    each named value dim (a dim, not grouped); return the cells
+    filtered by ``where`` (dimension columns only) and the group_by."""
+    dims = spec.dim_names
+    group_by = dims if group_by is None else group_by
+    for what, c in value_dims.items():
+        if c not in dims:
+            raise ValueError(f"{what} {c!r} not a cube dimension")
+    unknown = set(group_by) - set(dims)
+    if unknown:
+        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
+    for what, c in value_dims.items():
+        if c in group_by:
+            raise ValueError(f"{what} {c!r} cannot also be grouped")
+    return (cells if where is None else cells.filter(where)), group_by
 
 
 def upgrade_legacy_cells(cells: DataFrame, spec: CubeSpec) -> DataFrame:
@@ -291,9 +108,8 @@ def upgrade_legacy_cells(cells: DataFrame, spec: CubeSpec) -> DataFrame:
     missing = [
         c
         for m in spec.measures
-        if m.op == "topk"
-        for c in m.storage_cols()
-        if c.endswith("_tkn") and c not in cells.columns
+        for c, s in storage(m)
+        if s == "_tkn" and c not in cells.columns
     ]
     for c in missing:
         cells = cells.withColumn(c, F.lit(None).cast("long"))
@@ -314,6 +130,8 @@ def query_cube(
     may reference dimension columns only (it filters *cells*). When
     ``group_by`` is None, all dims are kept (pure slice — still
     re-aggregated so the output carries measure columns, not partials).
+    ``measures`` holds names or ``(output, stored, op)`` triples (see
+    :func:`measure_asks`); None asks for every measure.
 
     ``topk`` (frequent-items map) measures are served through the
     explode route — maps explode to postings, a hash aggregate sums
@@ -346,29 +164,22 @@ def query_cube(
     if on_inexact not in ("error", "sketch"):
         raise ValueError(
             f"on_inexact must be 'error' or 'sketch', got {on_inexact!r}")
-    dims = spec.dim_names
-    group_by = dims if group_by is None else group_by
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
-    df = upgrade_legacy_cells(cells, spec)
-    if where is not None:
-        df = df.filter(where)
-    req = spec.measures if measures is None else [spec.measure(x) for x in measures]
-    topks = [m for m in req if m.op == "topk"]
+    df, group_by = _slice(upgrade_legacy_cells(cells, spec), spec, group_by, where)
+    asks = measure_asks(spec, measures)
+    topks = [(out, m) for out, m, _ in asks if m.op == "topk"]
     if not topks:
-        return df.groupBy(*group_by).agg(*measure_rollup_exprs(spec, measures))
+        return df.groupBy(*group_by).agg(*_rollups(asks))
 
     from pyspark.sql import Window
 
-    others = [m.name for m in req if m.op != "topk"]
+    others = [a for a in asks if a[1].op != "topk"]
     if others:
-        base = df.groupBy(*group_by).agg(*measure_rollup_exprs(spec, others))
+        base = df.groupBy(*group_by).agg(*_rollups(others))
     else:
         # still one row per group: aggregate a throwaway count
         base = df.groupBy(*group_by).agg(F.count(F.lit(1)).alias("__g")) \
                  .drop("__g")
-    for m in topks:
+    for out, m in topks:
         col = f"{m.name}_tk"
         posts = df.select(*group_by, F.explode(col).alias("__i", "__c"))
         counted = posts.groupBy(*group_by, "__i").agg(
@@ -386,7 +197,7 @@ def query_cube(
                              F.col("__cnt").alias("count")))),
                 lambda e: F.struct(e["item"].alias("item"),
                                    e["count"].alias("count")),
-            ).alias(m.name))
+            ).alias(out))
         if group_by:
             base = base.join(arr, list(group_by), "left")
         else:
@@ -394,16 +205,16 @@ def query_cube(
         # a group whose maps were all empty has no postings: surface
         # the same empty array the fold route emitted, not NULL
         base = base.withColumn(
-            m.name,
-            F.coalesce(F.col(m.name),
-                       F.array().cast(arr.schema[m.name].dataType)))
+            out,
+            F.coalesce(F.col(out),
+                       F.array().cast(arr.schema[out].dataType)))
         if on_inexact == "error":
             # mass conservation: the merged map's Σcounts must equal
             # the cells' true row mass, or the sketch purged somewhere
             # (exact-regime exit). Guard rides the measure column so
             # column pruning can never drop it.
             got = counted.groupBy(*group_by).agg(
-                F.sum("__cnt").cast("long").alias(f"__got_{m.name}"))
+                F.sum("__cnt").cast("long").alias(f"__got_{out}"))
             # __leg counts cells with a MAP but no mass — legacy
             # snapshots written before the r15 mass column
             # (upgrade_legacy_cells synthesizes NULL = "mass
@@ -418,21 +229,21 @@ def query_cube(
             mass = F.col(f"{m.name}_tkn")
             tk_cell = F.col(f"{m.name}_tk")
             want = df.groupBy(*group_by).agg(
-                F.sum(mass).cast("long").alias(f"__want_{m.name}"),
+                F.sum(mass).cast("long").alias(f"__want_{out}"),
                 F.sum(F.when(tk_cell.isNotNull() & mass.isNull(), 1)
                       .otherwise(0))
-                .cast("long").alias(f"__leg_{m.name}"))
+                .cast("long").alias(f"__leg_{out}"))
             if group_by:
                 base = (base.join(got, list(group_by), "left")
                         .join(want, list(group_by), "left"))
             else:
                 base = base.crossJoin(got).crossJoin(want)
-            legacy = (F.coalesce(F.col(f"__leg_{m.name}"), F.lit(0))
+            legacy = (F.coalesce(F.col(f"__leg_{out}"), F.lit(0))
                       > F.lit(0))
-            mismatch = (F.coalesce(F.col(f"__got_{m.name}"), F.lit(0))
-                        != F.coalesce(F.col(f"__want_{m.name}"), F.lit(0)))
+            mismatch = (F.coalesce(F.col(f"__got_{out}"), F.lit(0))
+                        != F.coalesce(F.col(f"__want_{out}"), F.lit(0)))
             base = base.withColumn(
-                m.name,
+                out,
                 F.when(legacy, F.raise_error(F.lit(
                     f"{TOPK_CERT_SENTINEL} topk measure {m.name!r}: "
                     f"cells written before "
@@ -445,9 +256,9 @@ def query_cube(
                     F.lit(f"{TOPK_CERT_SENTINEL} topk measure "
                           f"{m.name!r}: frequent-items "
                           f"map lost mass ("),
-                    F.coalesce(F.col(f"__got_{m.name}"), F.lit(0)),
+                    F.coalesce(F.col(f"__got_{out}"), F.lit(0)),
                     F.lit(" of "),
-                    F.coalesce(F.col(f"__want_{m.name}"), F.lit(0)),
+                    F.coalesce(F.col(f"__want_{out}"), F.lit(0)),
                     F.lit(f" rows) — a cell's cardinality exceeded "
                           f"max_items={m.capacity} and approx_top_k "
                           f"purged (it can return EMPTY, not merely "
@@ -455,10 +266,9 @@ def query_cube(
                           f"the exact two-level topk_rollup cube, or "
                           f"pass on_inexact='sketch' for the "
                           f"bounded-error serve."))))
-                .otherwise(F.col(m.name)))
-            base = base.drop(f"__got_{m.name}", f"__want_{m.name}",
-                             f"__leg_{m.name}")
-    return base.select(*group_by, *[m.name for m in req])
+                .otherwise(F.col(out)))
+            base = base.drop(f"__got_{out}", f"__want_{out}", f"__leg_{out}")
+    return base.select(*group_by, *[out for out, _, _ in asks])
 
 
 def distinct_rollup(
@@ -487,17 +297,8 @@ def distinct_rollup(
     cells are already one-per-(group, value), so ``count(*)`` needs no
     distinct aggregation and no Expand.
     """
+    df, group_by = _slice(cells, spec, group_by, where, distinct_dim=distinct_dim)
     dims = spec.dim_names
-    if distinct_dim not in dims:
-        raise ValueError(f"distinct_dim {distinct_dim!r} not a cube dimension")
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
-    if distinct_dim in group_by:
-        raise ValueError(f"distinct_dim {distinct_dim!r} cannot also be grouped")
-    df = cells
-    if where is not None:
-        df = df.filter(where)
     out = alias or f"{distinct_dim}_distinct"
     # NULL never counts toward COUNT(DISTINCT col) in SQL/Mongo alike
     if set(group_by) | {distinct_dim} == set(dims):
@@ -532,18 +333,11 @@ def quantile_estimates(
     m = spec.measure(measure)
     if m.op != "quantile":
         raise ValueError(f"measure {measure!r} is not a quantile (histogram) measure")
-    dims = spec.dim_names
-    group_by = dims if group_by is None else group_by
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
+    df, group_by = _slice(cells, spec, group_by, where)
     if aliases is None:
         aliases = [f"{m.name}_q{str(q).replace('.', '_')}" for q in qs]
     if len(aliases) != len(qs):
         raise ValueError("aliases must match qs")
-    df = cells
-    if where is not None:
-        df = df.filter(where)
     rolled = df.groupBy(*group_by).agg(
         hist_sum_expr(f"{m.name}_hist", int(m.nbins)).alias("__h")
     )
@@ -592,8 +386,6 @@ def quantile_rollup(
     """
     from pyspark.sql import Window
 
-    from mongo_olap_spark.cube.ivm import row_count_col
-
     qs = list(q) if isinstance(q, (list, tuple)) else None
     if qs is not None:
         if not qs:
@@ -603,22 +395,13 @@ def quantile_rollup(
                 raise ValueError(f"quantile q must be in (0, 1], got {x}")
     elif not (0.0 < q <= 1.0):
         raise ValueError(f"quantile q must be in (0, 1], got {q}")
+    df, group_by = _slice(cells, spec, group_by, where, value_dim=value_dim)
     dims = spec.dim_names
-    if value_dim not in dims:
-        raise ValueError(f"value_dim {value_dim!r} not a cube dimension")
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
-    if value_dim in group_by:
-        raise ValueError(f"value_dim {value_dim!r} cannot also be grouped")
     if set(group_by) | {value_dim} != set(dims):
         raise ValueError(
             "exact quantile needs cells keyed exactly by group_by + value_dim "
             f"(extra dims would double-count multiplicities): cube has {dims}"
         )
-    df = cells
-    if where is not None:
-        df = df.filter(where)
     cnt = row_count_col(spec)
     df = df.filter(F.col(value_dim).isNotNull())
     wcum = Window.partitionBy(*group_by).orderBy(value_dim)
@@ -678,32 +461,19 @@ def dispersion_estimates(
     every form at query time. One shuffle; other measures roll up in
     the SAME aggregate."""
     m = spec.measure(measure)
-    if m.op not in _DISPERSION_OPS:
+    if m.op not in DISPERSION_OPS:
         raise ValueError(f"measure {measure!r} is not a dispersion measure")
-    bad = [o for o in ops if o not in _DISPERSION_OPS]
+    bad = [o for o in ops if o not in DISPERSION_OPS]
     if bad:
         raise ValueError(f"unknown dispersion ops: {bad}")
-    dims = spec.dim_names
-    group_by = dims if group_by is None else group_by
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
+    df, group_by = _slice(cells, spec, group_by, where)
     if aliases is None:
         aliases = [f"{m.name}_{o}" for o in ops]
     if len(aliases) != len(ops):
         raise ValueError("aliases must match ops")
-    df = cells
-    if where is not None:
-        df = df.filter(where)
-    n = m.name
     extra = measure_rollup_exprs(spec, measures) if measures else []
     return df.groupBy(*group_by).agg(
-        *[
-            dispersion_expr(
-                o, F.sum(f"{n}_sum"), F.sum(f"{n}_sum2"), F.sum(f"{n}_cnt")
-            ).alias(a)
-            for o, a in zip(ops, aliases)
-        ],
+        *[rollup_expr(m, o).alias(a) for o, a in zip(ops, aliases)],
         *extra,
     )
 
@@ -744,14 +514,7 @@ def topk_estimates(
     k = m.default_k if k is None else int(k)
     if k < 1:
         raise ValueError(f"top-k needs k >= 1, got {k}")
-    dims = spec.dim_names
-    group_by = dims if group_by is None else group_by
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
-    df = cells
-    if where is not None:
-        df = df.filter(where)
+    df, group_by = _slice(cells, spec, group_by, where)
     out = alias or f"{m.name}_item"
     posts = df.select(
         *group_by, F.explode(f"{m.name}_tk").alias(out, "__c")
@@ -807,21 +570,10 @@ def topk_rollup(
     """
     from pyspark.sql import Window
 
-    from mongo_olap_spark.cube.ivm import row_count_col
-
     if int(k) < 1:
         raise ValueError(f"top-k needs k >= 1, got {k}")
+    df, group_by = _slice(cells, spec, group_by, where, value_dim=value_dim)
     dims = spec.dim_names
-    if value_dim not in dims:
-        raise ValueError(f"value_dim {value_dim!r} not a cube dimension")
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
-    if value_dim in group_by:
-        raise ValueError(f"value_dim {value_dim!r} cannot also be grouped")
-    df = cells
-    if where is not None:
-        df = df.filter(where)
     df = df.filter(F.col(value_dim).isNotNull())
     cnt = row_count_col(spec)
     out_v = alias or value_dim
@@ -879,21 +631,10 @@ def extremes_rollup(
     """
     from pyspark.sql import Window
 
-    from mongo_olap_spark.cube.ivm import row_count_col
-
     if int(k) < 1:
         raise ValueError(f"extremes need k >= 1, got {k}")
+    df, group_by = _slice(cells, spec, group_by, where, value_dim=value_dim)
     dims = spec.dim_names
-    if value_dim not in dims:
-        raise ValueError(f"value_dim {value_dim!r} not a cube dimension")
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
-    if value_dim in group_by:
-        raise ValueError(f"value_dim {value_dim!r} cannot also be grouped")
-    df = cells
-    if where is not None:
-        df = df.filter(where)
     df = df.filter(F.col(value_dim).isNotNull())
     cnt = row_count_col(spec)
     out = alias or (f"{value_dim}_max{k}" if largest else f"{value_dim}_min{k}")
@@ -981,24 +722,13 @@ def top_by_rollup(
     """
     from pyspark.sql import Window
 
-    from mongo_olap_spark.cube.ivm import row_count_col
-
     if int(k) < 1:
         raise ValueError(f"top_by needs k >= 1, got {k}")
+    df, group_by = _slice(cells, spec, group_by, where,
+                          sort_dim=sort_dim, payload_dim=payload_dim)
     dims = spec.dim_names
-    for c, what in ((sort_dim, "sort_dim"), (payload_dim, "payload_dim")):
-        if c not in dims:
-            raise ValueError(f"{what} {c!r} not a cube dimension")
-        if c in group_by:
-            raise ValueError(f"{what} {c!r} cannot also be grouped")
     if sort_dim == payload_dim:
         raise ValueError("sort_dim and payload_dim must differ (use extremes_rollup)")
-    unknown = set(group_by) - set(dims)
-    if unknown:
-        raise ValueError(f"group_by not in cube dims: {sorted(unknown)}")
-    df = cells
-    if where is not None:
-        df = df.filter(where)
     df = df.filter(F.col(sort_dim).isNotNull())
     cnt = row_count_col(spec)
     out = alias or f"{payload_dim}_{'top' if largest else 'bottom'}{k}"
@@ -1091,43 +821,13 @@ def combine_cells(spec: CubeSpec, *frames: DataFrame) -> DataFrame:
     """
     if not frames:
         raise ValueError("combine_cells needs at least one frame")
-    cols = spec.dim_names + [c for m in spec.measures for c in m.storage_cols()]
-    up = [upgrade_legacy_cells(f, spec) for f in frames]
-    df = up[0].select(*cols)
+    cols = spec.cell_columns
+    up = [upgrade_legacy_cells(f, spec).select(*cols) for f in frames]
+    df = up[0]
     for f in up[1:]:
-        df = df.unionByName(f.select(*cols))
-    aggs: list[Column] = []
-    for m in spec.measures:
-        for col in m.storage_cols():
-            if col.endswith("_sum") or col.endswith("_sum2"):
-                aggs.append(F.sum(col).alias(col))
-            elif col.endswith("_cnt"):
-                aggs.append(F.sum(col).cast("long").alias(col))
-            elif col.endswith("_min"):
-                aggs.append(F.min(col).alias(col))
-            elif col.endswith("_max"):
-                aggs.append(F.max(col).alias(col))
-            elif col.endswith("_hll"):
-                aggs.append(F.hll_union_agg(col).alias(col))
-            elif col.endswith("_hist"):
-                aggs.append(hist_sum_expr(col, int(m.nbins)).alias(col))
-            elif col.endswith("_tkn"):
-                # a legacy cell (row present — non-null {m}_tk map —
-                # but NULL mass) poisons the group's mass to NULL
-                # ("unknown") instead of letting F.sum skip it and
-                # mint a definite-looking undercount
-                leg = F.when(F.col(col[:-1]).isNotNull()
-                             & F.col(col).isNull(), 1).otherwise(0)
-                aggs.append(
-                    F.when(F.sum(leg) > 0, F.lit(None).cast("long"))
-                    .otherwise(F.sum(col).cast("long")).alias(col))
-            elif col.endswith("_tk"):
-                # the fold truncates at each merge step; single-map
-                # groups are already within capacity by construction
-                aggs.append(topk_union_agg(col, m.capacity).alias(col))
-            else:
-                raise AssertionError(col)
-    return df.groupBy(*spec.dim_names).agg(*aggs)
+        df = df.unionByName(f)
+    return df.groupBy(*spec.dim_names).agg(
+        *[a for m in spec.measures for a in rollup_aggs(m)])
 
 
 def hybrid_query(
@@ -1158,7 +858,7 @@ def hybrid_query(
     from mongo_olap_spark.cube.build import build_cube
 
     tail_cells = build_cube(tail.sparkSession, spec, tail)
-    cols = spec.dim_names + [c for m in spec.measures for c in m.storage_cols()]
+    cols = spec.cell_columns
     combined = (upgrade_legacy_cells(cells, spec).select(*cols)
                 .unionByName(tail_cells.select(*cols)))
     return query_cube(combined, spec, group_by=group_by, measures=measures)

@@ -37,39 +37,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from mongo_olap_spark.cube.measures import FAMILIES
+
 _GRANULARITIES = ("year", "quarter", "month", "week", "day", "hour", "minute")
 
-#: measure ops and whether a delete (retraction) can be applied
-#: incrementally to the stored partial.
-_OPS = {
-    "count": True,
-    "sum": True,
-    "avg": True,  # stored as (sum, count) — both signed-mergeable
-    "min": False,
-    "max": False,
-    "distinct": False,  # HLL sketch — union-mergeable, not retractable
-    # fixed-bin histogram sketch: signed integer bins merge element-wise,
-    # so unlike min/max/distinct this sketch IS retractable — quantile
-    # estimates survive CDC deletes with no cell rescan.
-    "quantile": True,
-    # dispersion family (Mongo $stdDevPop/$stdDevSamp parity): stored as
-    # decomposed (Σx, Σx², count) exact DECIMAL partials — signed-
-    # mergeable like sum/avg, so fully retractable AND bit-stable under
-    # any re-partitioning or batch order. The variance itself is derived
-    # at query time (E[x²] − mean², clamped at 0) — never stored.
-    "var_pop": True,
-    "var_samp": True,
-    "stddev_pop": True,
-    "stddev_samp": True,
-    # bounded frequent-items map (top-k / heavy hitters): merging two
-    # summaries sums per-item counts then truncates back to max_items —
-    # the standard mergeable-summary scheme (Agarwal et al., "Mergeable
-    # Summaries", PODS'12). Truncation discards evicted items' history,
-    # so deletes are not retractable (same repair policy as min/max/HLL:
-    # bounded cell rescan). EXACT whenever per-cell cardinality stays
-    # under max_items (no eviction ever happens).
-    "topk": False,
-}
+#: op parameters of a Measure; each is valid for one op only, so the
+#: JSON form carries exactly the ones that are set
+_PARAMS = ("lgk", "lo", "hi", "nbins", "q", "k", "max_items")
 
 #: valid lgConfigK range for Spark's hll_sketch_agg (Datasketches HLL).
 _LGK_RANGE = (4, 21)
@@ -120,34 +94,15 @@ class Dimension:
 
 @dataclass(frozen=True)
 class Measure:
-    """An accumulator: op ∈ count/sum/avg/min/max over a source path
-    (count needs no path). Storage columns per op:
+    """An accumulator: ``op`` over a source path (count needs none).
 
-    - count → ``<name>_cnt``
-    - sum   → ``<name>_sum`` (DECIMAL partial)
-    - avg   → ``<name>_sum`` + ``<name>_cnt`` (decomposed)
-    - min   → ``<name>_min`` ; max → ``<name>_max``
-    - distinct → ``<name>_hll`` (binary HLL sketch; ``lgk`` sets the
-      sketch's lgConfigK — 2^lgk registers; None = Spark default)
-    - quantile → ``<name>_hist`` (array<long> of ``nbins + 2`` signed
-      bin counts over [``lo``, ``hi``); index 0 = underflow, nbins+1 =
-      overflow; ``q`` is the default query-time quantile ∈ (0, 1]).
-      Error is bounded by one bin width (hi − lo) / nbins for mass
-      inside [lo, hi); out-of-range mass clamps to the range edge.
-    - var_pop / var_samp / stddev_pop / stddev_samp →
-      ``<name>_sum`` + ``<name>_sum2`` + ``<name>_cnt`` (decomposed
-      Σx, Σx², n — exact DECIMAL partials; x² is squared in DOUBLE
-      before the decimal cast, since the square of a decimal(38,6)
-      overflows the type). Variance derives at query time as
-      E[x²] − mean² (clamped at 0), sample forms divide by n−1 and
-      are NULL for n < 2 (Mongo $stdDevSamp semantics).
-    - topk → ``<name>_tk`` (map<item, long> of the cell's up-to-
-      ``max_items`` most frequent values with their counts; ``k`` is
-      the default query-time top-k ≤ max_items). NULL values never
-      count (SQL COUNT semantics). Counts are EXACT while per-cell
-      cardinality ≤ max_items; beyond that the summary truncates on
-      merge (count desc, item asc tie-break — deterministic) and
-      frequencies follow the mergeable-summary error bound.
+    Each op's storage columns (``<name><suffix>``), build, merge,
+    finalize and retractability are one entry of the measure-family
+    table in :mod:`mongo_olap_spark.cube.measures`. Parameters:
+    ``lgk`` (distinct: HLL lgConfigK, 2^lgk registers), ``lo``/``hi``/
+    ``nbins``/``q`` (quantile: fixed bins over [lo, hi) plus under- and
+    overflow; default query-time quantile), ``k``/``max_items``
+    (topk: default query-time top-k and summary capacity).
     """
 
     name: str
@@ -163,8 +118,8 @@ class Measure:
 
     def __post_init__(self):
         _ident(self.name)
-        if self.op not in _OPS:
-            raise ValueError(f"op must be one of {sorted(_OPS)}")
+        if self.op not in FAMILIES:
+            raise ValueError(f"op must be one of {sorted(FAMILIES)}")
         if self.op != "count" and not (self.path or self.name):
             raise ValueError(f"measure {self.name}: op {self.op} needs a path")
         if self.op == "quantile":
@@ -216,31 +171,10 @@ class Measure:
 
     @property
     def delete_safe(self) -> bool:
-        return _OPS[self.op]
+        return FAMILIES[self.op].retractable
 
     def storage_cols(self) -> list[str]:
-        n = self.name
-        return {
-            "count": [f"{n}_cnt"],
-            "sum": [f"{n}_sum"],
-            "avg": [f"{n}_sum", f"{n}_cnt"],
-            "min": [f"{n}_min"],
-            "max": [f"{n}_max"],
-            "distinct": [f"{n}_hll"],
-            "quantile": [f"{n}_hist"],
-            # r15: the map travels with its MASS (signed count of
-            # non-null source rows) — serve-time mass conservation is
-            # the exact-regime certificate (sf100 found approx_top_k
-            # returning EMPTY once frequent-items purges: a silent
-            # wrong answer without the check)
-            "topk": [f"{n}_tk", f"{n}_tkn"],
-            # the whole dispersion family shares one storage shape; a
-            # single set of partials answers var/stddev, pop/samp alike
-            "var_pop": [f"{n}_sum", f"{n}_sum2", f"{n}_cnt"],
-            "var_samp": [f"{n}_sum", f"{n}_sum2", f"{n}_cnt"],
-            "stddev_pop": [f"{n}_sum", f"{n}_sum2", f"{n}_cnt"],
-            "stddev_samp": [f"{n}_sum", f"{n}_sum2", f"{n}_cnt"],
-        }[self.op]
+        return [f"{self.name}{s}" for s in FAMILIES[self.op].partials]
 
     @property
     def default_q(self) -> float:
@@ -283,6 +217,11 @@ class CubeSpec:
         return [d.name for d in self.dimensions]
 
     @property
+    def cell_columns(self) -> list[str]:
+        """The cell table's columns: dims, then every storage column."""
+        return self.dim_names + [c for m in self.measures for c in m.storage_cols()]
+
+    @property
     def delete_safe(self) -> bool:
         """True iff every measure partial supports signed (retraction)
         merge — i.e. the cube can be maintained under CDC deletes."""
@@ -308,19 +247,7 @@ class CubeSpec:
                 ],
                 "measures": [
                     {"name": m.name, "op": m.op, "path": m.path}
-                    | ({"lgk": m.lgk} if m.lgk is not None else {})
-                    | (
-                        {"lo": m.lo, "hi": m.hi, "nbins": m.nbins}
-                        | ({"q": m.q} if m.q is not None else {})
-                        if m.op == "quantile"
-                        else {}
-                    )
-                    | (
-                        {"k": m.k}
-                        | ({"max_items": m.max_items} if m.max_items is not None else {})
-                        if m.op == "topk"
-                        else {}
-                    )
+                    | {p: getattr(m, p) for p in _PARAMS if getattr(m, p) is not None}
                     for m in self.measures
                 ],
             },

@@ -46,12 +46,6 @@ def dsum(col: Column | str, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def dsum_dec(col: Column | str) -> Column:
-    """Decimal-typed exact sum (for cube partials that must re-aggregate)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(SUM_DECIMAL))
-
-
 def davg(col: Column | str, alias: str | None = None) -> Column:
     """avg decomposed as exact-sum / count (the cube-safe form)."""
     c = F.col(col) if isinstance(col, str) else col

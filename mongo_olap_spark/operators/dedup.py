@@ -93,50 +93,11 @@ def shingle_posts(
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """k independent minhashes: min over shingles of xxhash64(seed, s).
-
-    xxhash64 is a native Catalyst expression (the same family Spark
-    uses for shuffle hashing) — deterministic across runs/executors.
-    """
-    sigs = [
-        F.array_min(F.transform(shingles, lambda s: F.xxhash64(F.lit(i), s)))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
-def lsh_bands(signature: Column, num_bands: int = 4) -> Column:
-    """Split a k-length signature into bands; hash each band to one
-    long. Returns array<struct<band_id int, band_hash long>>."""
-    # signature length must be divisible by num_bands
-    per = F.size(signature) / num_bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band_id"),
-            F.xxhash64(F.concat_ws(",", F.transform(
-                F.slice(signature, (b * per + 1).cast("int"), per.cast("int")),
-                lambda x: x.cast("string"),
-            ))).alias("band_hash"),
-        ),
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over two *distinct-element* arrays."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
     return inter / union
-
-
-def exact_dedup(df: DataFrame, key: Column | str, id_col: str) -> DataFrame:
-    """Exact dedup: one survivor (min id) per content key + dup count."""
-    k = F.col(key) if isinstance(key, str) else key
-    return df.groupBy(k.alias("content_key")).agg(
-        F.min(id_col).alias("keep_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    )
 
 
 def minhash_near_dup_pairs(
@@ -257,10 +218,6 @@ def simhash64(text: Column | str) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc.bitwiseOR(x),
     )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_signatures(

@@ -126,7 +126,7 @@ def srp_signatures(
     # calls: F.lit(64-int plane) + element_at built ~64 py4j round
     # trips PER BIT, so constructing two banded sides cost ~2.3 s of
     # driver plan time against 0.6 s of execution at sf0.1 (the
-    # build._hist_agg lesson; optimization r16). Same expression, same
+    # measures.hist_bank lesson; optimization r16). Same expression, same
     # double math — the literal array just parses in one shot.
     aggs = [
         F.expr(

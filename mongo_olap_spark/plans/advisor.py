@@ -43,6 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo_olap_spark.cube.measures import FAMILIES
 from mongo_olap_spark.cube.spec import (
     _DEFAULT_MAX_ITEMS,
     _GRANULARITIES,
@@ -177,14 +178,15 @@ def _signature(req: AggregateRequest) -> _Sig:
                 f"('{name}', 'quantile_exact', {path!r}, q) in the workload "
                 "for the exact two-level route."
             )
-        if op in ("var_pop", "var_samp", "stddev_pop", "stddev_samp"):
-            # the dispersion family shares one (Σx, Σx², n) storage
-            # shape and the router family-binds any requested form to
-            # any stored form — canonicalize so two queries asking
+        fam = FAMILIES.get(op)
+        if fam is not None and len(fam.serves) > 1:
+            # a family serving several ops (the dispersion forms) shares
+            # one storage shape and the router binds any requested op
+            # to any stored one — canonicalize so two queries asking
             # different forms on one path don't duplicate state
             if path is None:
                 raise ValueError(f"measure {name}: {op} needs a path")
-            meas.add(("var_pop", path))
+            meas.add((fam.serves[0], path))
             continue
         if op == "topk":
             raise ValueError(
@@ -625,17 +627,13 @@ def _sketch_spec(name: str, req: AggregateRequest) -> tuple[CubeSpec, tuple[str,
                 "cardinality ≤ max_items; beyond that, mergeable-summary "
                 "frequency error (Agarwal et al., PODS'12); not "
                 "delete-retractable")
-        elif op in ("count", "sum", "avg", "min", "max", "var_pop",
-                    "var_samp", "stddev_pop", "stddev_samp"):
-            # dispersion variants all store the same (Σx, Σx², n)
-            # partials, but the spec must carry the REQUEST's own op so
-            # the flagged alternative routes/serves the priced-out query
-            # as-is (ADVICE r13 — a var_pop remap left the advertised
-            # spec not matching the original request without a rename)
-            if op == "count":
-                meas.append(Measure(mn, "count"))
-            else:
-                meas.append(Measure(mn, op, path))
+        elif op in FAMILIES and not FAMILIES[op].sketch:
+            # an exact family keeps the REQUEST's own op (not the
+            # canonical dispersion form) so the flagged alternative
+            # routes/serves the priced-out query as-is (ADVICE r13 — a
+            # var_pop remap left the advertised spec not matching the
+            # original request without a rename)
+            meas.append(Measure(mn, op, None if FAMILIES[op].counts_rows else path))
         else:
             return None  # min_n/max_n/top_by/bottom_by: no honest sketch
     if len(envelope) == 0:

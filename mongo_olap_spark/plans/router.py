@@ -30,7 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from mongo_olap_spark.cube.catalog import CubeCatalog
-from mongo_olap_spark.cube.query import _DISPERSION_OPS, query_cube
+from mongo_olap_spark.cube.measures import FAMILIES, row_count_col
+from mongo_olap_spark.cube.query import query_cube
 from mongo_olap_spark.cube.spec import _GRANULARITIES, CubeSpec
 
 #: finer-to-coarser ordering index (year coarsest)
@@ -58,14 +59,12 @@ class RoutingDecision:
     cube: str | None  # None = fall back to source scan
     reason: str
     rewritten_group_by: list = field(default_factory=list)
-    #: requested measure name -> cube measure name, when a COUNT
-    #: measure bound by op rather than by name (count-of-documents is
-    #: name-independent; every other op still matches name+op+path).
-    #: Dispersion family bindings (C22) appear here as
-    #: ("disp", stored measure name, requested op) tuples: the four
-    #: var/stddev forms share one (Σx, Σx², n) storage shape, so any
-    #: stored form serves any requested form — execute() runs the
-    #: REQUESTED op's finalizer over the stored partials.
+    #: requested measure name -> cube measure name, when a measure
+    #: bound by (op, path) rather than by name. A binding to a stored
+    #: measure of ANOTHER op its family serves (C22: the four var/stddev
+    #: forms share one (Σx, Σx², n) storage shape) appears as a
+    #: ("disp", stored measure name, requested op) tuple — execute()
+    #: runs the REQUESTED op's finalize over the stored partials.
     measure_renames: dict = field(default_factory=dict)
     #: exact count-distinct serving (C19 two-level route): the request
     #: carried a ``(name, "count_distinct", path)`` measure and the
@@ -295,75 +294,47 @@ class CubeRouter:
                     return False, [], {}, f"counted column {path} is also grouped", None
                 distinct = ("distinct", name, d.name)
                 continue
-            if op in _DISPERSION_OPS:
-                # family binding: all four forms share (Σx, Σx², n)
-                # storage, so ANY stored dispersion measure on the same
-                # path serves ANY requested form — execute() runs the
-                # REQUESTED op's finalizer over the stored partials.
-                # Recorded in renames as a ("disp", stored, op) tuple
-                # (plain renames are strings).
-                mine = have.get(name)
-                if mine is not None and mine.op in _DISPERSION_OPS and (
-                    path is None or mine.source_path == path
-                ):
-                    if mine.op != op:
-                        renames[name] = ("disp", mine.name, op)
-                    continue
-                if mine is not None:
-                    return False, [], {}, f"measure {name}: op {mine.op} != requested {op}", None
-                same = [
-                    x for x in spec.measures
-                    if x.op in _DISPERSION_OPS and path is not None
-                    and x.source_path == path
-                ]
-                if same:
-                    if same[0].op == op:
-                        renames[name] = same[0].name
-                    else:
-                        renames[name] = ("disp", same[0].name, op)
-                    continue
-                return False, [], {}, f"measure {name} not in cube", None
             mine = have.get(name)
-            if mine is None and op == "count" and path is None:
-                # count-of-documents is name-independent: bind to any
-                # count measure and surface it under the REQUESTED name
-                counts = [x for x in spec.measures if x.op == "count"]
-                if counts:
-                    renames[name] = counts[0].name
-                    continue
             if mine is None:
                 # measure identity is (op, source path) — the stored
-                # name is labeling. Bind to any same-semantics measure
-                # and surface it under the requested name (this is what
-                # lets advisor-merged cubes, whose measure names are
-                # canonical, serve arbitrarily-named requests).
+                # name is labeling. Bind to the first measure whose
+                # family serves the op on the same path (count-of-
+                # documents, which has no path: any row-counting
+                # measure) and surface it under the REQUESTED name —
+                # this lets advisor-merged cubes, whose measure names
+                # are canonical, serve arbitrarily-named requests.
                 same = [
                     x for x in spec.measures
-                    if x.op == op and path is not None and x.source_path == path
+                    if op in FAMILIES[x.op].serves
+                    and (x.source_path == path if path is not None
+                         else FAMILIES[x.op].counts_rows)
                 ]
-                if same:
-                    renames[name] = same[0].name
-                    continue
-                return False, [], {}, f"measure {name} not in cube", None
-            if mine.op != op:
+                if not same:
+                    return False, [], {}, f"measure {name} not in cube", None
+                mine = same[0]
+            elif op not in FAMILIES[mine.op].serves:
                 return False, [], {}, f"measure {name}: op {mine.op} != requested {op}", None
-            if path is not None and mine.source_path != path:
+            elif path is not None and mine.source_path != path:
                 return False, [], {}, (
                     f"measure {name}: path {mine.source_path} != requested {path}"
                 ), None
+            if mine.op != op:
+                # one family, several ops (the dispersion forms share
+                # their (Σx, Σx², n) storage): execute() runs the
+                # REQUESTED op's finalize over the stored partials
+                renames[name] = ("disp", mine.name, op)
+            elif mine.name != name:
+                renames[name] = mine.name
         if distinct is not None and distinct[0] in ("quantile", "topn", "minn", "topby"):
             # these serving rollups weight cells by row_count_col(spec)
-            # (a count measure or an avg's count partial) — a cube
-            # without one would be routed and then crash in execute()
-            # instead of letting another cube or the source fallback
-            # answer (ADVICE r9)
-            from mongo_olap_spark.cube.ivm import row_count_col
-
+            # (a count measure) — a cube without one would be routed
+            # and then crash in execute() instead of letting another
+            # cube or the source fallback answer (ADVICE r9)
             try:
                 row_count_col(spec)
             except ValueError:
                 return False, [], {}, (
-                    f"{distinct[0]} route needs a count/avg measure for "
+                    f"{distinct[0]} route needs a count measure for "
                     "cell multiplicity"
                 ), None
         # output-name collisions (ADVICE r8): two requested measures
@@ -379,15 +350,6 @@ class CubeRouter:
         bound = [renames.get(n, n) for n in out_names if distinct is None or n != distinct[1]]
         if len(set(bound)) != len(bound):
             return False, [], {}, "two requested measures bind the same stored measure", None
-        if distinct is not None and any(isinstance(v, tuple) for v in renames.values()):
-            # the two-level special routes delegate extra measures to
-            # distinct_rollup/topk_rollup by NAME — a family-rebound
-            # dispersion form (tuple binding) can't ride along; ask for
-            # the stored form by its exact op instead
-            return False, [], {}, (
-                "family-rebound dispersion measures cannot combine with "
-                "count_distinct/quantile_exact/topn in one request"
-            ), None
         if req.where is not None:
             allowed = set(dim_names)
             # conservative: every identifier in the predicate that is a
@@ -529,8 +491,19 @@ class CubeRouter:
             regrouped = filtered.select(
                 *gb_exprs, *[c for c in cells.columns if c not in gb_names]
             )
-            ren = decision.measure_renames
-            req_names = [m if isinstance(m, str) else m[0] for m in req.measures]
+            # (output, stored, op) per requested plain measure: the
+            # served frame carries the requested names directly
+            special = next((t for t in (decision.topby, decision.extremes, decision.topn,
+                                        decision.quantile, decision.distinct)
+                            if t is not None), None)
+            asks = []
+            for m in req.measures:
+                want = m if isinstance(m, str) else m[0]
+                if special is not None and want == special[0]:
+                    continue
+                got = decision.measure_renames.get(want, want)
+                asks.append((want, got[1], got[2]) if isinstance(got, tuple)
+                            else (want, got, spec.measure(got).op))
             if decision.topby is not None:
                 from mongo_olap_spark.cube.query import top_by_rollup
 
@@ -566,45 +539,13 @@ class CubeRouter:
                 from mongo_olap_spark.cube.query import distinct_rollup
 
                 alias, ddim = decision.distinct
-                other = [ren.get(n2, n2) for n2 in req_names if n2 != alias]
                 out = distinct_rollup(
                     regrouped, spec, gb_names, ddim,
-                    alias=alias, measures=other or None,
+                    alias=alias, measures=asks or None,
                 )
             else:
-                disp = {w: v for w, v in ren.items() if isinstance(v, tuple)}
-                if disp:
-                    # family-bound dispersion measures finalize with the
-                    # REQUESTED op over the stored partials, in the same
-                    # aggregate as every other measure — one shuffle
-                    from mongo_olap_spark.cube.query import (
-                        dispersion_expr,
-                        measure_rollup_exprs,
-                    )
-
-                    normal = [
-                        ren.get(n2, n2) for n2 in req_names
-                        if n2 not in disp and isinstance(ren.get(n2, n2), str)
-                    ]
-                    aggs = measure_rollup_exprs(spec, normal)
-                    for want, (_tag, stored, o) in disp.items():
-                        aggs.append(
-                            dispersion_expr(
-                                o,
-                                F.sum(f"{stored}_sum"),
-                                F.sum(f"{stored}_sum2"),
-                                F.sum(f"{stored}_cnt"),
-                            ).alias(want)
-                        )
-                    out = regrouped.groupBy(*gb_names).agg(*aggs)
-                else:
-                    measures = [ren.get(n2, n2) for n2 in req_names] or None
-                    out = query_cube(regrouped, spec, group_by=gb_names, measures=measures)
-            # single aliasing projection — a sequential rename chain
-            # can consume a column another rename still needs (ADVICE r8);
-            # dispersion bindings already emitted the requested names
-            inv = {got: want for want, got in ren.items() if isinstance(got, str)}
-            return out.select(*[F.col(c).alias(inv.get(c, c)) for c in out.columns])
+                out = query_cube(regrouped, spec, group_by=gb_names, measures=asks or None)
+            return out
         if source_df is None:
             raise ValueError(f"no cube serves request and no source_df given: {decision.reason}")
         # direct fallback: build the aggregation from the request
@@ -617,20 +558,38 @@ class CubeRouter:
                       granularity=(None if isinstance(g, str) else g[1]))
             for g in req.group_by
         )
-        # a count_distinct measure falls back through the same exact
-        # two-level shape it would be served from: counted column as an
-        # extra dimension, distinct_rollup over the built cells
-        cd = [m for m in req.measures
-              if isinstance(m, tuple) and len(m) >= 3 and m[1] == "count_distinct"]
+
+        def two_level(extra: dict, measures=None):
+            """Source cells keyed by the group_by dims plus ``extra``
+            ({dim name: source path}) — the exact two-level shape the
+            special measures are served from — filtered by ``where``."""
+            tmp = CubeSpec(
+                name="adhoc", source=req.source,
+                dimensions=dims + tuple(Dimension(n, path=p) for n, p in extra.items()),
+                measures=measures, filter_sql=req.filter_sql,
+            )
+            cells = build_cube(None, tmp, source_df)
+            return (cells.filter(req.where) if req.where else cells), tmp
+
+        def dim(prefix: str, path: str) -> str:
+            return prefix + re.sub(r"[^A-Za-z0-9_]+", "_", path)
+
+        def asked(*ops, min_len=3):
+            return [m for m in req.measures
+                    if isinstance(m, tuple) and len(m) >= min_len and m[1] in ops]
+
+        gb = [d.name for d in dims]
+        # each special measure falls back through the same exact
+        # two-level shape it would be served from
+        cd = asked("count_distinct")
         if len(cd) > 1:
             raise ValueError("one count_distinct measure per request")
-        qe = [m for m in req.measures
-              if isinstance(m, tuple) and len(m) >= 3 and m[1] == "quantile_exact"]
+        for ops, min_len in ((("quantile_exact",), 3), (("top_by", "bottom_by"), 4),
+                             (("min_n", "max_n"), 3), (("topn",), 3)):
+            if asked(*ops, min_len=min_len) and len(req.measures) != 1:
+                raise ValueError(f"{'/'.join(ops)} must be the only requested measure")
+        qe = asked("quantile_exact")
         if qe:
-            # exact-quantile fallback honors the ask through the same
-            # two-level shape it would be served from
-            if len(req.measures) != 1:
-                raise ValueError("quantile_exact must be the only requested measure")
             from mongo_olap_spark.cube.query import quantile_rollup
 
             alias, _, q_path, *qq = qe[0]
@@ -638,93 +597,39 @@ class CubeRouter:
                 q = tuple(float(x) for x in qq[0])
             else:
                 q = float(qq[0]) if qq else 0.5
-            qdim = "__qe_" + re.sub(r"[^A-Za-z0-9_]+", "_", q_path)
-            tmp = CubeSpec(
-                name="adhoc", source=req.source,
-                dimensions=dims + (Dimension(qdim, path=q_path),),
-                measures=(Measure("__qe_count", "count"),),
-                filter_sql=req.filter_sql,
-            )
-            cells = build_cube(None, tmp, source_df)
-            filtered = cells.filter(req.where) if req.where else cells
-            return quantile_rollup(
-                filtered, tmp, [d.name for d in dims], qdim, q, alias=alias
-            )
-        tb = [m for m in req.measures
-              if isinstance(m, tuple) and len(m) >= 4 and m[1] in ("top_by", "bottom_by")]
+            qdim = dim("__qe_", q_path)
+            cells, tmp = two_level({qdim: q_path}, (Measure("__qe_count", "count"),))
+            return quantile_rollup(cells, tmp, gb, qdim, q, alias=alias)
+        tb = asked("top_by", "bottom_by", min_len=4)
         if tb:
-            # exact $topN/$bottomN fallback through the same two-level
-            # shape it would be served from
-            if len(req.measures) != 1:
-                raise ValueError("top_by/bottom_by must be the only requested measure")
             from mongo_olap_spark.cube.query import top_by_rollup
 
             alias, op_, s_path, p_path, *kk = tb[0]
-            k = int(kk[0]) if kk else 1
-            present_desc = bool(kk[1]) if len(kk) > 1 else False
-            sdim = "__tb_s_" + re.sub(r"[^A-Za-z0-9_]+", "_", s_path)
-            pdim = "__tb_p_" + re.sub(r"[^A-Za-z0-9_]+", "_", p_path)
-            tmp = CubeSpec(
-                name="adhoc", source=req.source,
-                dimensions=dims + (Dimension(sdim, path=s_path),
-                                   Dimension(pdim, path=p_path)),
-                measures=(Measure("__tb_count", "count"),),
-                filter_sql=req.filter_sql,
-            )
-            cells = build_cube(None, tmp, source_df)
-            filtered = cells.filter(req.where) if req.where else cells
+            sdim, pdim = dim("__tb_s_", s_path), dim("__tb_p_", p_path)
+            cells, tmp = two_level({sdim: s_path, pdim: p_path},
+                                   (Measure("__tb_count", "count"),))
             return top_by_rollup(
-                filtered, tmp, [d.name for d in dims], sdim, pdim, k,
-                largest=(op_ == "bottom_by"), present_desc=present_desc,
-                alias=alias,
+                cells, tmp, gb, sdim, pdim, int(kk[0]) if kk else 1,
+                largest=(op_ == "bottom_by"),
+                present_desc=bool(kk[1]) if len(kk) > 1 else False, alias=alias,
             )
-        mn = [m for m in req.measures
-              if isinstance(m, tuple) and len(m) >= 3 and m[1] in ("min_n", "max_n")]
+        mn = asked("min_n", "max_n")
         if mn:
-            # exact order-statistics fallback honors the ask through
-            # the same two-level shape it would be served from
-            if len(req.measures) != 1:
-                raise ValueError("min_n/max_n must be the only requested measure")
             from mongo_olap_spark.cube.query import extremes_rollup
 
             alias, op_, e_path, *kk = mn[0]
-            k = int(kk[0]) if kk else 1
-            edim = "__mn_" + re.sub(r"[^A-Za-z0-9_]+", "_", e_path)
-            tmp = CubeSpec(
-                name="adhoc", source=req.source,
-                dimensions=dims + (Dimension(edim, path=e_path),),
-                measures=(Measure("__mn_count", "count"),),
-                filter_sql=req.filter_sql,
-            )
-            cells = build_cube(None, tmp, source_df)
-            filtered = cells.filter(req.where) if req.where else cells
-            return extremes_rollup(
-                filtered, tmp, [d.name for d in dims], edim, k,
-                largest=(op_ == "max_n"), alias=alias,
-            )
-        tn = [m for m in req.measures
-              if isinstance(m, tuple) and len(m) >= 3 and m[1] == "topn"]
+            edim = dim("__mn_", e_path)
+            cells, tmp = two_level({edim: e_path}, (Measure("__mn_count", "count"),))
+            return extremes_rollup(cells, tmp, gb, edim, int(kk[0]) if kk else 1,
+                                   largest=(op_ == "max_n"), alias=alias)
+        tn = asked("topn")
         if tn:
-            # exact-top-k fallback honors the ask through the same
-            # two-level shape it would be served from
-            if len(req.measures) != 1:
-                raise ValueError("topn must be the only requested measure")
             from mongo_olap_spark.cube.query import topk_rollup
 
             alias, _, t_path, *kk = tn[0]
-            k = int(kk[0]) if kk else 5
-            tdim = "__tn_" + re.sub(r"[^A-Za-z0-9_]+", "_", t_path)
-            tmp = CubeSpec(
-                name="adhoc", source=req.source,
-                dimensions=dims + (Dimension(tdim, path=t_path),),
-                measures=(Measure("__tn_count", "count"),),
-                filter_sql=req.filter_sql,
-            )
-            cells = build_cube(None, tmp, source_df)
-            filtered = cells.filter(req.where) if req.where else cells
-            return topk_rollup(
-                filtered, tmp, [d.name for d in dims], tdim, k, alias=alias
-            )
+            tdim = dim("__tn_", t_path)
+            cells, tmp = two_level({tdim: t_path}, (Measure("__tn_count", "count"),))
+            return topk_rollup(cells, tmp, gb, tdim, int(kk[0]) if kk else 5, alias=alias)
         for m in req.measures:
             if isinstance(m, tuple) and len(m) >= 2 and m[1] == "quantile":
                 # a histogram sketch needs a declared range — there is
@@ -756,24 +661,12 @@ class CubeRouter:
             from mongo_olap_spark.cube.query import distinct_rollup
 
             alias, _, cd_path = cd[0][:3]
-            ddim = "__cd_" + re.sub(r"[^A-Za-z0-9_]+", "_", cd_path)
-            tmp = CubeSpec(
-                name="adhoc", source=req.source,
-                dimensions=dims + (Dimension(ddim, path=cd_path),),
-                measures=rest or (Measure("__cd_count", "count"),),
-                filter_sql=req.filter_sql,
-            )
-            cells = build_cube(None, tmp, source_df)
-            filtered = cells.filter(req.where) if req.where else cells
+            ddim = dim("__cd_", cd_path)
+            cells, tmp = two_level({ddim: cd_path}, rest or (Measure("__cd_count", "count"),))
             out = distinct_rollup(
-                filtered, tmp, [d.name for d in dims], ddim,
+                cells, tmp, gb, ddim,
                 alias=alias, measures=[m.name for m in rest] or None,
             )
             return out.drop("__cd_count") if not rest else out
-        tmp = CubeSpec(
-            name="adhoc", source=req.source, dimensions=dims,
-            measures=rest, filter_sql=req.filter_sql,
-        )
-        cells = build_cube(None, tmp, source_df)
-        filtered = cells.filter(req.where) if req.where else cells
-        return query_cube(filtered, tmp)
+        cells, tmp = two_level({}, rest)
+        return query_cube(cells, tmp)

@@ -792,7 +792,7 @@ VALUE_DISPERSION_CUBE = CubeSpec(
 )
 
 
-from mongo_olap_spark.cube.query import dispersion_sql  # noqa: E402
+from mongo_olap_spark.cube.measures import dispersion_sql  # noqa: E402
 
 
 @register(

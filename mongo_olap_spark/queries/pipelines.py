@@ -898,7 +898,7 @@ def _route_engine(spark, sf_dir, tag):
     return OlapEngine(spark, root)
 
 
-from mongo_olap_spark.cube.query import dispersion_sql  # noqa: E402
+from mongo_olap_spark.cube.measures import dispersion_sql  # noqa: E402
 
 
 @register(

@@ -20,7 +20,7 @@ cube-define time**, not per query —
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,6 +63,3 @@ def with_typed_props(
     """Parse the JSON column once into a typed struct column."""
     return df.withColumn(out, F.from_json(F.col(col), schema))
 
-
-def props_field(out: str = "props_t", key: str = "k") -> Column:
-    return F.col(f"{out}.{key}")

@@ -15,9 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube import CubeSpec, Dimension, Measure, build_cube, query_cube
-from mongo_olap_spark.cube.build import delta_cells, hist_bin_expr
+from mongo_olap_spark.cube.build import delta_cells
 from mongo_olap_spark.cube.ivm import merge_cells
 from mongo_olap_spark.cube.lattice import build_cube_lattice, query_lattice
+from mongo_olap_spark.cube.measures import hist_bin_sql
 from mongo_olap_spark.cube.query import hybrid_query, quantile_rollup
 from mongo_olap_spark.queries.core import VALUE_EXACT_Q_CUBE, VALUE_HIST_CUBE
 
@@ -157,7 +158,7 @@ def test_hist_bin_edges_and_out_of_range(spark):
         [(-0.1,), (0.0,), (1.9,), (2.0,), (9.99,), (10.0,), (250.0,), (None,)],
         "x double",
     )
-    got = [r[0] for r in df.select(hist_bin_expr(F.col("x"), m)).collect()]
+    got = [r[0] for r in df.select(F.expr(hist_bin_sql(m))).collect()]
     assert got == [0, 1, 1, 2, 5, 6, 6, None]
 
 

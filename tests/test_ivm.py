@@ -121,15 +121,40 @@ def test_minmax_delete_requires_recompute(spark, events):
     )
 
 
-def test_row_count_col_requires_count_or_avg():
-    spec = CubeSpec(
-        name="only_minmax",
-        source="t",
-        dimensions=(Dimension("d"),),
-        measures=(Measure("lo", "min", "x"),),
-    )
-    with pytest.raises(ValueError, match="count or avg"):
-        row_count_col(spec)
+def test_row_count_col_requires_count():
+    for ms in [(Measure("lo", "min", "x"),), (Measure("av", "avg", "x"),)]:
+        spec = CubeSpec(
+            name="no_count",
+            source="t",
+            dimensions=(Dimension("d"),),
+            measures=ms,
+        )
+        with pytest.raises(ValueError, match="count measure"):
+            row_count_col(spec)
+
+
+def test_avg_count_is_not_a_cell_row_count(spark):
+    """An avg's count partial counts non-null VALUES: a cell whose rows
+    all carry NULL reads 0 there while it still has rows. Evicting by
+    it dropped group 'a' on the next merge, where a rebuild keeps it —
+    an avg-only cube now refuses retraction loudly, and with a count
+    measure the merge equals the rebuild."""
+    src = spark.createDataFrame(
+        [("a", None), ("a", None), ("b", 1.0)], "g string, w double")
+    ins = spark.createDataFrame([("b", 3.0, 1)], "g string, w double, mult int")
+    avg_only = CubeSpec(name="avg_only", source="t", dimensions=(Dimension("g"),),
+                        measures=(Measure("aw", "avg", "w"),))
+    with pytest.raises(ValueError, match="count measure"):
+        merge_cells(build_cube(spark, avg_only, src),
+                    delta_cells(avg_only, ins), avg_only)
+    counted = CubeSpec(name="avg_counted", source="t", dimensions=(Dimension("g"),),
+                       measures=(Measure("n", "count"), Measure("aw", "avg", "w")))
+    merged = merge_cells(build_cube(spark, counted, src),
+                         delta_cells(counted, ins), counted)
+    rebuilt = build_cube(spark, counted, src.unionByName(ins.drop("mult")))
+    for cells in (merged, rebuilt):
+        assert {r["g"]: (r["n_cnt"], r["aw_cnt"]) for r in cells.collect()} == {
+            "a": (2, 0), "b": (2, 2)}
 
 
 def test_minmax_recompute_repairs_null_dim_cells(spark, events):
@@ -171,7 +196,7 @@ def test_incremental_equals_rebuild_random_specs(spark, events):
     from the delete-safe set {count, sum, avg} (min/max require the
     recompute path on deletes, pinned by their own tests) — so IVM
     correctness is not an artifact of the one hand-picked EVENTS_CUBE
-    shape."""
+    shape. A draw without a count measure must refuse retraction."""
     rng = random.Random(5)
     dim_pool = [
         Dimension("etype", path="event_type"),
@@ -195,6 +220,12 @@ def test_incremental_equals_rebuild_random_specs(spark, events):
                         dimensions=dims, measures=meas)
         cut = rng.randint(1, n - 1)
         cells = build_cube(spark, spec, events.limit(0))
+        if not any(m.op == "count" for m in meas):
+            # an avg's count partial counts non-null values, not rows:
+            # without a count measure retraction refuses loudly
+            with pytest.raises(ValueError, match="count measure"):
+                merge_cells(cells, delta_cells(spec, indexed), spec)
+            continue
         for lo, hi in [(0, cut), (cut, n)]:
             batch = indexed.filter((F.col("rn") > lo) & (F.col("rn") <= hi))
             cells = merge_cells(
@@ -255,12 +286,13 @@ def test_ivm_pipeline_cubes_property(spark, events, data):
     accs = data.draw(
         st.lists(st.sampled_from(_FZ_ACCS), min_size=1, max_size=3,
                  unique_by=lambda a: a[0])
-        # retraction requires a count or avg measure for cell
-        # multiplicity (cube/ivm.row_count_col — loud, pinned by its
-        # own test); keep drawn cubes in the valid regime
+        # drawn cubes keep an avg or a count measure; retraction needs
+        # the count (cube/measures.row_count_col), so an avg-only draw
+        # must refuse the first batch loudly
         .filter(lambda a: any(x[0] in ("n", "av") for x in a)),
         label="accs",
     )
+    counted = any(x[0] == "n" for x in accs)
     ncuts = data.draw(st.integers(1, 3), label="ncuts")
     fracs = sorted(
         data.draw(st.floats(0.05, 0.95), label=f"cut{i}")
@@ -284,6 +316,10 @@ def test_ivm_pipeline_cubes_property(spark, events, data):
         )
         for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
             batch = indexed.filter((F.col("rn") > lo) & (F.col("rn") <= hi))
+            if not counted:
+                with pytest.raises(ValueError, match="count measure"):
+                    engine.apply_cdc("fzp", batch, i)
+                return
             engine.apply_cdc("fzp", batch, i)
         got = rows_set(engine.query(cube="fzp"))
 

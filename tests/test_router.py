@@ -707,3 +707,22 @@ def test_special_routes_refused_without_multiplicity_measure(spark, events, tmp_
         measures=(("nv", "count_distinct", "value"),),
     ))
     assert d.cube == spec.name
+
+
+def test_avg_only_cube_falls_back_for_weighted_routes(spark, events, tmp_path):
+    """An avg's count partial counts non-null values, not rows, so it
+    cannot weight cells: the exact routes refuse an avg-only cube and
+    the source fallback answers, equal to a count cube's answer."""
+    cat = CubeCatalog(spark, str(tmp_path / "avgonly"))
+    dims = (Dimension("event_type"), Dimension("value"))
+    cat.create(CubeSpec(name="avg_only_cube", source="events", dimensions=dims,
+                        measures=(Measure("uavg", "avg", "user_id"),)), events)
+    router = CubeRouter(cat)
+    req = AggregateRequest(source="events", group_by=("event_type",),
+                           measures=(("top", "topn", "value", 3),))
+    assert router.route(req).cube is None
+    got = rows_set(router.execute(req, source_df=events))
+    cat.create(CubeSpec(name="counted_cube", source="events", dimensions=dims,
+                        measures=(Measure("n", "count"),)), events)
+    assert router.route(req).cube == "counted_cube"
+    assert got == rows_set(router.execute(req))

@@ -16,6 +16,36 @@ idents = st.text(alphabet=string.ascii_lowercase + "_", min_size=1, max_size=12)
 )
 
 
+#: every measure op, spelled out here rather than read from the table
+OPS = ["count", "sum", "avg", "min", "max", "distinct", "quantile", "topk",
+       "var_pop", "var_samp", "stddev_pop", "stddev_samp"]
+#: storage-column suffixes any op may write
+SUFFIXES = {"cnt", "sum", "sum2", "min", "max", "hll", "hist", "tk", "tkn"}
+#: ops whose partials cannot take a delete by signed addition
+NON_RETRACTABLE = {"min", "max", "distinct", "topk"}
+
+
+@st.composite
+def measures(draw, name):
+    op = draw(st.sampled_from(OPS))
+    params = {}
+    if op == "distinct":
+        params["lgk"] = draw(st.one_of(st.none(), st.integers(4, 21)))
+    elif op == "quantile":
+        lo = draw(st.floats(-1e6, 1e6, allow_nan=False))
+        params.update(
+            lo=lo,
+            hi=lo + draw(st.floats(1e-3, 1e6)),
+            nbins=draw(st.integers(1, 4096)),
+            q=draw(st.one_of(st.none(), st.floats(0.0, 1.0, exclude_min=True))),
+        )
+    elif op == "topk":
+        k = draw(st.integers(1, 1000))
+        params.update(
+            k=k, max_items=draw(st.one_of(st.none(), st.integers(k, 1_000_000))))
+    return Measure(name=name, op=op, path=draw(idents), **params)
+
+
 @st.composite
 def specs(draw):
     n_dims = draw(st.integers(0, 4))
@@ -31,19 +61,12 @@ def specs(draw):
         )
         for i in range(n_dims)
     )
-    measures = tuple(
-        Measure(
-            name=names[n_dims + i],
-            op=draw(st.sampled_from(["count", "sum", "avg", "min", "max"])),
-            path=draw(idents),
-        )
-        for i in range(n_meas)
-    )
+    meas = tuple(draw(measures(names[n_dims + i])) for i in range(n_meas))
     return CubeSpec(
         name=draw(idents),
         source=draw(idents),
         dimensions=dims,
-        measures=measures,
+        measures=meas,
         filter_sql=draw(st.one_of(st.none(), st.just("x > 1"))),
     )
 
@@ -60,13 +83,14 @@ def test_storage_cols_unique_and_typed(spec):
     cols = [c for m in spec.measures for c in m.storage_cols()]
     assert len(cols) == len(set(cols))
     for c in cols:
-        assert c.rsplit("_", 1)[1] in {"sum", "cnt", "min", "max"}
+        assert c.rsplit("_", 1)[1] in SUFFIXES
+    assert spec.cell_columns == spec.dim_names + cols
 
 
 @given(specs())
 @settings(max_examples=200, deadline=None)
-def test_delete_safe_iff_no_minmax(spec):
-    assert spec.delete_safe == all(m.op not in ("min", "max") for m in spec.measures)
+def test_delete_safe_iff_every_op_retractable(spec):
+    assert spec.delete_safe == all(m.op not in NON_RETRACTABLE for m in spec.measures)
 
 
 # ---------------------------------------------------------------------------

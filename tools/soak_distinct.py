@@ -149,7 +149,7 @@ def hist_route_check(spark, catalog, name, spec, events, n_batches, k):
     from mongo_olap_spark.cube.build import build_cube
     from mongo_olap_spark.cube.query import query_cube
 
-    cols = [*spec.dim_names, *[c for m in spec.measures for c in m.storage_cols()]]
+    cols = spec.cell_columns
 
     def normalized(cells):
         # stringify the bin array so rows_digest hashes it stably
@@ -221,7 +221,7 @@ def topk_route_check(spark, catalog, name, spec, events, n_batches, k):
     from mongo_olap_spark.cube.build import build_cube
     from mongo_olap_spark.cube.query import query_cube
 
-    cols = [*spec.dim_names, *[c for m in spec.measures for c in m.storage_cols()]]
+    cols = spec.cell_columns
 
     def normalized(cells):
         return cells.select(

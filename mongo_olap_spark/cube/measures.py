@@ -255,8 +255,8 @@ def _one_sided(f: Callable[[Column, Column, Measure], Column]):
 
 
 def _add_decimal(a: str, b: str, m) -> Column:
-    dec0 = F.lit(0).cast(SUM_DECIMAL)
-    return (F.coalesce(F.col(a), dec0) + F.coalesce(F.col(b), dec0)).cast(SUM_DECIMAL)
+    # NULL + NULL stays NULL: an all-NULL group's sum is an empty SUM
+    return _one_sided(lambda x, y, m: x + y)(a, b, m).cast(SUM_DECIMAL)
 
 
 def _add_long(a: str, b: str, m) -> Column:
@@ -479,7 +479,9 @@ FAMILIES: dict[str, MeasureFamily] = {
     # avg is never stored: (sum, non-null count), derived at query time
     "avg": MeasureFamily(
         partials=("_sum", "_cnt"), build=_from_src(_sum_part, _nonnull_count),
-        finalize=lambda m, op, col: col("_sum").cast("double") / col("_cnt"),
+        # no non-null value (a retracted group keeps _sum 0): NULL, not 0/0
+        finalize=lambda m, op, col: F.when(
+            col("_cnt") != 0, col("_sum").cast("double") / col("_cnt")),
         serves=("avg",), retractable=True, reaggregable=True),
     # min/max: the runner-up is not derivable from the stored partial
     "min": MeasureFamily(

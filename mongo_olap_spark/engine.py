@@ -92,84 +92,31 @@ class OlapEngine:
         greedy view selection — plans/advisor.py).
 
         ``workload`` entries are ``(source_name, pipeline[, weight])``
-        where each pipeline is a routable ``[$match?, $group]``
-        aggregate (the same shape ``create_cube_from_pipeline``
-        accepts) — or (r10) a single-accumulator SPECIAL-family
-        pipeline ($median / $percentile / $minN / $maxN / $topN /
-        $bottomN / $addToSet+$size), which the advisor decomposes
-        into the exact two-level cube shape the router serves it
-        from — and weight is its query frequency. Returns an
+        where each pipeline is a routable aggregate (any shape
+        ``query_pipeline`` routes — see
+        :func:`~mongo_olap_spark.plans.pipeline_compiler.aggregate_requests_from_pipeline`;
+        special-family parts advise the exact two-level cube shape the
+        router serves them from) and weight is its query frequency. A
+        pipeline that does not route raises ``PipelineError``. Returns an
         :class:`~mongo_olap_spark.plans.advisor.Advice`; with
         ``apply=True`` the recommended cubes are also created from
         ``sources`` and registered in the catalog, ready to route.
         """
         from mongo_olap_spark.plans.advisor import WorkloadQuery, advise
         from mongo_olap_spark.plans.pipeline_compiler import (
-            PipelineError,
-            cube_spec_from_pipeline,
-            mixed_requests_from_pipeline,
-            special_request_from_pipeline,
+            aggregate_requests_from_pipeline,
         )
 
+        # each pipeline advises the requests the serving side sends for
+        # it: one per routed part, each at the pipeline's weight
         wl = []
         for entry in workload:
             source_name, pipeline, *rest = entry
             weight = rest[0] if rest else 1.0
-            try:
-                shape = cube_spec_from_pipeline("__advise", source_name, pipeline)
-                req = AggregateRequest(
-                    source=source_name,
-                    group_by=tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in shape.dimensions
-                    ),
-                    measures=tuple(
-                        (m.name, m.op, m.path) if m.path else (m.name, m.op)
-                        for m in shape.measures
-                    ),
-                    filter_sql=shape.filter_sql,
-                )
-            except PipelineError as cube_err:
-                # the same last-mile translation query_pipeline uses:
-                # special-family pipelines advise the two-level shape
-                # they would be SERVED from (advisor._signature
-                # decomposes the special measure into raw dim + count)
-                try:
-                    filter_sql, dims, measure, _post = (
-                        special_request_from_pipeline(pipeline))
-                except PipelineError:
-                    # mixed-family pipelines (r11) advise once per
-                    # decomposed part, each at the pipeline's weight —
-                    # exactly the requests the serving side will issue
-                    try:
-                        filter_sql, dims, parts, _out = (
-                            mixed_requests_from_pipeline(pipeline))
-                    except PipelineError:
-                        raise cube_err from None
-                    gb = tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in dims
-                    )
-                    for part in parts:
-                        measures = part[1] if part[0] == "plain" else (part[1],)
-                        wl.append(WorkloadQuery(AggregateRequest(
-                            source=source_name, group_by=gb,
-                            measures=measures, filter_sql=filter_sql,
-                        ), weight=weight))
-                    continue
-                req = AggregateRequest(
-                    source=source_name,
-                    group_by=tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in dims
-                    ),
-                    measures=(measure,),
-                    filter_sql=filter_sql,
-                )
-            wl.append(WorkloadQuery(req, weight=weight))
+            filter_sql, dims, parts, _out = (
+                aggregate_requests_from_pipeline(pipeline))
+            wl += [WorkloadQuery(req, weight=weight) for _part, req
+                   in _part_requests(source_name, filter_sql, dims, parts)]
         advice = advise(
             wl, sources,
             cell_budget=cell_budget, sample_fraction=sample_fraction,
@@ -514,13 +461,20 @@ class OlapEngine:
 
         Returns a dict with:
 
-        - ``route``: ``target`` (``"cube"`` or ``"source"``), the
-          routed ``cube`` name and the router's ``reason`` (cell count
-          of the winner, or why every cube was rejected), the
-          ``pushed_filter`` (pre-aggregation source filter the cube
-          shares), and the rewritten group-by. Hybrid serving (cube
-          cells + unabsorbed tail) is chosen by the explicit ``tail=``
-          argument of :meth:`query`, noted under ``route.hybrid``.
+        - ``route``: ``target`` (``"cube"`` when every part is
+          cube-served, else ``"source"``), ``parts`` (one entry per
+          routed request part: its ``family``, ``measures``, serving
+          ``cube`` and the router's ``reason`` — cell count of the
+          winner, or why each cube was refused), ``cubes`` (every
+          serving cube), ``cube`` (the serving cube when all parts
+          share one), ``reason``, the ``pushed_filter``
+          (pre-aggregation source filter the cube shares), the
+          ``rewritten_group_by`` and a ``rewrite`` note for special,
+          mixed and $sortByCount/$count shapes. A one-part aggregate
+          reports its part's ``reason`` and rewritten group-by. Hybrid
+          serving (cube cells + unabsorbed tail) is chosen by the
+          explicit ``tail=`` argument of :meth:`query`, noted under
+          ``route.hybrid``.
         - ``stages``: one entry per pipeline stage; ``$lookup`` stages
           carry the join ``strategy`` the compiler picks (equi-packed /
           broadcast-uncorrelated / hash-equi+residual / banded-range /
@@ -530,146 +484,74 @@ class OlapEngine:
         """
         from mongo_olap_spark.plans.pipeline_compiler import (
             PipelineError,
-            cube_spec_from_pipeline,
+            aggregate_requests_from_pipeline,
             describe_lookup,
-            mixed_requests_from_pipeline,
-            special_request_from_pipeline,
         )
 
         refusals: list[str] = []
-        routable, rewrite_kind = _routable_rewrite(pipeline)
         try:
-            special_note = None
-            mixed_route = None
-            try:
-                shape = cube_spec_from_pipeline("__explain", source, routable)
-                req = AggregateRequest(
-                    source=source,
-                    group_by=tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in shape.dimensions
-                    ),
-                    measures=tuple(
-                        (m.name, m.op, m.path) if m.path else (m.name, m.op)
-                        for m in shape.measures
-                    ),
-                    filter_sql=shape.filter_sql,
-                )
-            except PipelineError:
-                try:
-                    # single-accumulator special families (C19–C24, r10)
-                    filter_sql, dims, measure, post = (
-                        special_request_from_pipeline(routable))
-                    req = AggregateRequest(
-                        source=source,
-                        group_by=tuple(
-                            (d.source_path, d.granularity) if d.granularity
-                            else d.source_path
-                            for d in dims
-                        ),
-                        measures=(measure,),
-                        filter_sql=filter_sql,
-                    )
-                    special_note = (
-                        f"special-family aggregate → ({measure[0]!r}, "
-                        f"{measure[1]!r}, ...) exact two-level route"
-                        + (f"; post-transform: {post}" if post else "")
-                    )
-                except PipelineError:
-                    # mixed-family aggregate (r11): route each
-                    # decomposed part independently, report per-part
-                    filter_sql, dims, parts, out_cols = (
-                        mixed_requests_from_pipeline(routable))
-                    gb = tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in dims
-                    )
-                    part_infos = []
-                    for part in parts:
-                        measures = part[1] if part[0] == "plain" else (part[1],)
-                        preq = AggregateRequest(
-                            source=source, group_by=gb, measures=measures,
-                            filter_sql=filter_sql,
-                        )
-                        d = self.router.route(preq)
-                        part_infos.append({
-                            "family": part[0] if part[0] == "plain"
-                                      else part[1][1],
-                            "measures": [
-                                m[0] for m in
-                                (part[1] if part[0] == "plain" else (part[1],))
-                            ],
-                            "cube": d.cube,
-                            "reason": d.reason,
-                        })
-                        if d.cube is None:
-                            refusals.append(
-                                f"router[{part_infos[-1]['family']}]: "
-                                f"{d.reason}")
-                    all_cube = all(p["cube"] is not None for p in part_infos)
-                    mixed_route = {
-                        "target": "cube" if all_cube else "source",
-                        # top-level `cube` names the single serving
-                        # cube only when ALL parts share one; parts
-                        # served by different cubes leave it None —
-                        # `cubes` lists every distinct serving cube
-                        # and `parts` is authoritative per part
-                        # (ADVICE r11: consumers keying on `cube`
-                        # alone misread a fully-routed mixed query
-                        # as unrouted).
-                        "cube": (part_infos[0]["cube"]
-                                 if len({p["cube"] for p in part_infos}) == 1
-                                 else None),
-                        "cubes": sorted({
-                            p["cube"] for p in part_infos
-                            if p["cube"] is not None}),
-                        "reason": (
-                            "mixed-family aggregate: every part cube-served"
-                            if all_cube else
-                            "mixed-family aggregate: some parts fall back "
-                            "to source aggregation"),
-                        "pushed_filter": filter_sql,
-                        "rewritten_group_by": [d.name for d in dims],
-                        "parts": part_infos,
-                        "rewrite": (
-                            f"mixed aggregate → {len(part_infos)} routed "
-                            "family parts joined on the group keys; output "
-                            f"columns {out_cols}"),
-                        "hybrid": "pass tail= to query() to merge unabsorbed "
-                                  "source rows with the cube cells",
-                    }
-            if mixed_route is not None:
-                route = mixed_route
-            else:
-                decision = self.router.route(req)
-                route = {
-                    "target": "cube" if decision.cube is not None else "source",
-                    "cube": decision.cube,
-                    "reason": decision.reason,
-                    "pushed_filter": req.filter_sql,
-                    "rewritten_group_by": list(decision.rewritten_group_by),
-                    "hybrid": "pass tail= to query() to merge unabsorbed "
-                              "source rows with the cube cells",
-                }
-                if special_note is not None:
-                    route["rewrite"] = special_note
-                if rewrite_kind is not None:
-                    route["rewrite"] = (
-                        f"trailing ${rewrite_kind} rewritten into its $group "
-                        "definition for routing"
-                    )
-                if decision.cube is None:
-                    refusals.append(f"router: {decision.reason}")
+            filter_sql, dims, parts, out_cols = (
+                aggregate_requests_from_pipeline(pipeline))
         except PipelineError as e:
             route = {
                 "target": "source",
                 "cube": None,
                 "reason": f"not a routable [$match?, $group] aggregate: {e}",
                 "pushed_filter": None,
+                "parts": [],
             }
             refusals.append(f"cube routing: {e}")
+        else:
+            routed = [(part, req, self.router.route(req))  # metadata-only
+                      for part, req in _part_requests(source, filter_sql, dims, parts)]
+            infos = []
+            for part, req, decision in routed:
+                family = part[0] if part[0] == "plain" else part[1][1]
+                infos.append({
+                    "family": family,
+                    "measures": [m[0] for m in req.measures],
+                    "cube": decision.cube,
+                    "reason": decision.reason,
+                })
+                if decision.cube is None:
+                    refusals.append(f"router[{family}]: {decision.reason}")
+            served = {p["cube"] for p in infos}
+            route = {
+                "target": "source" if None in served else "cube",
+                # `cube` names the serving cube only when every part
+                # shares one; `cubes` lists every serving cube and
+                # `parts` is authoritative per part (ADVICE r11:
+                # consumers keying on `cube` alone misread a
+                # fully-routed mixed query as unrouted)
+                "cube": infos[0]["cube"] if len(served) == 1 else None,
+                "cubes": sorted(served - {None}),
+                "pushed_filter": filter_sql,
+                "parts": infos,
+                "hybrid": "pass tail= to query() to merge unabsorbed "
+                          "source rows with the cube cells",
+            }
+            if len(routed) == 1:
+                [(part, _req, decision)] = routed
+                route["reason"] = decision.reason
+                route["rewritten_group_by"] = list(decision.rewritten_group_by)
+                if part[0] == "special":
+                    route["rewrite"] = (
+                        f"special-family aggregate → ({part[1][0]!r}, "
+                        f"{part[1][1]!r}, ...) exact two-level route"
+                        + (f"; post-transform: {part[2]}" if part[2] else ""))
+            else:
+                route["reason"] = (
+                    "mixed-family aggregate: " + (
+                        "some parts fall back to source aggregation"
+                        if None in served else "every part cube-served"))
+                route["rewritten_group_by"] = [d.name for d in dims]
+                route["rewrite"] = (
+                    f"mixed aggregate → {len(infos)} routed family parts "
+                    f"joined on the group keys; output columns {out_cols}")
+            if parts[-1][0] == "present":
+                route["rewrite"] = (
+                    f"trailing ${parts[-1][1]} rewritten into its $group "
+                    "definition for routing")
         stages = []
         for st in pipeline:
             name = next(iter(st))
@@ -731,195 +613,109 @@ class OlapEngine:
         source_df: DataFrame | None = None,
     ) -> DataFrame:
         """Serve a Mongo aggregation pipeline — the reference's full
-        loop: a routable ``[$match?, $group]`` aggregate is answered
-        from the smallest sufficient cube (metadata-only routing, zero
-        source scan); anything else compiles directly over
+        loop: a routable aggregate (``aggregate_requests_from_pipeline``)
+        is answered part by part from the smallest sufficient cube
+        (metadata-only routing, zero source scan) or the router's
+        source fallback; anything else compiles directly over
         ``source_df``. Output columns carry the pipeline's own dim and
         accumulator names either way."""
         from mongo_olap_spark.plans.pipeline_compiler import (
             PipelineError,
+            aggregate_requests_from_pipeline,
             compile_pipeline,
-            cube_spec_from_pipeline,
-            mixed_requests_from_pipeline,
-            special_request_from_pipeline,
         )
 
-        # $sortByCount IS [$group {_id, count}, $sort {count: -1}] —
-        # rewrite a trailing one into the routable named-dim form so a
-        # count cube answers it metadata-only (r6); the sort re-applies
-        # on the routed (tiny) result
-        routable, kind = _routable_rewrite(pipeline)
-        sort_by_count = kind == "sortByCount"
-        count_alias = pipeline[-1]["$count"] if kind == "count" else None
         try:
-            shape = cube_spec_from_pipeline("q", source, routable)
-        except PipelineError as cube_err:
-            # not a plain count/sum/avg/min/max/stddev aggregate — the
-            # single-accumulator special families (C19–C24) route
-            # through their own request vocabulary (r10)
-            try:
-                special = special_request_from_pipeline(routable)
-            except PipelineError:
-                # a $group MIXING families — plain + special, or
-                # several specials — decomposes into per-family routed
-                # requests joined on the group keys (r11)
-                try:
-                    mixed = mixed_requests_from_pipeline(routable)
-                except PipelineError:
-                    if source_df is None:
-                        raise cube_err from None
-                    return compile_pipeline(source_df, pipeline)
-                return self._query_mixed_pipeline(mixed, source, source_df)
-            return self._query_special_pipeline(special, source, source_df)
-        pipeline = routable
-        req = AggregateRequest(
-            source=source,
-            group_by=tuple(
-                (d.source_path, d.granularity) if d.granularity else d.source_path
-                for d in shape.dimensions
-            ),
-            measures=tuple(
-                (m.name, m.op, m.path) if m.path else (m.name, m.op)
-                for m in shape.measures
-            ),
-            filter_sql=shape.filter_sql,
-        )
-        decision = self.router.route(req)  # metadata-only
-        out = self.router.execute(req, source_df=source_df)
-        if decision.cube is not None:
-            cur = [
-                g if isinstance(g, str) else g[0]
-                for g in decision.rewritten_group_by
-            ]
-        else:
-            cur = [
-                g if isinstance(g, str) else f"{g[0]}_{g[1]}" for g in req.group_by
-            ]
-        for old, new in zip(cur, [d.name for d in shape.dimensions]):
-            if old != new:
-                out = out.withColumnRenamed(old, new)
-        if sort_by_count:
-            out = out.withColumnRenamed("__sbc", "_id").orderBy(
-                F.desc("count"), "_id"
-            )
-        elif count_alias is not None:
-            # Mongo $count emits {alias: N} — and NO document at all
-            # over empty input (the zero-dim group has no row to count)
-            out = out.select(F.col("__cnt").alias(count_alias))
-        return out
+            parsed = aggregate_requests_from_pipeline(pipeline)
+        except PipelineError:
+            if source_df is None:
+                raise
+            return compile_pipeline(source_df, pipeline)
+        return self._serve_parts(source, source_df, *parsed)
 
-    def _query_special_pipeline(
+    def _serve_parts(
         self,
-        special: tuple,
         source: str,
         source_df: DataFrame | None,
+        filter_sql: str | None,
+        dims: list,
+        parts: list,
+        out_cols: list[str],
     ) -> DataFrame:
-        """Serve a special-family aggregate pipeline ($median /
-        $percentile / $minN / $maxN / $topN / $bottomN /
-        $addToSet+$size) through the router's C19–C24 vocabulary —
-        metadata-only when an exact two-level cube covers it, else the
-        router's own two-level source fallback (SAME rollup either
-        way, so the answer never depends on cube presence)."""
-        filter_sql, dims, measure, post = special
-        req = AggregateRequest(
-            source=source,
-            group_by=tuple(
-                (d.source_path, d.granularity) if d.granularity else d.source_path
-                for d in dims
-            ),
-            measures=(measure,),
-            filter_sql=filter_sql,
-        )
-        decision = self.router.route(req)  # metadata-only
-        out = self.router.execute(req, source_df=source_df)
-        if decision.cube is not None:
-            cur = [
-                g if isinstance(g, str) else g[0]
-                for g in decision.rewritten_group_by
-            ]
-        else:
-            cur = [
-                g if isinstance(g, str) else f"{g[0]}_{g[1]}" for g in req.group_by
-            ]
-        for old, new in zip(cur, [d.name for d in dims]):
-            if old != new:
-                out = out.withColumnRenamed(old, new)
-        alias = measure[0]
-        if post == "array_wrap":
-            # $percentile emits an array even for a single p
-            out = out.withColumn(alias, F.array(F.col(alias)))
-        return out
+        """Answer a parsed aggregate: route each part once and run it —
+        metadata-only when a cube covers the part, else the router's
+        source fallback over ``source_df`` — then name the group keys
+        as the pipeline does and join the part frames on them.
 
-    def _query_mixed_pipeline(
-        self,
-        mixed: tuple,
-        source: str,
-        source_df: DataFrame | None,
-    ) -> DataFrame:
-        """Serve a mixed-family aggregate pipeline — a $group combining
-        plain accumulators with special exact families, or several
-        specials — by routing EACH family part independently
-        (different parts may be answered by different cubes, one
-        shared two-level cube, or the router's source fallback) and
-        joining the one-row-per-group part frames on the group keys
-        (r11, VERDICT r10 task 1).
-
-        Answer-consistency note: every part goes through
-        ``router.execute`` whether a cube serves it or not — the
-        routed and source-fallback paths share the same rollup per
-        family, so the answer never depends on cube presence. (A
-        ``compile_pipeline`` fallback would NOT be bit-identical: the
-        compiled $group $median is Spark's interpolated ``median``,
-        while the routed family serves the exact type-1 discrete
-        quantile.) The cost of a fully-unrouted mixed aggregate is one
-        source aggregation per family — create the advised cubes, or
-        call ``compile_pipeline`` directly, if single-pass Mongo
-        semantics are wanted instead.
+        Answer-consistency note: the routed and source-fallback paths
+        share the same rollup per family, so the answer never depends
+        on cube presence. (A ``compile_pipeline`` fallback would NOT be
+        bit-identical: the compiled $group $median is Spark's
+        interpolated ``median``, while the routed family serves the
+        exact type-1 discrete quantile.) The cost of a fully-unrouted
+        mixed aggregate is one source aggregation per family — create
+        the advised cubes, or call ``compile_pipeline`` directly, if
+        single-pass Mongo semantics are wanted instead.
 
         Scale: the join keys are the GROUP KEYS of already-aggregated
         frames — output-sized inputs, not source-sized; AQE broadcasts
         the small sides. Null group keys join null-safe (Mongo groups
         null/missing keys as a real group).
         """
-        filter_sql, dims, parts, out_cols = mixed
-        gb = tuple(
-            (d.source_path, d.granularity) if d.granularity else d.source_path
-            for d in dims
-        )
         dim_names = [d.name for d in dims]
         frames = []
-        for part in parts:
-            if part[0] == "plain":
-                measures, post = part[1], None
-            else:
-                measures, post = (part[1],), part[2]
-            req = AggregateRequest(
-                source=source, group_by=gb, measures=measures,
-                filter_sql=filter_sql,
-            )
+        for part, req in _part_requests(source, filter_sql, dims, parts):
             decision = self.router.route(req)  # metadata-only
-            out = self.router.execute(req, source_df=source_df)
+            out = self.router.run(req, decision, source_df)
             if decision.cube is not None:
-                cur = [
-                    g if isinstance(g, str) else g[0]
-                    for g in decision.rewritten_group_by
-                ]
+                cur = [g if isinstance(g, str) else g[0]
+                       for g in decision.rewritten_group_by]
             else:
-                cur = [
-                    g if isinstance(g, str) else f"{g[0]}_{g[1]}"
-                    for g in req.group_by
-                ]
+                cur = [g if isinstance(g, str) else f"{g[0]}_{g[1]}"
+                       for g in req.group_by]
             for old, new in zip(cur, dim_names):
                 if old != new:
                     out = out.withColumnRenamed(old, new)
-            if post == "array_wrap":
+            if part[0] == "special" and part[2] == "array_wrap":
+                # $percentile emits an array even for a single p
                 alias = part[1][0]
                 out = out.withColumn(alias, F.array(F.col(alias)))
             frames.append(out)
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = _join_on_group_keys(merged, f, dim_names)
-        return merged.select(*dim_names, *out_cols)
+        out = frames[0]
+        if len(frames) > 1:
+            for f in frames[1:]:
+                out = _join_on_group_keys(out, f, dim_names)
+            out = out.select(*dim_names, *out_cols)
+        present = parts[-1]
+        if present[0] != "present":
+            return out
+        if present[1] == "sortByCount":
+            # the sort re-applies on the routed (tiny) result
+            return out.withColumnRenamed("__sbc", "_id").orderBy(
+                F.desc("count"), "_id"
+            )
+        # Mongo $count emits {alias: N} — and NO document at all over
+        # empty input (the zero-dim group has no row to count)
+        return out.select(F.col("__cnt").alias(present[2]))
+
+
+def _part_requests(
+    source: str, filter_sql: str | None, dims: list, parts: list
+) -> list[tuple[tuple, AggregateRequest]]:
+    """``(part, request)`` for every part of a parsed aggregate that
+    routes (the presentation step has no request)."""
+    gb = tuple(
+        (d.source_path, d.granularity) if d.granularity else d.source_path
+        for d in dims
+    )
+    return [
+        (part, AggregateRequest(
+            source=source, group_by=gb,
+            measures=part[1] if part[0] == "plain" else (part[1],),
+            filter_sql=filter_sql,
+        ))
+        for part in parts if part[0] != "present"
+    ]
 
 
 def _join_on_group_keys(
@@ -948,28 +744,3 @@ def _join_on_group_keys(
     sel += [F.col(f"__mxl.`{c}`") for c in left.columns if c not in dim_names]
     sel += [F.col(f"__mxr.`{c}`") for c in right.columns if c not in dim_names]
     return joined.select(*sel)
-
-
-def _routable_rewrite(pipeline: list) -> tuple[list, str | None]:
-    """Rewrite trailing $sortByCount / $count into their $group
-    definitions so the router can serve them from cubes (r6).
-
-    $sortByCount IS [$group {_id, count}, $sort {count: -1}];
-    $count IS the zero-dimension rollup (summed count partials).
-    Returns (routable_pipeline, kind) with kind in
-    {"sortByCount", "count", None}.
-    """
-    if (pipeline and list(pipeline[-1]) == ["$sortByCount"]
-            and isinstance(pipeline[-1]["$sortByCount"], str)
-            and pipeline[-1]["$sortByCount"].startswith("$")):
-        return pipeline[:-1] + [{"$group": {
-            "_id": {"__sbc": pipeline[-1]["$sortByCount"]},
-            "count": {"$sum": 1},
-        }}], "sortByCount"
-    if (pipeline and list(pipeline[-1]) == ["$count"]
-            and isinstance(pipeline[-1]["$count"], str)
-            and pipeline[-1]["$count"]):
-        return pipeline[:-1] + [{"$group": {
-            "_id": {}, "__cnt": {"$sum": 1},
-        }}], "count"
-    return pipeline, None

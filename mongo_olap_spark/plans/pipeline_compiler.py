@@ -4507,6 +4507,32 @@ def _cube_dims(id_spec) -> list:
     return dims
 
 
+#: the plain accumulators (field-path argument) and the request op
+#: each routes as; ``{$sum: 1}`` is the count
+_PLAIN_OPS = {
+    "$sum": "sum", "$avg": "avg", "$min": "min", "$max": "max",
+    "$stdDevPop": "stddev_pop", "$stdDevSamp": "stddev_samp",
+}
+
+
+def _plain_acc_measure(gname: str, op: str, arg) -> tuple | None:
+    """Translate ONE plain ``$group`` accumulator into the router's
+    measure-tuple vocabulary — the map shared by cube definition
+    (:func:`cube_spec_from_pipeline`) and routing
+    (:func:`aggregate_requests_from_pipeline`). None when ``op`` is not
+    a plain accumulator."""
+    if op == "$sum" and isinstance(arg, (int, float)) and not isinstance(arg, bool):
+        # {$sum: c} answers c × the row count: only c = 1 is a count
+        if arg != 1:
+            raise PipelineError("literal $sum must be {$sum: 1} (count)")
+        return (gname, "count")
+    if op not in _PLAIN_OPS:
+        return None
+    if not (isinstance(arg, str) and arg.startswith("$")):
+        raise PipelineError(f"accumulator {op} needs a field path")
+    return (gname, _PLAIN_OPS[op], arg[1:])
+
+
 def cube_spec_from_pipeline(name: str, source: str, pipeline: list[dict]):
     """Translate a ``[$match?, $group]`` pipeline into a CubeSpec.
 
@@ -4530,21 +4556,10 @@ def cube_spec_from_pipeline(name: str, source: str, pipeline: list[dict]):
         if mname == "_id":
             continue
         [(op, arg)] = mspec.items()
-        if op == "$sum" and isinstance(arg, (int, float)) and not isinstance(arg, bool):
-            measures.append(Measure(mname, "count"))
-        elif op in ("$sum", "$avg", "$min", "$max"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            measures.append(Measure(mname, op[1:], path=arg[1:]))
-        elif op in ("$stdDevPop", "$stdDevSamp"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            measures.append(Measure(
-                mname, "stddev_pop" if op == "$stdDevPop" else "stddev_samp",
-                path=arg[1:],
-            ))
-        else:
+        m = _plain_acc_measure(mname, op, arg)
+        if m is None:
             raise PipelineError(f"unsupported cube accumulator {op!r}")
+        measures.append(Measure(*m))
 
     return CubeSpec(
         name=name, source=source,
@@ -4553,116 +4568,12 @@ def cube_spec_from_pipeline(name: str, source: str, pipeline: list[dict]):
     )
 
 
-def special_request_from_pipeline(
-    pipeline: list[dict],
-) -> tuple[str | None, list, tuple, str | None]:
-    """Parse an aggregate pipeline whose single accumulator is one of
-    the exact special families (C19–C24) into the router's request
-    vocabulary — the last mile of pipeline-level routing (VERDICT r9
-    task 1): without this, a ``$median``/``$percentile``/``$minN``/
-    ``$maxN``/``$topN``/``$bottomN``/``$addToSet``+``$size`` pipeline
-    silently fell back to a full source compile even when a two-level
-    cube could answer it metadata-only.
-
-    Recognized shapes (everything else raises PipelineError so the
-    caller keeps its compile fallback):
-
-    - ``[$match?, $group {_id, out: {$median: {input: "$p"}}}]``
-      → ``(out, "quantile_exact", p, 0.5)``
-    - ``[$match?, $group {_id, out: {$percentile: {input, p: [q]}}}]``
-      (single q) → ``(out, "quantile_exact", p, q)`` + array_wrap post;
-      multi-p (r10) → ``(out, "quantile_exact", p, (q1, q2, …))`` —
-      quantile_rollup answers every p from ONE window pass, emitting
-      the array in p order (already Mongo's output shape)
-    - ``[$match?, $group {_id, out: {$minN|$maxN: {input, n}}}]``
-      → ``(out, "min_n"|"max_n", p, n)``
-    - ``[$match?, $group {_id, out: {$topN|$bottomN: {n, sortBy:
-      {s: ±1}, output: "$p"}}}]`` → ``(out, "top_by"|"bottom_by", s,
-      p, n[, present_desc])``; a DESCENDING sortBy swaps the selection
-      op and sets the present_desc flag (Mongo presents in sortBy
-      order)
-    - ``[$match?, $group {_id, tmp: {$addToSet: "$p"}},
-      $project {out: {$size: "$tmp"}}]`` → ``(out, "count_distinct",
-      p)`` — the Mongo idiom for exact count-distinct
-
-    Returns ``(filter_sql, dims, measure_tuple, post)`` where ``post``
-    is an output transform tag: None | "array_wrap" (desc $topN/
-    $bottomN presentation rides INSIDE the measure tuple as the
-    present_desc flag, not as a post transform).
-
-    Semantics note: the quantile families answer with the engine's
-    exact type-1 discrete quantile (an actual data value) — Mongo's
-    own $median/$percentile are t-digest approximations, so exactness
-    here is a strict upgrade, and the ROUTED and source-FALLBACK paths
-    share the same rollup (router.execute builds the identical
-    two-level shape ad hoc), so answers never depend on cube presence.
-    """
-    tail_project: dict | None = None
-    body = pipeline
-    if len(pipeline) >= 2 and list(pipeline[-1]) == ["$project"]:
-        tail_project = pipeline[-1]["$project"]
-        body = pipeline[:-1]
-    filter_sql, group = _cube_pipeline_prefix(body, what="special aggregate")
-    dims = _cube_dims(group.get("_id"))
-    dim_names = {d.name for d in dims}
-    accs = {k: v for k, v in group.items() if k != "_id"}
-    if len(accs) != 1:
-        raise PipelineError(
-            "special-family routing needs exactly one accumulator "
-            f"(got {sorted(accs) or 'none'})"
-        )
-    [(gname, mspec)] = accs.items()
-    if not (isinstance(mspec, dict) and len(mspec) == 1):
-        raise PipelineError(f"accumulator for {gname!r} must be a single-op document")
-    [(op, arg)] = mspec.items()
-
-    def field_path(v, what):
-        if not (isinstance(v, str) and v.startswith("$")):
-            raise PipelineError(f"{op} {what} must be a field path")
-        return v[1:]
-
-    if tail_project is None and op != "$addToSet":
-        measure, post = _special_acc_measure(gname, op, arg)
-        if gname in dim_names:
-            raise PipelineError(f"output {gname!r} collides with a dimension")
-        return filter_sql, dims, measure, post
-    if tail_project is not None:
-        # only the $addToSet+$size idiom carries a trailing $project
-        if op != "$addToSet":
-            raise PipelineError(
-                "trailing $project is only routable over $addToSet (+$size)"
-            )
-        path = field_path(arg, "argument")
-        proj = {k: v for k, v in tail_project.items()
-                if not (k == "_id" and v in (1, True))}
-        sizes = [
-            (k, v) for k, v in proj.items()
-            if isinstance(v, dict) and list(v) == ["$size"]
-        ]
-        if len(sizes) != 1 or len(proj) != len(sizes):
-            raise PipelineError(
-                "count-distinct routing needs $project {out: {$size: "
-                "'$<set field>'}} (plus _id passthrough) and nothing else"
-            )
-        out_name, size_spec = sizes[0]
-        if size_spec["$size"] != f"${gname}":
-            raise PipelineError(
-                f"$size must reference the $addToSet field ${gname}"
-            )
-        if out_name in dim_names:
-            raise PipelineError(f"output {out_name!r} collides with a dimension")
-        return filter_sql, dims, (out_name, "count_distinct", path), None
-    raise PipelineError(f"accumulator {op!r} is not special-family routable")
-
-
 def _special_acc_measure(gname: str, op: str, arg) -> tuple[tuple, str | None]:
     """Translate ONE special-family $group accumulator into the
     router's measure-tuple vocabulary: ``(measure, post)`` where
-    ``post`` is None | "array_wrap". Shared by the single-accumulator
-    parse (:func:`special_request_from_pipeline`) and the
-    mixed-accumulator decomposition (:func:`mixed_requests_from_pipeline`,
-    r11). The $addToSet+$size idiom is NOT handled here — it needs the
-    trailing $project, parsed by the callers."""
+    ``post`` is None | "array_wrap". The $addToSet+$size idiom is NOT
+    handled here — it needs the trailing $project, parsed by
+    :func:`aggregate_requests_from_pipeline`."""
 
     def field_path(v, what):
         if not (isinstance(v, str) and v.startswith("$")):
@@ -4742,68 +4653,102 @@ def _special_acc_measure(gname: str, op: str, arg) -> tuple[tuple, str | None]:
     raise PipelineError(f"accumulator {op!r} is not special-family routable")
 
 
-def mixed_requests_from_pipeline(
+def _presentation(pipeline: list[dict]) -> tuple[list[dict], tuple | None]:
+    """Rewrite a trailing $sortByCount / $count into its $group
+    definition so a count cube answers it (r6): $sortByCount IS
+    [$group {_id, count: {$sum: 1}}, $sort {count: -1}]; $count IS the
+    zero-dimension rollup. Returns the pipeline to route and the
+    presentation step the answer then takes."""
+    last = pipeline[-1] if pipeline else {}
+    arg = next(iter(last.values())) if len(last) == 1 else None
+    if not (isinstance(arg, str) and arg):
+        return pipeline, None
+    if "$sortByCount" in last and arg.startswith("$"):
+        return pipeline[:-1] + [{"$group": {
+            "_id": {"__sbc": arg}, "count": {"$sum": 1},
+        }}], ("present", "sortByCount")
+    if "$count" in last:
+        return pipeline[:-1] + [{"$group": {
+            "_id": {}, "__cnt": {"$sum": 1},
+        }}], ("present", "count", arg)
+    return pipeline, None
+
+
+def aggregate_requests_from_pipeline(
     pipeline: list[dict],
 ) -> tuple[str | None, list, list, list[str]]:
-    """Parse a ``[$match?, $group[, $project]]`` aggregate whose
-    ``$group`` MIXES accumulator families — plain (count/sum/avg/min/
-    max/stddev) together with one-or-more exact special families
-    ($median / $percentile / $minN / $maxN / $topN / $bottomN /
-    $addToSet+$size), or several specials on one group — into
-    per-family routed request parts sharing the group keys (VERDICT
-    r10 task 1: this shape previously fell back to a full source
-    compile even when one two-level cube could answer every family).
+    """Parse a routable aggregate — ``[$match?, $group[, $project]]``,
+    or ``[$match?, $sortByCount | $count]`` — into router request parts
+    sharing the group keys: the one parse behind
+    ``OlapEngine.query_pipeline``, ``explain`` and ``advise_cubes``.
+
+    Accumulators:
+
+    - plain: ``{$sum: 1}`` → ``(out, "count")``; ``$sum`` / ``$avg`` /
+      ``$min`` / ``$max`` / ``$stdDevPop`` / ``$stdDevSamp`` over
+      ``"$p"`` → ``(out, op, p)``. Any other literal ``$sum`` refuses.
+    - special (C19–C24, each an exact two-level route): ``$median`` →
+      ``(out, "quantile_exact", p, 0.5)``; ``$percentile`` with a
+      single literal p → ``(out, "quantile_exact", p, q)`` plus the
+      ``array_wrap`` post, with several → ``(…, (q1, q2, …))`` (the
+      rollup emits the array in p order); ``$minN`` / ``$maxN`` →
+      ``(out, "min_n"|"max_n", p, n)``; ``$topN`` / ``$bottomN`` with
+      a single-key sortBy ``{s: ±1}`` and ``output: "$p"`` →
+      ``(out, "top_by"|"bottom_by", s, p, n[, present_desc])`` (a
+      descending sortBy swaps the selection op and presents in sortBy
+      order, as Mongo does).
+    - ``{tmp: {$addToSet: "$p"}}`` consumed by a trailing ``$project
+      {out: {$size: "$tmp"}}`` → ``(out, "count_distinct", p)``, the
+      Mongo count-distinct idiom. The ``$project`` may also pass other
+      accumulators through with ``1``/``true`` (``_id`` must not be
+      excluded — the group keys are the join keys); accumulators it
+      drops are not computed, and a ``{$size}`` output named like
+      another accumulator replaces it (Mongo inclusion-``$project``
+      semantics). A raw ``$addToSet`` that no ``$size`` consumes
+      refuses: distinct SETS are not a bounded routable answer.
+
+    ``_id`` is a ``{dim: "$path" | {$dateTrunc: {date, unit}}}``
+    document (``{}`` = one global group); ``_id: null`` routes only a
+    lone special accumulator.
 
     Returns ``(filter_sql, dims, parts, out_cols)``:
 
-    - ``parts``: request parts, each ``("plain", measures_tuple)``
-      (ALL plain accumulators ride in ONE request — one rollup) or
-      ``("special", measure_tuple, post)`` (each special family is its
-      own single-measure request: the two-level rollups aggregate the
-      qualifying-cell *slice*, so they cannot share a request with
-      measures that aggregate all cells).
-    - ``out_cols``: final output accumulator names in presentation
+    - ``parts``: ``("plain", measures)`` holding EVERY plain
+      accumulator (one rollup), then one ``("special", measure, post)``
+      per special accumulator (a two-level rollup aggregates the
+      qualifying-cell *slice*, so it cannot share a request with
+      measures that aggregate all cells). A trailing $sortByCount /
+      $count adds a last ``("present", "sortByCount")`` /
+      ``("present", "count", alias)`` step: it has no request, it
+      shapes the routed answer.
+    - ``out_cols``: the requested accumulator names in presentation
       order (the $group's order, or the trailing $project's).
 
-    The serving side (``OlapEngine._query_mixed_pipeline``) routes
-    each part independently — different parts may be answered by
+    Each part is routed on its own (different parts may be answered by
     different cubes, one shared two-level cube, or the router's source
-    fallback — and joins the per-part frames on the group keys
-    (null-safe; every part emits one row per group).
+    fallback) and the part frames join on the group keys. The quantile
+    families answer with the engine's exact type-1 discrete quantile
+    (an actual data value) — Mongo's own $median/$percentile are
+    t-digest approximations — and the routed and source-fallback paths
+    share the same rollup, so answers never depend on cube presence.
 
-    The trailing ``$project`` is recognized only in the Mongo
-    count-distinct idiom: ``{out: {$size: "$<$addToSet field>"}}``
-    entries plus ``1``/``true`` passthroughs of other accumulator
-    names (``_id`` must not be excluded — the group keys are the join
-    keys). Accumulators dropped by an inclusion projection are not
-    computed. A raw ``$addToSet`` that no ``$size`` consumes refuses
-    (distinct SETS are not a bounded routable answer).
-
-    Anything else raises :class:`PipelineError` so the caller keeps
-    its compile fallback.
+    Anything else raises :class:`PipelineError`: the caller compiles
+    the pipeline instead.
     """
+    pipeline, present = _presentation(pipeline)
     tail_project: dict | None = None
     body = pipeline
     if len(pipeline) >= 2 and list(pipeline[-1]) == ["$project"]:
         tail_project = pipeline[-1]["$project"]
         body = pipeline[:-1]
-    filter_sql, group = _cube_pipeline_prefix(body, what="mixed aggregate")
-    id_spec = group.get("_id")
-    if id_spec is None:
-        raise PipelineError("mixed routing needs a {dim: expr} _id document")
-    dims = _cube_dims(id_spec)
+    filter_sql, group = _cube_pipeline_prefix(body, what="routable aggregate")
+    dims = _cube_dims(group.get("_id"))
     dim_names = {d.name for d in dims}
     accs = {k: v for k, v in group.items() if k != "_id"}
-    if len(accs) < 2:
-        raise PipelineError(
-            "mixed routing needs two or more accumulators (single-"
-            "accumulator aggregates take the cube_spec/special paths)"
-        )
     plain: list[tuple] = []
     specials: list[tuple] = []  # (measure_tuple, post)
     sets: dict[str, str] = {}   # $addToSet accumulators: name -> path
     order: list[str] = []       # $group accumulator order
-    n_special = 0
     for gname, mspec in accs.items():
         if gname in dim_names:
             raise PipelineError(
@@ -4818,33 +4763,10 @@ def mixed_requests_from_pipeline(
                 raise PipelineError(
                     "routable $addToSet needs a field-path argument")
             sets[gname] = arg[1:]
-            n_special += 1
-        elif (op == "$sum" and isinstance(arg, (int, float))
-                and not isinstance(arg, bool)):
-            if arg != 1:
-                raise PipelineError(
-                    "routable literal $sum must be {$sum: 1} (count)")
-            plain.append((gname, "count"))
-        elif op in ("$sum", "$avg", "$min", "$max"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            plain.append((gname, op[1:], arg[1:]))
-        elif op in ("$stdDevPop", "$stdDevSamp"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            plain.append((
-                gname,
-                "stddev_pop" if op == "$stdDevPop" else "stddev_samp",
-                arg[1:],
-            ))
+        elif (m := _plain_acc_measure(gname, op, arg)) is not None:
+            plain.append(m)
         else:
-            measure, post = _special_acc_measure(gname, op, arg)
-            specials.append((measure, post))
-            n_special += 1
-    if n_special == 0:
-        raise PipelineError(
-            "no special-family accumulator — plain aggregates route "
-            "via cube_spec_from_pipeline")
+            specials.append(_special_acc_measure(gname, op, arg))
     if sets and tail_project is None:
         raise PipelineError(
             "$addToSet routes only through the trailing "
@@ -4860,10 +4782,10 @@ def mixed_requests_from_pipeline(
         idv = proj.pop("_id", 1)
         if idv in (0, False):
             raise PipelineError(
-                "mixed routing cannot exclude _id (the group keys are "
+                "routing cannot exclude _id (the group keys are "
                 "the join keys of the decomposed answer)")
         if idv not in (1, True):
-            raise PipelineError("mixed routing supports _id passthrough only")
+            raise PipelineError("routing supports _id passthrough only")
         consumed: set[str] = set()
         out_cols: list[str] = []
         for k, v in proj.items():
@@ -4900,12 +4822,12 @@ def mixed_requests_from_pipeline(
             elif v in (1, True) and not isinstance(v, dict):
                 if k not in order or k in sets:
                     raise PipelineError(
-                        f"mixed routing: projection of {k!r} must pass "
+                        f"routing: projection of {k!r} must pass "
                         "through a non-set accumulator")
                 out_cols.append(k)
             else:
                 raise PipelineError(
-                    f"mixed routing: unsupported projection {k!r}: {v!r} "
+                    f"routing: unsupported projection {k!r}: {v!r} "
                     "(only {$size: '$<set>'} and 1/true passthrough)")
         missing = set(sets) - consumed
         if missing:
@@ -4926,7 +4848,19 @@ def mixed_requests_from_pipeline(
     for measure, post in specials:
         parts.append(("special", measure, post))
     if not parts:
-        raise PipelineError("projection dropped every accumulator")
+        raise PipelineError("no accumulator to route")
+    if group.get("_id") is None:
+        hint = "(name the group keys, or _id: {} for one global group)"
+        if len(accs) > 1:
+            raise PipelineError(
+                "_id: null routes only a lone special-family accumulator, "
+                f"not two or more accumulators {hint}")
+        if parts[0][0] != "special":
+            raise PipelineError(
+                "_id: null routes only a lone special-family accumulator; "
+                f"this $group has no special-family accumulator {hint}")
+    if present is not None:
+        parts.append(present)
     return filter_sql, dims, parts, out_cols
 
 

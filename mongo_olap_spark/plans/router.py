@@ -422,6 +422,7 @@ class CubeRouter:
     # -- routing ------------------------------------------------------------
     def route(self, req: AggregateRequest) -> RoutingDecision:
         candidates: list[tuple[int, str, list, dict, tuple | None]] = []
+        refused: list[str] = []
         for name in self.catalog.list_cubes():
             spec = self.catalog.get_spec(name)
             ok, rewritten, renames, why, distinct = self._serves(spec, req)
@@ -430,8 +431,11 @@ class CubeRouter:
                     (self._cost(spec, req, rewritten, distinct), name, rewritten,
                      renames, distinct)
                 )
+            else:
+                refused.append(f"{name}: {why}")
         if not candidates:
-            return RoutingDecision(None, "no cube serves the request")
+            return RoutingDecision(None, "no cube serves the request" + (
+                f" ({'; '.join(refused)})" if refused else ""))
         n, name, rewritten, renames, special = min(
             candidates, key=lambda c: (c[0], c[1])
         )
@@ -445,12 +449,18 @@ class CubeRouter:
         )
 
     def execute(self, req: AggregateRequest, source_df: DataFrame | None = None) -> DataFrame:
-        """Route and run. Falls back to direct aggregation over
-        ``source_df`` when no cube qualifies (the reference would
-        rescan the collection)."""
+        """Route and run (see :meth:`run`)."""
+        return self.run(req, self.route(req), source_df)
+
+    def run(
+        self, req: AggregateRequest, decision: RoutingDecision,
+        source_df: DataFrame | None = None,
+    ) -> DataFrame:
+        """Answer ``req`` as ``decision`` (its :meth:`route`) says.
+        Falls back to direct aggregation over ``source_df`` when no
+        cube qualifies (the reference would rescan the collection)."""
         from pyspark.sql import functions as F
 
-        decision = self.route(req)
         if decision.cube is not None:
             spec = self.catalog.get_spec(decision.cube)
             cells = self.catalog.cells(decision.cube)

@@ -157,6 +157,48 @@ def test_avg_count_is_not_a_cell_row_count(spark):
             "a": (2, 0), "b": (2, 2)}
 
 
+COUNT_SUM_AVG = CubeSpec(
+    name="csa", source="t", dimensions=(Dimension("g"),),
+    measures=(Measure("n", "count"), Measure("s", "sum", "w"),
+              Measure("aw", "avg", "w")))
+
+
+def _answers(spec, cells):
+    return sorted(tuple(r) for r in query_cube(cells, spec).collect())
+
+
+def test_merge_keeps_untouched_null_sum_null(spark):
+    """A group whose values are all NULL has a NULL sum. A merge with a
+    batch that never touches it used to coalesce both sides to 0, and
+    the avg then failed the whole query with DIVIDE_BY_ZERO."""
+    src = spark.createDataFrame(
+        [("a", None), ("a", None), ("b", 1.0)], "g string, w double")
+    ins = spark.createDataFrame([("b", 3.0, 1)], "g string, w double, mult int")
+    merged = merge_cells(build_cube(spark, COUNT_SUM_AVG, src),
+                         delta_cells(COUNT_SUM_AVG, ins), COUNT_SUM_AVG)
+    rebuilt = build_cube(spark, COUNT_SUM_AVG, src.unionByName(ins.drop("mult")))
+    assert _answers(COUNT_SUM_AVG, merged) == _answers(COUNT_SUM_AVG, rebuilt) == [
+        ("a", 2, None, None), ("b", 2, 4.0, 2.0)]
+
+
+def test_delete_last_value_of_group_answers_null_avg(spark):
+    """Deleting a group's last non-null value while it keeps rows
+    leaves no value to average: the avg answers NULL, as a rebuild
+    does, instead of 0/0."""
+    src = spark.createDataFrame(
+        [("a", None), ("a", 2.0), ("b", 1.0)], "g string, w double")
+    dele = spark.createDataFrame([("a", 2.0, -1)], "g string, w double, mult int")
+    merged = merge_cells(build_cube(spark, COUNT_SUM_AVG, src),
+                         delta_cells(COUNT_SUM_AVG, dele), COUNT_SUM_AVG)
+    rebuilt = build_cube(spark, COUNT_SUM_AVG, src.filter("w IS NULL OR g = 'b'"))
+    got = {r[0]: tuple(r[1:]) for r in _answers(COUNT_SUM_AVG, merged)}
+    want = {r[0]: tuple(r[1:]) for r in _answers(COUNT_SUM_AVG, rebuilt)}
+    assert want == {"a": (1, None, None), "b": (1, 1.0, 1.0)}
+    # the stored sum keeps the retracted 0 (sum stores no count of
+    # non-null values), so only the avg and the count match the rebuild
+    assert got == {"a": (1, 0.0, None), "b": (1, 1.0, 1.0)}
+
+
 def test_minmax_recompute_repairs_null_dim_cells(spark, events):
     """ADVICE r1: recompute_cells must join null-safely — deleting the
     max inside a NULL-valued dimension cell has to repair that cell,

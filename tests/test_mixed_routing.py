@@ -4,9 +4,9 @@ A $group combining PLAIN accumulators (count/sum/avg/min/max/stddev)
 with one-or-more exact SPECIAL families ($median/$percentile/$minN/
 $maxN/$topN/$bottomN/$addToSet+$size) — or several specials together —
 decomposes into per-family routed requests joined on the group keys:
-mixed_requests_from_pipeline (parse) + OlapEngine._query_mixed_pipeline
+aggregate_requests_from_pipeline (parse) + OlapEngine._serve_parts
 (serve). Routed and source-fallback answers must agree bit-for-bit
-(both go through router.execute, which shares the rollup per family).
+(both go through router.run, which shares the rollup per family).
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from mongo_olap_spark.cube import CubeSpec, Dimension, Measure
 from mongo_olap_spark.engine import OlapEngine
 from mongo_olap_spark.plans.pipeline_compiler import (
     PipelineError,
-    mixed_requests_from_pipeline,
+    aggregate_requests_from_pipeline,
 )
 
 MIXED = [{"$group": {"_id": {"et": "$event_type"},
@@ -31,7 +31,7 @@ MIXED = [{"$group": {"_id": {"et": "$event_type"},
 # ---------------------------------------------------------------------------
 
 def test_parse_plain_plus_special():
-    filter_sql, dims, parts, out_cols = mixed_requests_from_pipeline(MIXED)
+    filter_sql, dims, parts, out_cols = aggregate_requests_from_pipeline(MIXED)
     assert filter_sql is None
     assert [d.name for d in dims] == ["et"]
     assert out_cols == ["med", "n", "lo"]
@@ -42,7 +42,7 @@ def test_parse_plain_plus_special():
 
 
 def test_parse_match_prefix_and_two_specials():
-    filter_sql, dims, parts, out_cols = mixed_requests_from_pipeline([
+    filter_sql, dims, parts, out_cols = aggregate_requests_from_pipeline([
         {"$match": {"value": {"$gt": 10}}},
         {"$group": {"_id": {"et": "$event_type"},
                     "med": {"$median": {"input": "$value"}},
@@ -56,7 +56,7 @@ def test_parse_match_prefix_and_two_specials():
 
 
 def test_parse_addtoset_size_idiom_with_passthrough_and_drop():
-    _f, _d, parts, out_cols = mixed_requests_from_pipeline([
+    _f, _d, parts, out_cols = aggregate_requests_from_pipeline([
         {"$group": {"_id": {"et": "$event_type"},
                     "users": {"$addToSet": "$user_id"},
                     "n": {"$sum": 1},
@@ -72,12 +72,26 @@ def test_parse_addtoset_size_idiom_with_passthrough_and_drop():
     assert cd[1] == ("nu", "count_distinct", "user_id")
 
 
+def test_parse_lone_and_all_plain_are_one_part():
+    # one parser for every routable $group: a lone special and an
+    # all-plain group are one-part decompositions
+    _f, _d, parts, out_cols = aggregate_requests_from_pipeline([
+        {"$group": {"_id": {"et": "$e"}, "m": {"$median": {"input": "$v"}}}}])
+    assert parts == [("special", ("m", "quantile_exact", "v", 0.5), None)]
+    assert out_cols == ["m"]
+    _f, _d, parts, out_cols = aggregate_requests_from_pipeline([
+        {"$group": {"_id": {"et": "$e"}, "n": {"$sum": 1}, "s": {"$sum": "$v"}}}])
+    assert parts == [("plain", (("n", "count"), ("s", "sum", "v")))]
+    assert out_cols == ["n", "s"]
+
+
 @pytest.mark.parametrize("pipe,msg", [
-    # single accumulator: not mixed (other paths own it)
-    ([{"$group": {"_id": {"et": "$e"}, "m": {"$median": {"input": "$v"}}}}],
+    # _id: null routes only a lone special accumulator: not two ...
+    ([{"$group": {"_id": None, "m": {"$median": {"input": "$v"}},
+                  "n": {"$sum": 1}}}],
      "two or more accumulators"),
-    # all plain: not mixed (cube_spec path owns it)
-    ([{"$group": {"_id": {"et": "$e"}, "n": {"$sum": 1}, "s": {"$sum": "$v"}}}],
+    # ... and not a lone plain one
+    ([{"$group": {"_id": None, "n": {"$sum": 1}}}],
      "no special-family accumulator"),
     # raw $addToSet without the $size project
     ([{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
@@ -110,10 +124,13 @@ def test_parse_addtoset_size_idiom_with_passthrough_and_drop():
     ([{"$group": {"_id": {"et": "$e"}, "et": {"$median": {"input": "$v"}},
                   "n": {"$sum": 1}}}],
      "collides with a dimension"),
+    # a $group with no accumulator has nothing to route
+    ([{"$group": {"_id": {"et": "$e"}}}],
+     "no accumulator to route"),
 ])
 def test_parse_refusals(pipe, msg):
     with pytest.raises(PipelineError, match=msg):
-        mixed_requests_from_pipeline(pipe)
+        aggregate_requests_from_pipeline(pipe)
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +315,7 @@ def test_advisor_ingests_mixed_and_apply_routes_it(engine, events):
 # ---------------------------------------------------------------------------
 
 def test_parse_size_output_shadows_plain_accumulator():
-    _f, _d, parts, out_cols = mixed_requests_from_pipeline([
+    _f, _d, parts, out_cols = aggregate_requests_from_pipeline([
         {"$group": {"_id": {"et": "$event_type"},
                     "u": {"$addToSet": "$user_id"},
                     "n": {"$sum": 1}}},
@@ -309,7 +326,7 @@ def test_parse_size_output_shadows_plain_accumulator():
 
 
 def test_parse_size_output_shadows_special_accumulator():
-    _f, _d, parts, out_cols = mixed_requests_from_pipeline([
+    _f, _d, parts, out_cols = aggregate_requests_from_pipeline([
         {"$group": {"_id": {"et": "$event_type"},
                     "u": {"$addToSet": "$user_id"},
                     "med": {"$median": {"input": "$value"}},
@@ -386,7 +403,7 @@ def test_size_shadowing_another_set_refuses():
     # $size consumer — refuse toward the compile fallback, which keeps
     # Mongo's read-from-input-doc projection semantics
     with pytest.raises(PipelineError, match="no \\$size"):
-        mixed_requests_from_pipeline([
+        aggregate_requests_from_pipeline([
             {"$group": {"_id": {"et": "$e"},
                         "a": {"$addToSet": "$x"},
                         "b": {"$addToSet": "$y"},

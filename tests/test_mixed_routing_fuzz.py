@@ -1,7 +1,7 @@
 """Property fuzz over the mixed-routing refusal surface (r13, VERDICT
 r12 task 7).
 
-`mixed_requests_from_pipeline` parses a `[$match?, $group[, $project]]`
+`aggregate_requests_from_pipeline` parses a `[$match?, $group[, $project]]`
 aggregate that mixes accumulator families into per-family routed
 request parts. The r11/r12 shadow bugs ($size outputs named like other
 accumulators) were found by the ADVICE pass, not by tests — this fuzz
@@ -32,7 +32,7 @@ from hypothesis import HealthCheck, given, settings
 
 from mongo_olap_spark.plans.pipeline_compiler import (
     PipelineError,
-    mixed_requests_from_pipeline,
+    aggregate_requests_from_pipeline,
 )
 
 # accumulator menu: two sets, three plains, one exact special
@@ -76,7 +76,7 @@ def test_mixed_parse_refuses_or_decomposes_consistently(accs, proj):
     if proj is not None:
         pipeline.append({"$project": proj})
     try:
-        _f, dims, parts, out_cols = mixed_requests_from_pipeline(pipeline)
+        _f, dims, parts, out_cols = aggregate_requests_from_pipeline(pipeline)
     except PipelineError:
         return  # refusal IS the contract — the caller keeps its fallback
 

@@ -2969,15 +2969,24 @@ def test_review_r6_fixes(spark):
 def test_special_request_parser_shapes():
     from mongo_olap_spark.plans.pipeline_compiler import (
         PipelineError,
-        special_request_from_pipeline,
+        aggregate_requests_from_pipeline,
     )
 
+    def lone_special(pipeline):
+        # a lone special accumulator is one special part:
+        # (filter_sql, dims, measure, post)
+        filter_sql, dims, parts, out_cols = (
+            aggregate_requests_from_pipeline(pipeline))
+        [(kind, measure, post)] = parts
+        assert kind == "special" and out_cols == [measure[0]]
+        return filter_sql, dims, measure, post
+
     gid = {"et": "$event_type"}
-    ok = special_request_from_pipeline(
+    ok = lone_special(
         [{"$group": {"_id": gid, "m": {"$median": {"input": "$value"}}}}]
     )
     assert ok[2] == ("m", "quantile_exact", "value", 0.5) and ok[3] is None
-    ok = special_request_from_pipeline(
+    ok = lone_special(
         [{"$match": {"value": {"$gt": 5}}},
          {"$group": {"_id": gid,
                      "p": {"$percentile": {"input": "$value", "p": [0.25]}}}}]
@@ -2986,29 +2995,29 @@ def test_special_request_parser_shapes():
     assert ok[2] == ("p", "quantile_exact", "value", 0.25) and ok[3] == "array_wrap"
     # multi-p (r10): routable as ONE request; the rollup emits the
     # array in p order from a single window pass — no post transform
-    ok = special_request_from_pipeline(
+    ok = lone_special(
         [{"$group": {"_id": gid,
                      "p": {"$percentile": {"input": "$value",
                                            "p": [0.25, 0.5, 0.75]}}}}]
     )
     assert ok[2] == ("p", "quantile_exact", "value", (0.25, 0.5, 0.75))
     assert ok[3] is None
-    ok = special_request_from_pipeline(
+    ok = lone_special(
         [{"$group": {"_id": None, "lo": {"$minN": {"input": "$value", "n": 2}}}}]
     )
     assert ok[1] == [] and ok[2] == ("lo", "min_n", "value", 2)
-    ok = special_request_from_pipeline(
+    ok = lone_special(
         [{"$group": {"_id": gid, "w": {"$topN": {
             "n": 3, "sortBy": {"value": 1}, "output": "$user_id"}}}}]
     )
     assert ok[2] == ("w", "top_by", "value", "user_id", 3) and ok[3] is None
-    ok = special_request_from_pipeline(
+    ok = lone_special(
         [{"$group": {"_id": gid, "w": {"$bottomN": {
             "n": 3, "sortBy": {"value": -1}, "output": "$user_id"}}}}]
     )
     # desc sortBy swaps the selection op and flags desc presentation
     assert ok[2] == ("w", "top_by", "value", "user_id", 3, True) and ok[3] is None
-    ok = special_request_from_pipeline(
+    ok = lone_special(
         [{"$group": {"_id": gid, "us": {"$addToSet": "$user_id"}}},
          {"$project": {"_id": 1, "nu": {"$size": "$us"}}}]
     )
@@ -3021,9 +3030,6 @@ def test_special_request_parser_shapes():
             "input": "$value", "p": []}}}}],
         [{"$group": {"_id": gid, "p": {"$percentile": {
             "input": "$value", "p": ["$q"]}}}}],
-        # two accumulators
-        [{"$group": {"_id": gid, "m": {"$median": {"input": "$value"}},
-                     "n": {"$sum": 1}}}],
         # multi-key sortBy
         [{"$group": {"_id": gid, "w": {"$topN": {
             "n": 3, "sortBy": {"value": 1, "ts": 1}, "output": "$user_id"}}}}],
@@ -3042,7 +3048,15 @@ def test_special_request_parser_shapes():
         [{"$group": {"_id": gid, "lo": {"$minN": {"input": "$value", "n": 0}}}}],
     ]:
         with pytest.raises(PipelineError):
-            special_request_from_pipeline(bad)
+            lone_special(bad)
+
+    # two accumulators decompose into one part per family
+    _f, _d, parts, out_cols = aggregate_requests_from_pipeline(
+        [{"$group": {"_id": gid, "m": {"$median": {"input": "$value"}},
+                     "n": {"$sum": 1}}}])
+    assert parts == [("plain", (("n", "count"),)),
+                     ("special", ("m", "quantile_exact", "value", 0.5), None)]
+    assert out_cols == ["m", "n"]
 
 
 def test_cube_spec_from_pipeline_stddev():

@@ -68,6 +68,10 @@ def test_too_coarse_cube_rejected(catalog):
     )
     # day cube cannot serve hourly buckets; no cube qualifies
     assert d.cube is None
+    # the reason names why each cube was refused
+    assert d.reason.startswith("no cube serves the request (")
+    assert "events_daily: cube too coarse on ts (day < hour)" in d.reason
+    assert "events_monthly: cube too coarse on ts (month < hour)" in d.reason
 
 
 def test_fallback_to_source(spark, events, catalog):

@@ -16,7 +16,7 @@ providing snapshot isolation without a table format dependency
 
 A manifest lists, per partition key, the directory holding that
 partition's current files, plus driver-side statistics (row counts,
-lattice level counts) and the streaming idempotency watermark
+parquet bytes, lattice level counts) and the streaming idempotency watermark
 (``last_batch_id``). Commits write new data into a fresh ``w<N>`` dir
 and flip ``manifest.json`` with one atomic rename:
 
@@ -38,16 +38,29 @@ or ``__NULL__``) — filesystem-safe by construction, so the directory
 name equals the key and nothing ever parses Spark's escaping.
 
 Old write dirs are retained until ``vacuum()`` (time-travel-free GC).
+
+Reads resolve the manifest on every call (freshness), but the cell
+DataFrame of a snapshot is memoized on its data directories plus its
+schema: write dirs are immutable and writer-unique, so that key names
+exactly one set of files, and a repeat read skips the file listing and
+the schema parse. A snapshot whose recorded parquet bytes fit in one
+Spark split (``spark.sql.files.maxPartitionBytes``) reads as a single
+partition, so the rollup over it needs no exchange and runs as one job
+of one task.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mongo_olap_spark.cube.build import build_cube
 from mongo_olap_spark.cube.spec import CubeSpec
@@ -62,6 +75,14 @@ _KEY_FMT = "yyyy-MM-dd'T'HH.mm.ss"
 
 #: bounded optimistic retries before a writer gives up rebasing
 _MAX_COMMIT_RETRIES = 50
+
+#: cell DataFrames a catalog keeps (LRU) for repeat reads of a snapshot
+_SCAN_MEMO_SIZE = 32
+
+#: Spark's byte-string units (binary multiples, as JavaUtils parses them)
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
+               "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+               "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
 
 
 class CommitConflict(Exception):
@@ -120,17 +141,29 @@ def _dir_level_rows(path: str) -> dict[str, int]:
     return counts
 
 
-def _dir_meta(path: str, cols: set[str]) -> tuple[int, dict[str, list]]:
-    """Row count AND per-column min/max for one partition directory
-    from a SINGLE pass over the parquet footers (each footer open can
-    be an object-store round trip — reading rows and stats separately
-    would double every commit's metadata cost). Only JSON-native stat
-    types (int/float/str) are recorded; columns whose footers carry no
-    usable statistics are simply absent, which the pruner treats as
-    'cannot skip'."""
+def _split_bytes(spark: SparkSession) -> int | None:
+    """Spark's own split size, ``spark.sql.files.maxPartitionBytes``,
+    in bytes (the conf reads back as a byte string such as
+    ``'134217728b'`` or ``'64MB'``); None when it does not parse."""
+    raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    m = re.fullmatch(r"\s*([0-9]+)\s*([a-z]*)\s*", str(raw).lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        return None
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
+def _dir_meta(path: str, cols: set[str]) -> tuple[int, int, dict[str, list]]:
+    """Row count, parquet bytes AND per-column min/max for one
+    partition directory from a SINGLE pass over the parquet footers
+    (each footer open can be an object-store round trip — reading rows
+    and stats separately would double every commit's metadata cost).
+    Only JSON-native stat types (int/float/str) are recorded; columns
+    whose footers carry no usable statistics are simply absent, which
+    the pruner treats as 'cannot skip'."""
     import pyarrow.parquet as pq
 
     total = 0
+    nbytes = 0
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
     unusable: set[str] = set()
@@ -138,8 +171,10 @@ def _dir_meta(path: str, cols: set[str]) -> tuple[int, dict[str, list]]:
         for f in files:
             if not f.endswith(".parquet"):
                 continue
-            md = pq.ParquetFile(os.path.join(dirpath, f)).metadata
+            fpath = os.path.join(dirpath, f)
+            md = pq.ParquetFile(fpath).metadata
             total += md.num_rows
+            nbytes += os.path.getsize(fpath)
             for rg in range(md.num_row_groups):
                 row_group = md.row_group(rg)
                 for j in range(row_group.num_columns):
@@ -169,7 +204,7 @@ def _dir_meta(path: str, cols: set[str]) -> tuple[int, dict[str, list]]:
                         mins.pop(name, None)
                         maxs.pop(name, None)
                         unusable.add(name)
-    return total, {c: [mins[c], maxs[c]] for c in mins if c not in unusable}
+    return total, nbytes, {c: [mins[c], maxs[c]] for c in mins if c not in unusable}
 
 
 def _sum_level_rows(entries: dict[str, dict]) -> dict[str, int]:
@@ -190,6 +225,9 @@ class CubeCatalog(TableFormatAdapter):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # (data dirs, schema JSON, one split) -> cell DataFrame
+        self._scans: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._scans_lock = threading.Lock()
 
     # -- paths ----------------------------------------------------------
     def _dir(self, name: str) -> str:
@@ -378,6 +416,7 @@ class CubeCatalog(TableFormatAdapter):
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._dir(name), ignore_errors=True)
+        self._evict_scans([self._dir(name)])
 
     def create(self, spec: CubeSpec, source: DataFrame) -> DataFrame:
         """Define + initially populate a cube; returns the cell table."""
@@ -560,8 +599,6 @@ class CubeCatalog(TableFormatAdapter):
 
     # -- reads ----------------------------------------------------------
     def _cell_schema(self, name: str):
-        from pyspark.sql.types import StructType
-
         with open(self._schema_path(name)) as f:
             return StructType.fromJson(json.load(f))
 
@@ -651,18 +688,50 @@ class CubeCatalog(TableFormatAdapter):
         # historical spec still references. Manifests from before r15
         # fall back to the file.
         if m and m.get("schema"):
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(m["schema"])
+            schema_json = json.dumps(m["schema"], sort_keys=True)
         else:
-            schema = self._cell_schema(name)
+            with open(self._schema_path(name)) as f:
+                schema_json = f.read()
         parts = (m or {}).get("partitions", {})
         if keys is not None:
-            parts = {k: v for k, v in parts.items() if k in set(keys)}
-        paths = [os.path.join(self._dir(name), p["path"]) for p in parts.values()]
+            wanted = set(keys)
+            parts = {k: v for k, v in parts.items() if k in wanted}
+        paths = tuple(os.path.join(self._dir(name), p["path"]) for p in parts.values())
         if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+            return self.spark.createDataFrame(
+                [], StructType.fromJson(json.loads(schema_json)))
+        # one split: the selected files fit in the split size Spark
+        # would give a single task anyway, so read them as one
+        # partition. Entries written before "bytes" was recorded read
+        # with Spark's own (parallel) split planning.
+        nbytes = [p.get("bytes") for p in parts.values()]
+        split = _split_bytes(self.spark)
+        one_split = None not in nbytes and split is not None and sum(nbytes) <= split
+        key = (paths, schema_json, one_split)
+        with self._scans_lock:
+            df = self._scans.get(key)
+            if df is not None:
+                self._scans.move_to_end(key)
+                return df
+        df = self.spark.read.schema(
+            StructType.fromJson(json.loads(schema_json))).parquet(*paths)
+        if one_split:
+            df = df.coalesce(1)
+        with self._scans_lock:
+            self._scans[key] = df
+            while len(self._scans) > _SCAN_MEMO_SIZE:
+                self._scans.popitem(last=False)
+        return df
+
+    def _evict_scans(self, dirs: list[str]) -> None:
+        """Forget memoized reads of any file under ``dirs`` (absolute
+        paths): a dropped cube's or a vacuumed directory's."""
+        def under(p: str) -> bool:
+            return any(p == d or p.startswith(d + os.sep) for d in dirs)
+
+        with self._scans_lock:
+            for key in [k for k in self._scans if any(map(under, k[0]))]:
+                del self._scans[key]
 
     # -- statistics (metadata-only routing) ------------------------------
     def cell_count(self, name: str) -> int | None:
@@ -746,18 +815,19 @@ class CubeCatalog(TableFormatAdapter):
         self, spec: CubeSpec, cells: DataFrame, rel_dir: str, *, lattice: bool = False
     ) -> dict[str, dict]:
         """Write a cell DataFrame into ``rel_dir``; returns the new
-        partition entries {key: {path, rows[, level_rows]}} (rows from
-        parquet footers; lattice level counts from a driver-side read
+        partition entries {key: {path, rows, bytes[, stats][, level_rows]}}
+        (rows from parquet footers, bytes the parquet file sizes that
+        decide a one-split read; lattice level counts from a driver-side read
         of the level column only — no Spark job either way)."""
         abs_dir = os.path.join(self._dir(spec.name), rel_dir)
         pdim = self.partition_dim(spec)
         stat_cols = set(spec.dim_names)
         if pdim is None:
             cells.write.mode("overwrite").parquet(abs_dir)
-            rows, stats = _dir_meta(abs_dir, stat_cols)
+            rows, nbytes, stats = _dir_meta(abs_dir, stat_cols)
             if not rows:
                 return {}
-            entry = {"path": rel_dir, "rows": rows}
+            entry = {"path": rel_dir, "rows": rows, "bytes": nbytes}
             if stats:
                 entry["stats"] = stats
             if lattice:
@@ -784,8 +854,8 @@ class CubeCatalog(TableFormatAdapter):
                 key = d[len("__p="):]
                 rel = os.path.join(rel_dir, d)
                 pabs = os.path.join(self._dir(spec.name), rel)
-                rows, stats = _dir_meta(pabs, stat_cols)
-                entries[key] = {"path": rel, "rows": rows}
+                rows, nbytes, stats = _dir_meta(pabs, stat_cols)
+                entries[key] = {"path": rel, "rows": rows, "bytes": nbytes}
                 if stats:
                     entries[key]["stats"] = stats
                 if lattice:
@@ -1049,4 +1119,5 @@ class CubeCatalog(TableFormatAdapter):
                     any(r.startswith(g + os.sep) for g in gone) for r in refs
                 ):
                     os.unlink(os.path.join(hist_dir, f))
+        self._evict_scans([os.path.join(self._dir(name), r) for r in removed])
         return removed

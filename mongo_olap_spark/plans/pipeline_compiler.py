@@ -4674,6 +4674,15 @@ def _presentation(pipeline: list[dict]) -> tuple[list[dict], tuple | None]:
     return pipeline, None
 
 
+def _routable_name(name: str) -> str:
+    """A routed answer names its columns like cube dims and measures do
+    (SQL identifiers); any other name — Mongo allows ``"my-n"`` — is
+    served by compiling the pipeline instead."""
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+        raise PipelineError(f"routing needs identifier output names (got {name!r})")
+    return name
+
+
 def aggregate_requests_from_pipeline(
     pipeline: list[dict],
 ) -> tuple[str | None, list, list, list[str]]:
@@ -4733,7 +4742,8 @@ def aggregate_requests_from_pipeline(
     share the same rollup, so answers never depend on cube presence.
 
     Anything else raises :class:`PipelineError`: the caller compiles
-    the pipeline instead.
+    the pipeline instead. That includes output names (group keys,
+    accumulators, ``$size`` outputs) that are not SQL identifiers.
     """
     pipeline, present = _presentation(pipeline)
     tail_project: dict | None = None
@@ -4742,7 +4752,10 @@ def aggregate_requests_from_pipeline(
         tail_project = pipeline[-1]["$project"]
         body = pipeline[:-1]
     filter_sql, group = _cube_pipeline_prefix(body, what="routable aggregate")
-    dims = _cube_dims(group.get("_id"))
+    id_spec = group.get("_id")
+    for name in id_spec if isinstance(id_spec, dict) else ():
+        _routable_name(name)
+    dims = _cube_dims(id_spec)
     dim_names = {d.name for d in dims}
     accs = {k: v for k, v in group.items() if k != "_id"}
     plain: list[tuple] = []
@@ -4757,7 +4770,7 @@ def aggregate_requests_from_pipeline(
             raise PipelineError(
                 f"accumulator for {gname!r} must be a single-op document")
         [(op, arg)] = mspec.items()
-        order.append(gname)
+        order.append(_routable_name(gname))
         if op == "$addToSet":
             if not (isinstance(arg, str) and arg.startswith("$")):
                 raise PipelineError(
@@ -4800,7 +4813,7 @@ def aggregate_requests_from_pipeline(
                     raise PipelineError(
                         f"set field {ref!r} consumed by two $size projections")
                 consumed.add(sname)
-                if k in dim_names:
+                if _routable_name(k) in dim_names:
                     raise PipelineError(
                         f"output {k!r} collides with a dimension")
                 if k in order and k not in sets:

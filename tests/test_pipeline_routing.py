@@ -162,6 +162,12 @@ PIPES = {
     # no accumulator; an accumulator named like a dimension
     "no_accumulators": grp(),
     "plain_dim_collision": grp(et={"$sum": 1}),
+    # output names that are not SQL identifiers
+    "acc_not_identifier": grp(**{"my-n": {"$sum": 1}}),
+    "special_not_identifier": grp(**{"p 50": MED}),
+    "dim_not_identifier": [{"$group": {"_id": {"e-t": "$event_type"}, "n": {"$sum": 1}}}],
+    "size_not_identifier": grp(us={"$addToSet": "$user_id"})
+    + [{"$project": {"n-u": {"$size": "$us"}}}],
 }
 
 #: (filter_sql, dims as (name, path, granularity), requests as
@@ -430,6 +436,12 @@ EXPECTED = {
     # changed: the cascade raised ValueError from CubeSpec for these two
     "no_accumulators": 'compile',
     "plain_dim_collision": 'compile',
+    # changed: the router's source fallback raised ValueError from
+    # Measure for a non-identifier name; the parse refuses it now
+    "acc_not_identifier": 'compile',
+    "special_not_identifier": 'compile',
+    "dim_not_identifier": 'compile',
+    "size_not_identifier": 'compile',
 }
 
 
@@ -483,6 +495,31 @@ def test_literal_sum_other_than_one_is_not_a_count(spark, tmp_path):
         cube_spec_from_pipeline("c", "t", pipe)
     with pytest.raises(PipelineError, match=r"must be \{\$sum: 1\}"):
         engine.create_cube_from_pipeline("c", "t", pipe, src)
+
+
+def test_non_identifier_output_name_compiles(spark, tmp_path):
+    """Mongo allows ``"my-n"`` as an output name; routed answers name
+    their columns as SQL identifiers, so the pipeline compiles over the
+    source instead of failing in the router's source fallback."""
+    from mongo_olap_spark.engine import OlapEngine
+    from mongo_olap_spark.plans.pipeline_compiler import compile_pipeline
+
+    src = spark.createDataFrame(
+        [("a", 1.0), ("a", 2.0), ("b", 3.0)], "et string, v double")
+    pipes = (
+        [{"$group": {"_id": {"et": "$et"}, "my-n": {"$sum": 1}}}],
+        [{"$group": {"_id": {"e-t": "$et"}, "n": {"$sum": 1}}}],
+    )
+    engine = OlapEngine(spark, str(tmp_path / "olap"))
+    for with_cube in (False, True):
+        if with_cube:  # a count cube that could serve the request
+            engine.create_cube_from_pipeline("c", "t", [
+                {"$group": {"_id": {"et": "$et"}, "n": {"$sum": 1}}}], src)
+        for pipe in pipes:
+            got = engine.query_pipeline("t", pipe, source_df=src).collect()
+            want = compile_pipeline(src, pipe).collect()
+            assert sorted(map(str, got)) == sorted(map(str, want))
+            assert len(got) == 2
 
 
 def test_query_pipeline_routes_each_part_once(spark, tmp_path, monkeypatch):

@@ -732,8 +732,9 @@ def test_dir_meta_mixed_stat_types_dropped(tmp_path):
     d.mkdir()
     pq.write_table(pa.table({"x": [1, 2, 3]}), str(d / "a.parquet"))
     pq.write_table(pa.table({"x": ["p", "q"]}), str(d / "b.parquet"))
-    rows, stats = _dir_meta(str(d), {"x"})
+    rows, nbytes, stats = _dir_meta(str(d), {"x"})
     assert rows == 5
+    assert nbytes == sum(f.stat().st_size for f in d.iterdir())
     assert "x" not in stats
 
 

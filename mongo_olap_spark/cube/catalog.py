@@ -46,7 +46,8 @@ exactly one set of files, and a repeat read skips the file listing and
 the schema parse. A snapshot whose recorded parquet bytes fit in one
 Spark split (``spark.sql.files.maxPartitionBytes``) reads as a single
 partition, so the rollup over it needs no exchange and runs as one job
-of one task.
+of one task (the maintenance read, ``cells_for_partitions``, keeps the
+parallel scan: its merge shuffles the cells anyway).
 """
 
 from __future__ import annotations
@@ -613,8 +614,10 @@ class CubeCatalog(TableFormatAdapter):
     def cells_for_partitions(self, name: str, keys: list[str]) -> DataFrame:
         """The snapshot restricted to the given partition keys —
         file-level pruning (only those directories are listed/read),
-        the read half of partition-scoped maintenance."""
-        return self._read_partitions(name, keys)
+        the read half of partition-scoped maintenance. It keeps Spark's
+        parallel scan at any size: the maintenance merge shuffles these
+        cells anyway, so one split would only serialize the file reads."""
+        return self._read_partitions(name, keys, one_split_ok=False)
 
     def cells_in_range(self, name: str, lo=None, hi=None) -> DataFrame:
         """File-level pruning for a time-range slice ``[lo, hi)``.
@@ -678,7 +681,8 @@ class CubeCatalog(TableFormatAdapter):
         return self._read_partitions(name, keys)
 
     def _read_partitions(
-        self, name: str, keys: list[str] | None, *, version: int | None = None
+        self, name: str, keys: list[str] | None, *, version: int | None = None,
+        one_split_ok: bool = True,
     ) -> DataFrame:
         m = self.manifest(name, version)
         # r15: a snapshot reads with the schema that WROTE it — after
@@ -705,7 +709,7 @@ class CubeCatalog(TableFormatAdapter):
         # partition. Entries written before "bytes" was recorded read
         # with Spark's own (parallel) split planning.
         nbytes = [p.get("bytes") for p in parts.values()]
-        split = _split_bytes(self.spark)
+        split = _split_bytes(self.spark) if one_split_ok else None
         one_split = None not in nbytes and split is not None and sum(nbytes) <= split
         key = (paths, schema_json, one_split)
         with self._scans_lock:

@@ -133,6 +133,9 @@ def test_repeat_read_reuses_the_snapshot_scan(engine):
     part = engine.catalog.cells_for_partitions(CUBE, keys)
     assert part is not first
     assert engine.catalog.cells_for_partitions(CUBE, keys) is part
+    # the maintenance read keeps Spark's parallel scan: its merge
+    # shuffles the cells anyway
+    assert part.rdd.getNumPartitions() == 2
 
 
 def test_apply_cdc_then_read_answers_new_version(engine, events):

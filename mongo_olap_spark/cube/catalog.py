@@ -43,11 +43,12 @@ Reads resolve the manifest on every call (freshness), but the cell
 DataFrame of a snapshot is memoized on its data directories plus its
 schema: write dirs are immutable and writer-unique, so that key names
 exactly one set of files, and a repeat read skips the file listing and
-the schema parse. A snapshot whose recorded parquet bytes fit in one
-Spark split (``spark.sql.files.maxPartitionBytes``) reads as a single
-partition, so the rollup over it needs no exchange and runs as one job
-of one task (the maintenance read, ``cells_for_partitions``, keeps the
-parallel scan: its merge shuffles the cells anyway).
+the schema parse. A snapshot whose recorded parquet bytes are at most
+Spark's per-file open cost (``spark.sql.files.openCostInBytes``) reads
+as a single partition, so the rollup over it needs no exchange and
+runs as one job of one task (the maintenance read,
+``cells_for_partitions``, keeps the parallel scan: its merge shuffles
+the cells anyway).
 """
 
 from __future__ import annotations
@@ -142,15 +143,29 @@ def _dir_level_rows(path: str) -> dict[str, int]:
     return counts
 
 
-def _split_bytes(spark: SparkSession) -> int | None:
-    """Spark's own split size, ``spark.sql.files.maxPartitionBytes``,
-    in bytes (the conf reads back as a byte string such as
-    ``'134217728b'`` or ``'64MB'``); None when it does not parse."""
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
+def _conf_bytes(spark: SparkSession, key: str) -> int | None:
+    """A Spark byte-size conf in bytes (it reads back as a byte string
+    such as ``'134217728b'`` or ``'64MB'``); None when it does not
+    parse."""
+    raw = spark.conf.get(key)
     m = re.fullmatch(r"\s*([0-9]+)\s*([a-z]*)\s*", str(raw).lower())
     if m is None or m.group(2) not in _BYTE_UNITS:
         return None
     return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
+def _one_split_bytes(spark: SparkSession) -> int | None:
+    """The largest selection a read takes as one partition: Spark's
+    per-file open cost, ``spark.sql.files.openCostInBytes`` (4 MB by
+    default). Spark's split planner charges every file it opens as that
+    many bytes of reading, so a selection no larger than one such
+    charge is what Spark itself treats as trivial to read. Capped by
+    the split size, ``spark.sql.files.maxPartitionBytes``, so a single
+    split is never larger than one Spark would plan. None when either
+    conf does not parse."""
+    sizes = [_conf_bytes(spark, k) for k in (
+        "spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")]
+    return None if None in sizes else min(sizes)
 
 
 def _dir_meta(path: str, cols: set[str]) -> tuple[int, int, dict[str, list]]:
@@ -611,12 +626,13 @@ class CubeCatalog(TableFormatAdapter):
         recorded cell schema."""
         return self._read_partitions(name, None, version=version)
 
-    def cells_for_partitions(self, name: str, keys: list[str]) -> DataFrame:
-        """The snapshot restricted to the given partition keys —
-        file-level pruning (only those directories are listed/read),
-        the read half of partition-scoped maintenance. It keeps Spark's
-        parallel scan at any size: the maintenance merge shuffles these
-        cells anyway, so one split would only serialize the file reads."""
+    def cells_for_partitions(self, name: str, keys: list[str] | None) -> DataFrame:
+        """The snapshot restricted to the given partition keys (every
+        partition for None) — file-level pruning (only those
+        directories are listed/read), the read half of CDC maintenance.
+        It keeps Spark's parallel scan at any size: the maintenance
+        merge shuffles these cells anyway, so one split would only
+        serialize the file reads."""
         return self._read_partitions(name, keys, one_split_ok=False)
 
     def cells_in_range(self, name: str, lo=None, hi=None) -> DataFrame:
@@ -704,12 +720,12 @@ class CubeCatalog(TableFormatAdapter):
         if not paths:
             return self.spark.createDataFrame(
                 [], StructType.fromJson(json.loads(schema_json)))
-        # one split: the selected files fit in the split size Spark
-        # would give a single task anyway, so read them as one
-        # partition. Entries written before "bytes" was recorded read
-        # with Spark's own (parallel) split planning.
+        # one split: the selected files are no bigger than the cost
+        # Spark's planner charges for opening one file, so read them as
+        # one partition. Entries written before "bytes" was recorded
+        # read with Spark's own (parallel) split planning.
         nbytes = [p.get("bytes") for p in parts.values()]
-        split = _split_bytes(self.spark) if one_split_ok else None
+        split = _one_split_bytes(self.spark) if one_split_ok else None
         one_split = None not in nbytes and split is not None and sum(nbytes) <= split
         key = (paths, schema_json, one_split)
         with self._scans_lock:

@@ -81,7 +81,7 @@ class TableFormatAdapter(ABC):
     def cells(self, name: str, *, version: int | None = None) -> DataFrame: ...
 
     @abstractmethod
-    def cells_for_partitions(self, name: str, keys: list[str]) -> DataFrame: ...
+    def cells_for_partitions(self, name: str, keys: list[str] | None) -> DataFrame: ...
 
     # -- writes ---------------------------------------------------------
     @abstractmethod

@@ -4676,11 +4676,14 @@ def _presentation(pipeline: list[dict]) -> tuple[list[dict], tuple | None]:
 
 def _routable_name(name: str) -> str:
     """A routed answer names its columns like cube dims and measures do
-    (SQL identifiers); any other name — Mongo allows ``"my-n"`` — is
-    served by compiling the pipeline instead."""
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-        raise PipelineError(f"routing needs identifier output names (got {name!r})")
-    return name
+    (the cube spec's identifier rule); any other name — Mongo allows
+    ``"my-n"`` — is served by compiling the pipeline instead."""
+    from mongo_olap_spark.cube.spec import _ident
+
+    try:
+        return _ident(name)
+    except ValueError as e:
+        raise PipelineError(f"routing needs identifier output names: {e}") from None
 
 
 def aggregate_requests_from_pipeline(

@@ -91,7 +91,7 @@ class CubeMaintainer:
             cells = self.catalog.cells_for_partitions(spec.name, touched_keys)
         else:
             touched_keys = None
-            cells = self.catalog.cells(spec.name)
+            cells = self.catalog.cells_for_partitions(spec.name, None)
 
         merged = merge_cells(cells, deltas, spec)
 
@@ -159,7 +159,7 @@ class CubeMaintainer:
             cells = self.catalog.cells_for_partitions(spec.name, touched_keys)
         else:
             touched_keys = None
-            cells = self.catalog.cells(spec.name)
+            cells = self.catalog.cells_for_partitions(spec.name, None)
         merged = merge_cells(cells, deltas, spec, extra_keys=(LEVEL_COL,))
         if touched_keys is not None:
             self.catalog.commit_partitions(

@@ -1,7 +1,7 @@
 """The catalog's read path: a snapshot's cell DataFrame is memoized on
 its data directories plus its schema, and a snapshot whose recorded
-parquet bytes fit in one Spark split reads as one partition, so a
-routed read is one job of one task. Freshness does not change: every
+parquet bytes are at most Spark's per-file open cost reads as one
+partition, so a routed read is one job of one task. Freshness does not change: every
 read resolves the manifest, and a new commit names new directories."""
 
 from __future__ import annotations
@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube import build_cube, query_cube
-from mongo_olap_spark.cube.catalog import _split_bytes
+from mongo_olap_spark.cube.catalog import _conf_bytes
+from mongo_olap_spark.cube.spec import CubeSpec, Dimension, Measure
 from mongo_olap_spark.engine import OlapEngine
 from mongo_olap_spark.plans.router import AggregateRequest
 from mongo_olap_spark.queries.core import EVENTS_CUBE
@@ -66,14 +67,14 @@ def strip_bytes(catalog, name):
     catalog._write_pointer(name, m)
 
 
-def test_split_bytes_parses_spark_byte_strings(spark):
-    key = "spark.sql.files.maxPartitionBytes"
+def test_conf_bytes_parses_spark_byte_strings(spark):
+    key = "spark.sql.files.openCostInBytes"
     old = spark.conf.get(key)
     try:
-        for raw, want in [("134217728b", 134217728), ("64MB", 64 << 20),
+        for raw, want in [("4194304b", 4 << 20), ("64MB", 64 << 20),
                           ("1048576", 1 << 20), ("2k", 2048), ("1g", 1 << 30)]:
             spark.conf.set(key, raw)
-            assert _split_bytes(spark) == want, raw
+            assert _conf_bytes(spark, key) == want, raw
     finally:
         spark.conf.set(key, old)
 
@@ -98,10 +99,13 @@ def test_routed_read_of_small_snapshot_is_one_job_one_task(spark, engine):
     assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_snapshot_above_split_size_keeps_parallel_scan(spark, engine):
+@pytest.mark.parametrize("key", ["spark.sql.files.openCostInBytes",
+                                 "spark.sql.files.maxPartitionBytes"])
+def test_snapshot_above_one_split_keeps_parallel_scan(spark, engine, key):
+    """The one-split limit is the open cost (4 MB by default), capped by
+    the split size: a snapshot one byte above either keeps Spark's scan."""
     expected = rows_set(routed(engine))
     nbytes = sum(e["bytes"] for e in engine.catalog.manifest(CUBE)["partitions"].values())
-    key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
     spark.conf.set(key, str(nbytes - 1))
     try:
@@ -136,6 +140,40 @@ def test_repeat_read_reuses_the_snapshot_scan(engine):
     # the maintenance read keeps Spark's parallel scan: its merge
     # shuffles the cells anyway
     assert part.rdd.getNumPartitions() == 2
+    every = engine.catalog.cells_for_partitions(CUBE, None)
+    assert rows_set(every) == rows_set(first)
+    assert every.rdd.getNumPartitions() > 1
+
+
+def test_unpartitioned_maintenance_read_keeps_parallel_scan(engine, events, monkeypatch):
+    """A cube without a time dim merges over every cell: apply_cdc reads
+    them through the maintenance read, never the one-split serve read."""
+    spec = CubeSpec(name="events_by_type", source="events",
+                    dimensions=(Dimension("event_type"),),
+                    measures=(Measure("n", "count"), Measure("total_value", "sum", "value")))
+    engine.create_cube(spec, events)
+    cat = engine.catalog
+    assert cat.partition_dim(spec) is None
+    reads = []
+    maintenance_read = cat.cells_for_partitions
+
+    def spy(name, keys):
+        df = maintenance_read(name, keys)
+        reads.append((keys, df._jdf.queryExecution().executedPlan().toString()))
+        return df
+
+    def boom(*a, **k):
+        raise AssertionError("maintenance must not use the serve read")
+
+    extra = events.filter(F.col("event_id") % 50 == 0)
+    monkeypatch.setattr(cat, "cells_for_partitions", spy)
+    monkeypatch.setattr(cat, "cells", boom)
+    assert engine.apply_cdc(spec.name, cdc_from_events(extra).filter(F.col("op") == "insert"), 0)
+    monkeypatch.undo()
+    assert [k for k, _ in reads] == [None]
+    assert "Coalesce" not in reads[0][1]
+    assert rows_set(cat.cells(spec.name).select("event_type", "n_cnt")) == rows_set(
+        build_cube(engine.spark, spec, events.unionByName(extra)).select("event_type", "n_cnt"))
 
 
 def test_apply_cdc_then_read_answers_new_version(engine, events):

@@ -24,8 +24,10 @@ for trend attribution, not absolute grading).
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -57,6 +59,7 @@ def main() -> int:
 
     spark = get_spark("latency-probe", shuffle_partitions=32)
     root = tempfile.mkdtemp(prefix="latency_probe_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
     engine = OlapEngine(spark, root)
     events = load_table(spark, sf_dir, "events").cache()
     events.count()

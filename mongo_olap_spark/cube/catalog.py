@@ -811,7 +811,8 @@ class CubeCatalog(TableFormatAdapter):
         return sorted(out)
 
     # -- storage ---------------------------------------------------------
-    def partition_dim(self, spec: CubeSpec) -> str | None:
+    @staticmethod
+    def partition_dim(spec: CubeSpec) -> str | None:
         """Coarsest time dimension = the physical partition key."""
         order = {"year": 0, "quarter": 1, "month": 2, "week": 3, "day": 4, "hour": 5, "minute": 6}
         timed = [d for d in spec.dimensions if d.granularity]

@@ -260,12 +260,18 @@ class OlapEngine:
                 self.spark, resume_after=token, max_changes=max_changes)
             if tok is None or (token is not None and tok <= token):
                 break  # drained
-            n = batch.count()
-            if n == 0:
-                break
-            if maint.apply_batch(batch, tok):
-                batches += 1
-                changes += n
+            # the pulled batch re-scans the landing directory on every
+            # action (count, touched keys, merge): read it once
+            batch = batch.cache()
+            try:
+                n = batch.count()
+                if n == 0:
+                    break
+                if maint.apply_batch(batch, tok):
+                    batches += 1
+                    changes += n
+            finally:
+                batch.unpersist()
             token = tok
         return {"batches": batches, "changes": changes,
                 "resume_token": token}

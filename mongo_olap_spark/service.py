@@ -225,6 +225,69 @@ def _field(req, name):
         raise _BadRequest(f"missing request field {name!r}") from None
 
 
+def _wire_value(v, dt):
+    """ISO strings → datetime/date for the temporal columns; every
+    other JSON value passes through to the schema verifier."""
+    from pyspark.sql.types import DateType, TimestampType
+
+    if isinstance(v, str) and isinstance(dt, TimestampType):
+        return _dt.datetime.fromisoformat(v)
+    if isinstance(v, str) and isinstance(dt, DateType):
+        return _dt.date.fromisoformat(v)
+    return v
+
+
+def _wire_batch(spark, rows: list, schema):
+    """A wire batch (JSON objects) as a DataFrame over a local relation.
+
+    Each row goes through the steps ``createDataFrame(list, schema)``
+    takes: the schema verifier, then ``schema.toInternal`` — naive
+    timestamps read in the Python process's zone, offsets kept, dates
+    as epoch days. The internal values then ship as one Arrow table
+    (timestamps as UTC micros), which Spark plans as a
+    ``LocalRelation``: no pickled RDD, so no Python worker starts for
+    any stage that scans the batch. The verifier is not optional —
+    an Arrow int column would silently truncate ``1.5`` to ``1``.
+    A value of the wrong type is a client error (``ValueError``,
+    wire code ``invalid``); its message names the field."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
+    verify, convert = _make_type_verifier(schema), _create_converter(schema)
+    data = []
+    for r in rows:
+        row = tuple(_wire_value(r.get(f.name), f.dataType) for f in schema.fields)
+        try:
+            verify(row)
+        except TypeError as e:
+            raise ValueError(str(e)) from e
+        data.append(schema.toInternal(convert(row)))
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(_decimal_values([row[i] for row in data], f.dataType),
+                  type=arrow.field(i).type)
+         for i, f in enumerate(schema.fields)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
+def _decimal_values(values: list, dt) -> list:
+    """Spark's reading of a Decimal into DECIMAL(p, s), which Arrow
+    would refuse: rounded half-up to s digits, NaN as NULL. A value
+    too wide for p digits still raises (``ArrowInvalid``, a
+    ``ValueError``)."""
+    from pyspark.sql.types import DecimalType
+
+    if not isinstance(dt, DecimalType):
+        return values
+    unit = decimal.Decimal(1).scaleb(-dt.scale)
+    ctx = decimal.Context(prec=decimal.MAX_PREC, rounding=decimal.ROUND_HALF_UP)
+    return [None if v is not None and v.is_nan()
+            else v.quantize(unit, context=ctx) if v is not None and v.is_finite()
+            else v for v in values]
+
+
 class OlapService:
     """Engine-side request handler: ``handle(request_dict) → response
     dict``. Pure dispatch — transports (stdio/socket) wrap it.
@@ -433,15 +496,9 @@ class OlapService:
         columns plus ``mult`` (+1 insert / −1 delete; an update is the
         ±1 pair). Rows coerce against the SOURCE schema (ISO
         timestamps/dates parsed) so wire ingestion and file ingestion
-        agree on types. createDataFrame, not an RDD: the service stays
-        inside the Connect-compatible API surface."""
-        from pyspark.sql.types import (
-            DateType,
-            IntegerType,
-            StructField,
-            StructType,
-            TimestampType,
-        )
+        agree on types; :func:`_wire_batch` decodes them to a local
+        relation, inside the Connect-compatible API surface."""
+        from pyspark.sql.types import IntegerType, StructField, StructType
 
         name = _field(req, "cube")
         spec = self.engine.catalog.get_spec(name)
@@ -463,19 +520,7 @@ class OlapService:
         src = self._source_df(spec.source)
         schema = StructType(
             list(src.schema.fields) + [StructField("mult", IntegerType())])
-
-        def coerce(v, dt):
-            if isinstance(v, str) and isinstance(dt, TimestampType):
-                return _dt.datetime.fromisoformat(v)
-            if isinstance(v, str) and isinstance(dt, DateType):
-                return _dt.date.fromisoformat(v)
-            return v
-
-        data = [
-            tuple(coerce(r.get(f.name), f.dataType) for f in schema.fields)
-            for r in rows
-        ]
-        batch = self.engine.spark.createDataFrame(data, schema)
+        batch = _wire_batch(self.engine.spark, rows, schema)
         applied = self.engine.apply_cdc(
             name, batch, batch_id, source_for_repair=src)
         # honest wire contract: a replayed batch_id reports applied=0 +

@@ -4,6 +4,8 @@
 ``foreachBatch``:
 
     readStream(cdc) → foreachBatch(batch):
+        batch = batch.cache()                        # one file scan
+        touched = _touched_keys(spec, batch)         # partition keys
         deltas = delta_cells(spec, batch)            # signed partials
         merged = merge_cells(touched_cells, deltas)  # §4.3 MERGE
         [recompute_cells(...) for min/max cubes hit by deletes]
@@ -36,9 +38,35 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube.build import delta_cells
-from mongo_olap_spark.cube.catalog import CubeCatalog, partition_key_col
+from mongo_olap_spark.cube.catalog import NULL_KEY, CubeCatalog, partition_key_col
 from mongo_olap_spark.cube.ivm import affected_cells, merge_cells, recompute_cells
 from mongo_olap_spark.cube.spec import CubeSpec
+
+
+def _touched_keys(
+    spec: CubeSpec, batch: DataFrame, levels: list[tuple[str, ...]] | None = None
+) -> list[str] | None:
+    """The partition keys a batch's deltas land in, collected
+    from the batch itself: the distinct partition key of the time dim
+    over the rows ``spec.filter_sql`` keeps. These are exactly the keys
+    of the deltas (every kept row lands in one delta cell; the key
+    strings come from the writer's own expression, so they agree
+    byte-for-byte with the manifest keys), and ``commit_partitions``
+    refuses any written partition outside them. A lattice level that
+    aggregates the partition dim away keeps its cells in ``NULL_KEY``,
+    which every non-empty batch touches. None for a cube without a
+    time dim (one unpartitioned cell table)."""
+    pdim = CubeCatalog.partition_dim(spec)
+    if pdim is None:
+        return None
+    if spec.filter_sql:
+        batch = batch.filter(spec.filter_sql)
+    [dim] = [d for d in spec.dimensions if d.name == pdim]
+    keys = [r[0] for r in batch.select(partition_key_col(dim.expr())).distinct().collect()]
+    if (keys and NULL_KEY not in keys and levels is not None
+            and any(pdim not in lv for lv in levels)):
+        keys.append(NULL_KEY)
+    return keys
 
 
 class CubeMaintainer:
@@ -67,49 +95,61 @@ class CubeMaintainer:
         """Apply one micro-batch. Returns True when the batch was
         applied, False when the watermark skipped it as a replay — so a
         caller (the service's apply_cdc, ADVICE r13) can report a
-        skipped replay honestly instead of claiming rows were applied."""
+        skipped replay honestly instead of claiming rows were applied.
+
+        A multi-level (grouping-sets) cube takes the same path: ONE
+        signed grouping-sets aggregation of the micro-batch delivers
+        deltas for every materialized level and the merge keys on
+        (dims, __level). Levels that aggregate the time dim away live
+        in the NULL time partition, which is small by construction
+        (coarse levels have few cells). min/max lattice cubes reject
+        deletes: per-level cell recompute is a rebuild in disguise —
+        use a plain cube + lattice rebuild, or a delete-safe measure
+        set, for that workload."""
         if batch_id <= self.catalog.last_batch_id(self.spec.name, self.stream_id):
             return False  # replayed batch — idempotent skip
         spec = self.spec
         levels = self.catalog.lattice_levels(spec.name)
-        if levels is not None:
-            return self._apply_batch_lattice(batch, batch_id, levels)
-        deltas = delta_cells(spec, batch)
-        pdim = self.catalog.partition_dim(spec)
-
-        if pdim is not None:
-            # partition-scoped: resolve the (few) touched partition keys
-            # driver-side, read ONLY those partitions' files, and commit
-            # only them — O(|touched|) per batch. The key strings come
-            # from the same expression the writer uses, so they agree
-            # byte-for-byte with the manifest keys.
-            deltas = deltas.cache()
-            touched_keys = [
-                r[0] for r in deltas.select(partition_key_col(pdim)).distinct().collect()
-            ]
-            read_version = self.catalog.current_version(spec.name)
-            cells = self.catalog.cells_for_partitions(spec.name, touched_keys)
+        has_deletes = (not spec.delete_safe
+                       and batch.filter(F.col("mult") < 0).limit(1).count() > 0)
+        if has_deletes and levels is not None:
+            raise ValueError(
+                f"lattice cube {spec.name} has min/max measures; deletes are "
+                "not incrementally maintainable per level — refresh instead"
+            )
+        if has_deletes and self.source_for_repair is None:
+            raise ValueError(
+                f"cube {spec.name} has min/max measures; deletes require "
+                "source_for_repair for cell recomputation"
+            )
+        if levels is None:
+            deltas, extra_keys = delta_cells(spec, batch), ()
         else:
-            touched_keys = None
-            cells = self.catalog.cells_for_partitions(spec.name, None)
+            from mongo_olap_spark.cube.lattice import LEVEL_COL, delta_cells_lattice
 
-        merged = merge_cells(cells, deltas, spec)
+            deltas = delta_cells_lattice(spec, batch, levels)
+            extra_keys = (LEVEL_COL,)
 
-        if not spec.delete_safe:
-            has_deletes = batch.filter(F.col("mult") < 0).limit(1).count() > 0
-            if has_deletes:
-                if self.source_for_repair is None:
-                    raise ValueError(
-                        f"cube {spec.name} has min/max measures; deletes require "
-                        "source_for_repair for cell recomputation"
-                    )
-                touched = affected_cells(spec, delta_cells(spec, batch.filter(F.col("mult") < 0)))
-                merged = recompute_cells(spec, self.source_for_repair, merged, touched)
+        # partition-scoped: read ONLY the touched partitions' files and
+        # commit only them — O(|touched|) per batch. The merge reads the
+        # deltas once, so they are not cached.
+        touched_keys = _touched_keys(spec, batch, levels)
+        read_version = (None if touched_keys is None
+                        else self.catalog.current_version(spec.name))
+        cells = self.catalog.cells_for_partitions(spec.name, touched_keys)
+        merged = merge_cells(cells, deltas, spec, extra_keys=extra_keys)
+        if has_deletes:
+            touched = affected_cells(spec, delta_cells(spec, batch.filter(F.col("mult") < 0)))
+            merged = recompute_cells(spec, self.source_for_repair, merged, touched)
 
         # no checkpoint/MVCC dance: the commit writes NEW immutable
         # files and flips the manifest pointer (data + watermark in one
         # atomic rename); the files `merged` reads stay in place
-        if touched_keys is not None:
+        if touched_keys is None:
+            self.catalog.overwrite_cells(
+                spec.name, merged, batch_id=batch_id, stream_id=self.stream_id
+            )
+        else:
             self.catalog.commit_partitions(
                 spec.name,
                 merged,
@@ -117,63 +157,6 @@ class CubeMaintainer:
                 batch_id=batch_id,
                 stream_id=self.stream_id,
                 read_version=read_version,
-            )
-            deltas.unpersist()
-        else:
-            self.catalog.overwrite_cells(
-                spec.name, merged, batch_id=batch_id, stream_id=self.stream_id
-            )
-        return True
-
-    def _apply_batch_lattice(
-        self, batch: DataFrame, batch_id: int, levels: list[tuple[str, ...]]
-    ) -> bool:
-        """Incremental maintenance of a multi-level (grouping-sets)
-        cube: ONE signed grouping-sets aggregation of the micro-batch
-        delivers deltas for every materialized level; the merge keys on
-        (dims, __level). Partition-scoping still applies — levels that
-        aggregate the time dim away live in the NULL time partition,
-        which is small by construction (coarse levels have few cells).
-
-        min/max lattice cubes reject deletes: per-level cell recompute
-        is a rebuild in disguise — use a plain cube + lattice rebuild,
-        or a delete-safe measure set, for that workload."""
-        from mongo_olap_spark.cube.lattice import LEVEL_COL, delta_cells_lattice
-
-        spec = self.spec
-        if not spec.delete_safe:
-            has_deletes = batch.filter(F.col("mult") < 0).limit(1).count() > 0
-            if has_deletes:
-                raise ValueError(
-                    f"lattice cube {spec.name} has min/max measures; deletes are "
-                    "not incrementally maintainable per level — refresh instead"
-                )
-        deltas = delta_cells_lattice(spec, batch, levels)
-        pdim = self.catalog.partition_dim(spec)
-        if pdim is not None:
-            deltas = deltas.cache()
-            touched_keys = [
-                r[0] for r in deltas.select(partition_key_col(pdim)).distinct().collect()
-            ]
-            read_version = self.catalog.current_version(spec.name)
-            cells = self.catalog.cells_for_partitions(spec.name, touched_keys)
-        else:
-            touched_keys = None
-            cells = self.catalog.cells_for_partitions(spec.name, None)
-        merged = merge_cells(cells, deltas, spec, extra_keys=(LEVEL_COL,))
-        if touched_keys is not None:
-            self.catalog.commit_partitions(
-                spec.name,
-                merged,
-                touched_keys,
-                batch_id=batch_id,
-                stream_id=self.stream_id,
-                read_version=read_version,
-            )
-            deltas.unpersist()
-        else:
-            self.catalog.overwrite_cells(
-                spec.name, merged, batch_id=batch_id, stream_id=self.stream_id
             )
         return True
 
@@ -184,11 +167,26 @@ class CubeMaintainer:
         if not trigger:
             trigger = {"availableNow": True}
         return (
-            cdc_stream.writeStream.foreachBatch(self.apply_batch)
+            cdc_stream.writeStream.foreachBatch(
+                lambda batch, batch_id: _apply_cached([self], batch, batch_id))
             .option("checkpointLocation", checkpoint_dir)
             .trigger(**trigger)
             .start()
         )
+
+
+def _apply_cached(maintainers: list[CubeMaintainer], batch: DataFrame, batch_id: int) -> None:
+    """``foreachBatch`` body. A streamed micro-batch re-scans its source
+    files on every action (the touched-keys resolve, each merge), so it
+    is read once into the cache and released after, whatever an apply
+    raises. ``apply_batch`` itself caches nothing: a wire batch is a
+    local relation, cheap to read twice."""
+    batch = batch.cache()
+    try:
+        for m in maintainers:
+            m.apply_batch(batch, batch_id)
+    finally:
+        batch.unpersist()
 
 
 class MultiCubeMaintainer:
@@ -212,12 +210,7 @@ class MultiCubeMaintainer:
         ]
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        batch = batch.cache()
-        try:
-            for child in self.children:
-                child.apply_batch(batch, batch_id)
-        finally:
-            batch.unpersist()
+        _apply_cached(self.children, batch, batch_id)
 
     def start(self, cdc_stream: DataFrame, checkpoint_dir: str, **trigger):
         if not trigger:

@@ -484,6 +484,108 @@ def test_apply_cdc_over_the_wire(service, events):
     assert bad["error"]["code"] == "invalid"
 
 
+#: naive, +02:00, DST-gap and DST-fold wall times (America/New_York,
+#: 2024-03-10 02:30 does not exist, 2024-11-03 01:30 happens twice)
+WIRE_TIMES = ["2024-01-02T03:04:05", "2024-01-02T03:04:05+02:00",
+              "2024-03-10T02:30:00", "2024-11-03T01:30:00", None]
+
+
+def _wire_rows(spark, rows, schema):
+    from mongo_olap_spark.service import _wire_value
+
+    return spark.createDataFrame(
+        [tuple(_wire_value(r.get(f.name), f.dataType) for f in schema.fields)
+         for r in rows], schema)
+
+
+def _wire_schemas(service):
+    import datetime as _dt
+    import decimal
+
+    from pyspark.sql.types import (
+        ArrayType,
+        DateType,
+        DecimalType,
+        FloatType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    mult = StructField("mult", IntegerType())
+    events = StructType(list(service._source_df("events").schema.fields) + [mult])
+    lineitem = StructType(list(service._source_df("lineitem").schema.fields) + [mult])
+    typed = StructType([StructField("id", LongType()), StructField("ts", TimestampType()),
+                        StructField("d", DateType()), StructField("amt", DecimalType(12, 2)),
+                        StructField("arr", ArrayType(FloatType())), mult])
+    dec = [decimal.Decimal("1.235"), decimal.Decimal("-5"), None,
+           decimal.Decimal("9999999999.99"), decimal.Decimal("0.5")]
+    dates = ["2024-02-29", "1969-12-31", None, "0001-01-01", "9999-12-31"]
+    return [
+        (events, [{"event_id": i, "ts": t, "user_id": i * 7, "event_type": "click",
+                   "value": None if i == 2 else i / 4, "props": None, "mult": 1 - 2 * (i % 2)}
+                  for i, t in enumerate(WIRE_TIMES)]),
+        # l_shipdate reads as timestamp_ntz, which takes datetimes only
+        (lineitem, [{"l_orderkey": i, "l_linenumber": i, "l_quantity": 2.5,
+                     "l_returnflag": "R", "mult": 1,
+                     "l_shipdate": t and _dt.datetime.fromisoformat(t)}
+                    for i, t in enumerate(WIRE_TIMES)]),
+        (typed, [{"id": i, "ts": t, "d": d, "amt": a, "arr": [1.5, None] if i else [],
+                  "mult": 1} for i, (t, d, a) in enumerate(zip(WIRE_TIMES, dates, dec))]),
+    ]
+
+
+@pytest.mark.parametrize("py_tz", ["UTC", "America/New_York"])
+@pytest.mark.parametrize("session_tz", ["UTC", "America/New_York"])
+def test_wire_batch_decode_matches_create_dataframe(service, spark, monkeypatch,
+                                                    py_tz, session_tz):
+    # a wire batch decodes to a local relation with the rows that
+    # createDataFrame(list, schema) gives, in either Python zone (naive
+    # wall times) and either session zone
+    import time
+
+    from mongo_olap_spark.service import _wire_batch
+
+    schemas = _wire_schemas(service)  # sources resolve under the UTC session
+    monkeypatch.setenv("TZ", py_tz)
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", session_tz)
+    try:
+        for schema, rows in schemas:
+            batch = _wire_batch(spark, rows, schema)
+            want = _wire_rows(spark, rows, schema)
+            assert batch.isLocal()
+            assert [repr(r) for r in batch.collect()] == [repr(r) for r in want.collect()]
+            as_text = [f"cast({f.name} as string)" for f in schema.fields]
+            assert batch.selectExpr(*as_text).collect() == want.selectExpr(*as_text).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        monkeypatch.undo()
+        time.tzset()
+
+
+@pytest.mark.parametrize("bad, says", [
+    ({"mult": 1.5}, "field mult:"),
+    ({"value": 3}, "field value:"),
+    ({"event_id": "x"}, "field event_id:"),
+    ({"user_id": 2 ** 70}, "VALUE_OUT_OF_BOUNDS"),
+    ({"ts": "nope"}, "Invalid isoformat string"),
+])
+def test_wire_batch_refusals_are_invalid(service, bad, says):
+    # a value the source schema cannot hold is refused before Spark
+    # sees the batch, as code invalid (a client error), never internal
+    service.handle({"op": "create_cube_from_pipeline", "name": "cdc_bad",
+                    "source": "events", "pipeline": PIPE})
+    doc = {"event_id": 1, "ts": "2024-01-02T03:04:05", "event_type": "click",
+           "user_id": 7, "value": 1.0, "mult": 1, **bad}
+    r = service.handle({"op": "apply_cdc", "cube": "cdc_bad", "batch": [doc]})
+    assert not r["ok"] and r["error"]["code"] == "invalid", r
+    assert says in r["error"]["message"]
+    assert service.engine.catalog.current_version("cdc_bad") == 1
+
+
 def test_advise_over_the_wire(service):
     r = service.handle({"op": "advise",
                         "workload": [["events", PIPE, 2.0]]})

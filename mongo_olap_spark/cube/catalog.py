@@ -7,18 +7,22 @@ providing snapshot isolation without a table format dependency
 (a mini Delta/Iceberg, same commit protocol):
 
     <root>/<cube>/
-      cube.json            # spec
-      cells_schema.json    # cell schema (read with explicit schema)
+      cube.json            # current spec
       lattice.json         # materialized levels (lattice cubes)
       data/w<version>/     # immutable write directories
         __p=<key>/…parquet #   one dir per time partition (or flat)
-      manifest.json        # THE snapshot pointer — atomic os.replace
+      manifests/v<N>.json  # the commit of record, one per version
+      manifest.json        # pointer cache of the newest version
 
-A manifest lists, per partition key, the directory holding that
-partition's current files, plus driver-side statistics (row counts,
-parquet bytes, lattice level counts) and the streaming idempotency watermark
-(``last_batch_id``). Commits write new data into a fresh ``w<N>`` dir
-and flip ``manifest.json`` with one atomic rename:
+A manifest is the snapshot's whole record: per partition key, the
+directory holding that partition's current files with its row count,
+parquet bytes, dim min/max stats and (lattice cubes) per-level rows;
+the level totals; the spec and cell schema that wrote the cells; and
+the per-stream idempotency watermarks (``last_batch_ids``). Every
+commit writes all of it; a manifest missing one of those fields is
+refused by name (drop and re-create the cube), never read through a
+fallback. Commits write new data into a fresh ``w<N>`` dir and
+publish the manifest with one atomic link:
 
 - **readers never see partial state** — a reader that resolved the
   old manifest keeps reading the old (immutable, not-yet-vacuumed)
@@ -49,6 +53,15 @@ as a single partition, so the rollup over it needs no exchange and
 runs as one job of one task (the maintenance read,
 ``cells_for_partitions``, keeps the parallel scan: its merge shuffles
 the cells anyway).
+
+On a transactional table format the same operations map to Delta
+Lake as: ``create``/``overwrite_cells`` → an overwrite write;
+``commit_partitions`` → ``MERGE INTO`` on the cell keys (or
+``replaceWhere`` on the touched partitions), its ``read_version``
+conflict → Delta's optimistic concurrency; ``cells(version=v)`` →
+``versionAsOf``; ``current_version`` → the latest ``DESCRIBE
+HISTORY`` version; ``last_batch_id`` → the ``txn`` appId/version;
+``vacuum`` → ``VACUUM … RETAIN``; ``compact`` → ``OPTIMIZE``.
 """
 
 from __future__ import annotations
@@ -66,7 +79,6 @@ from pyspark.sql.types import StructType
 
 from mongo_olap_spark.cube.build import build_cube
 from mongo_olap_spark.cube.spec import CubeSpec
-from mongo_olap_spark.cube.table_format import TableFormatAdapter
 
 #: manifest key for the single pseudo-partition of an unpartitioned cube
 FLAT_KEY = "__all__"
@@ -81,6 +93,12 @@ _MAX_COMMIT_RETRIES = 50
 #: cell DataFrames a catalog keeps (LRU) for repeat reads of a snapshot
 _SCAN_MEMO_SIZE = 32
 
+#: fields every manifest commit writes; partition entries carry
+#: ``_ENTRY_FIELDS`` (plus ``level_rows`` in a lattice cube's entries)
+_MANIFEST_FIELDS = ("version", "partitions", "level_counts", "spec",
+                    "schema", "last_batch_ids")
+_ENTRY_FIELDS = ("path", "rows", "bytes")
+
 #: Spark's byte-string units (binary multiples, as JavaUtils parses them)
 _BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
                "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
@@ -92,20 +110,32 @@ class CommitConflict(Exception):
 
 
 def _merge_batch_ids(prev: dict | None, batch_id, stream_id: str) -> dict:
-    """Watermark fields for a new manifest: update THIS stream's entry,
+    """Watermarks for a new manifest: update THIS stream's entry,
     carry every other stream's from ``prev`` (on CAS rebase, prev is
     the winner's manifest, so concurrent streams never clobber each
-    other). The legacy scalar mirrors the default stream."""
-    prev = prev or {}
-    ids = dict(prev.get("last_batch_ids") or {})
-    if "default" not in ids and prev.get("last_batch_id", -1) != -1:
-        ids["default"] = prev["last_batch_id"]
+    other)."""
+    ids = dict(prev["last_batch_ids"]) if prev else {}
     if batch_id is not None:
         ids[stream_id] = batch_id
-    return {
-        "last_batch_ids": ids,
-        "last_batch_id": ids.get("default", prev.get("last_batch_id", -1)),
-    }
+    return ids
+
+
+def _check_manifest(name: str, m: dict) -> dict:
+    """``m``, refused by name when it lacks a field every commit
+    writes: the cube was written in a layout this engine does not
+    read."""
+    missing = [f for f in _MANIFEST_FIELDS if f not in m]
+    if not missing:
+        need = _ENTRY_FIELDS if m["level_counts"] is None \
+            else (*_ENTRY_FIELDS, "level_rows")
+        missing = sorted({f"partitions[].{f}" for e in m["partitions"].values()
+                          for f in need if f not in e})
+    if missing:
+        raise ValueError(
+            f"cube {name!r}: snapshot manifest version {m.get('version')} "
+            f"lacks {', '.join(missing)}, which every commit writes — "
+            f"drop and re-create the cube")
+    return m
 
 
 def _conflict_backoff(attempt: int) -> None:
@@ -226,16 +256,14 @@ def _dir_meta(path: str, cols: set[str]) -> tuple[int, int, dict[str, list]]:
 def _sum_level_rows(entries: dict[str, dict]) -> dict[str, int]:
     totals: dict[str, int] = {}
     for e in entries.values():
-        for lv, n in e.get("level_rows", {}).items():
+        for lv, n in e["level_rows"].items():
             totals[lv] = totals.get(lv, 0) + n
     return totals
 
 
-class CubeCatalog(TableFormatAdapter):
-    """Parquet + snapshot-manifest implementation of the cube store's
-    table-format contract (see cube/table_format.py — instance #1 of
-    the Delta/Iceberg swap seam; the MERGE-semantics contract suite in
-    tests/test_table_format_contract.py runs against the ABC only)."""
+class CubeCatalog:
+    """Parquet + snapshot-manifest cube store (the MERGE-semantics
+    contract suite is tests/test_table_format_contract.py)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -251,9 +279,6 @@ class CubeCatalog(TableFormatAdapter):
 
     def _spec_path(self, name: str) -> str:
         return os.path.join(self._dir(name), "cube.json")
-
-    def _schema_path(self, name: str) -> str:
-        return os.path.join(self._dir(name), "cells_schema.json")
 
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self._dir(name), "manifest.json")
@@ -273,18 +298,22 @@ class CubeCatalog(TableFormatAdapter):
         the two steps, the cache lags — readers walk forward to the
         newest committed version and repair the cache best-effort, so a
         half-finished commit is never lost and never blocks the next
-        writer."""
+        writer. A manifest that lacks a field every commit writes is
+        refused (``ValueError`` naming the cube and the field)."""
         if version is not None:
             try:
                 with open(self._hist_path(name, version)) as f:
-                    return json.load(f)
+                    m = json.load(f)
             except (OSError, ValueError):
                 return None
+            return _check_manifest(name, m)
         try:
             with open(self._manifest_path(name)) as f:
                 m = json.load(f)
         except (OSError, ValueError):
             m = None
+        else:
+            _check_manifest(name, m)
         cur = 0 if m is None else m["version"]
         healed = False
         while True:
@@ -352,83 +381,39 @@ class CubeCatalog(TableFormatAdapter):
         )
 
     def get_spec(self, name: str, version: int | None = None) -> CubeSpec:
-        """The cube's spec — current, or as of a pinned snapshot
-        ``version`` (r15 spec evolution): every snapshot commit embeds
-        its spec in the manifest, so a time-travel read resolves the
-        spec that WROTE those cells, not whatever the cube evolved to
-        since. Manifests from before r15 (or a version=None current
-        read) fall back to the spec.json file."""
+        """The cube's spec — current, or the one embedded in the pinned
+        snapshot ``version``: every commit embeds the spec that wrote
+        its cells, so time travel across a later ``evolve`` answers
+        with the historical measure set."""
         if version is not None:
-            m = self.manifest(name, version)
-            if m is None:
-                raise ValueError(
-                    f"cube {name!r} has no committed snapshot version "
-                    f"{version} (available: {self.list_versions(name)})")
-            if m.get("spec"):
-                return CubeSpec.from_json(m["spec"])
-            # pre-embedding manifest: the spec.json FILE is only a safe
-            # stand-in if the spec never changed after this version. An
-            # evolve() leaves detectable evidence — its manifest is
-            # marked ("evolved": true, r16) and intermediate manifests
-            # may embed a spec that disagrees with the file — and
-            # resolving version N against a post-evolve measure set is
-            # exactly the mismatch spec embedding was added to prevent,
-            # so refuse loudly on either signal.
-            with open(self._spec_path(name)) as f:
-                current = f.read()
-            newer = [self.manifest(name, v)
-                     for v in self.list_versions(name) if v > version]
-            embedded = {json.dumps(json.loads(n["spec"]), sort_keys=True)
-                        for n in newer if n and n.get("spec")}
-            cur_key = json.dumps(json.loads(current), sort_keys=True)
-            evolved_later = any(n.get("evolved") for n in newer if n)
-            if evolved_later or embedded - {cur_key}:
-                raise ValueError(
-                    f"cube {name!r}: snapshot version {version} predates "
-                    f"spec embedding and the cube's spec CHANGED in a "
-                    f"later version (evolve) — the current spec.json "
-                    f"does not describe these cells. Pin a version "
-                    f"whose manifest embeds its spec, or refresh().")
-            # the two manifest signals above miss ONE corner: an
-            # evolve committed by r15-era code (no "evolved" mark) on
-            # top of a pre-embedding version, where every embedded
-            # spec equals the rewritten spec.json. But evolve only
-            # ever ADDS or DROPS measures — it always changes the
-            # cell storage columns — and the pinned version's parquet
-            # footers record the columns that were actually written,
-            # so a column-set mismatch against the current spec is
-            # PROOF the spec changed after this version. One driver-
-            # side footer read of one partition file.
-            cand = CubeSpec.from_json(current)
-            parts = m.get("partitions") or {}
-            part = next(iter(parts.values()), None) \
-                if isinstance(parts, dict) else (parts or [None])[0]
-            if part:
-                path = os.path.join(self._dir(name), part["path"])
-                actual = {f.name for f in
-                          self.spark.read.parquet(path).schema.fields}
-                expected = set(cand.cell_columns)
-                # lattice/bookkeeping columns (__level, …) are not
-                # spec-derived; ignore them on the actual side
-                actual = {c for c in actual if not c.startswith("__")}
-                if actual != expected:
-                    raise ValueError(
-                        f"cube {name!r}: snapshot version {version} "
-                        f"predates spec embedding and its cell columns "
-                        f"{sorted(actual)} do not match the current "
-                        f"spec's {sorted(expected)} — the spec changed "
-                        f"after this version (an evolve committed by a "
-                        f"pre-marking engine). Pin a version whose "
-                        f"manifest embeds its spec, or refresh().")
-            import warnings
-            warnings.warn(
-                f"cube {name!r}: snapshot version {version} predates "
-                f"spec embedding; serving it with the current spec.json "
-                f"(no later spec change detected; cell columns match)",
-                stacklevel=2)
-            return cand
+            return CubeSpec.from_json(self._snapshot(name, version)["spec"])
         with open(self._spec_path(name)) as f:
             return CubeSpec.from_json(f.read())
+
+    def _snapshot(self, name: str, version: int | None = None) -> dict:
+        """The committed manifest a read serves: the current one, or
+        the pinned ``version``, which must still have every data
+        directory it references (``vacuum`` keeps only what the
+        current snapshot references). Refuses loudly rather than
+        answer from an empty or partial cube."""
+        m = self.manifest(name, version)
+        if m is None:
+            at = "" if version is None else f" version {version}"
+            raise ValueError(
+                f"cube {name!r} has no committed snapshot{at} "
+                f"(available: {self.list_versions(name)})")
+        if version is not None:
+            missing = [p["path"] for p in m["partitions"].values()
+                       if not os.path.isdir(os.path.join(self._dir(name), p["path"]))]
+            if missing:
+                raise ValueError(
+                    f"snapshot version {version} of cube {name!r} is no "
+                    f"longer readable — vacuum reclaimed {len(missing)} "
+                    f"data director{'y' if len(missing) == 1 else 'ies'} "
+                    f"only it referenced (e.g. {missing[0]!r}); pinned "
+                    "readers need a vacuum grace window "
+                    "(vacuum(min_age_s=…))")
+        return m
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._dir(name), ignore_errors=True)
@@ -556,7 +541,7 @@ class CubeCatalog(TableFormatAdapter):
         # refuses loudly; never does either path silently drop the
         # concurrent batch (the pre-r16 behavior).
         for attempt in range(_MAX_COMMIT_RETRIES):
-            base = (self.manifest(name) or {}).get("version", 0)
+            base = self.current_version(name)
             cells = self.cells(name)
             new_cells = cells.drop(*dropped_cols) if dropped_cols else cells
             if add:
@@ -581,8 +566,6 @@ class CubeCatalog(TableFormatAdapter):
                 # a join miss (group gone from the source) is an empty
                 # group for the new measures: build_cube's empty shape
                 # (count and topk mass 0, an empty topk map, sums NULL).
-                # A NULL mass would read as a pre-certificate legacy
-                # cell and make the serve refuse a fresh cube.
                 for m in add:
                     for c, s in storage(m):
                         empty = PARTIALS[s].empty
@@ -592,7 +575,6 @@ class CubeCatalog(TableFormatAdapter):
                                 c, F.coalesce(F.col(c), F.expr(empty).cast(dt)))
             try:
                 self._write_snapshot(new_spec, new_cells,
-                                     extra={"evolved": True},
                                      expected_prev_version=base)
                 break
             except CommitConflict:
@@ -614,15 +596,12 @@ class CubeCatalog(TableFormatAdapter):
         return self.cells(name)
 
     # -- reads ----------------------------------------------------------
-    def _cell_schema(self, name: str):
-        with open(self._schema_path(name)) as f:
-            return StructType.fromJson(json.load(f))
-
     def cells(self, name: str, *, version: int | None = None) -> DataFrame:
         """Current cell table (the manifest's snapshot), or a past
         snapshot by ``version`` — files are immutable, so a historical
         manifest is readable until ``vacuum`` reclaims what only it
-        references. An empty cube reads as an empty DataFrame with the
+        references; a version never committed or since reclaimed
+        refuses. An empty cube reads as an empty DataFrame with the
         recorded cell schema."""
         return self._read_partitions(name, None, version=version)
 
@@ -654,13 +633,13 @@ class CubeCatalog(TableFormatAdapter):
             )
 
         lo, hi = fmt(lo), fmt(hi)
-        m = self.manifest(name) or {}
-        if FLAT_KEY in m.get("partitions", {}):
+        parts = self._snapshot(name)["partitions"]
+        if FLAT_KEY in parts:
             # unpartitioned cube: nothing to prune — scan + filter
             return self.cells(name)
         keys = [
             k
-            for k in m.get("partitions", {})
+            for k in parts
             if k != NULL_KEY
             and (lo is None or k >= lo)
             and (hi is None or k < hi)
@@ -677,9 +656,8 @@ class CubeCatalog(TableFormatAdapter):
         analogue of parquet row-group pruning, one level up: at scale
         it means a sliced query lists only the partition directories
         whose footer stats can match."""
-        m = self.manifest(name) or {}
         keys = []
-        for key, entry in m.get("partitions", {}).items():
+        for key, entry in self._snapshot(name)["partitions"].items():
             st = entry.get("stats", {}).get(dim)
             if st is not None:
                 smin, smax = st
@@ -700,41 +678,30 @@ class CubeCatalog(TableFormatAdapter):
         self, name: str, keys: list[str] | None, *, version: int | None = None,
         one_split_ok: bool = True,
     ) -> DataFrame:
-        m = self.manifest(name, version)
-        # r15: a snapshot reads with the schema that WROTE it — after
-        # an evolve() the current schema.json gains/loses measure
-        # columns, and reading an old snapshot through it would null
-        # out added columns and (worse) silently prune dropped ones a
-        # historical spec still references. Manifests from before r15
-        # fall back to the file.
-        if m and m.get("schema"):
-            schema_json = json.dumps(m["schema"], sort_keys=True)
-        else:
-            with open(self._schema_path(name)) as f:
-                schema_json = f.read()
-        parts = (m or {}).get("partitions", {})
+        # a snapshot reads with the schema that WROTE it: after an
+        # evolve() an old snapshot lacks the added measure columns and
+        # keeps the dropped ones its historical spec still references
+        m = self._snapshot(name, version)
+        schema_json = json.dumps(m["schema"], sort_keys=True)
+        parts = m["partitions"]
         if keys is not None:
             wanted = set(keys)
             parts = {k: v for k, v in parts.items() if k in wanted}
         paths = tuple(os.path.join(self._dir(name), p["path"]) for p in parts.values())
         if not paths:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json)))
+            return self.spark.createDataFrame([], StructType.fromJson(m["schema"]))
         # one split: the selected files are no bigger than the cost
         # Spark's planner charges for opening one file, so read them as
-        # one partition. Entries written before "bytes" was recorded
-        # read with Spark's own (parallel) split planning.
-        nbytes = [p.get("bytes") for p in parts.values()]
+        # one partition
         split = _one_split_bytes(self.spark) if one_split_ok else None
-        one_split = None not in nbytes and split is not None and sum(nbytes) <= split
+        one_split = split is not None and sum(p["bytes"] for p in parts.values()) <= split
         key = (paths, schema_json, one_split)
         with self._scans_lock:
             df = self._scans.get(key)
             if df is not None:
                 self._scans.move_to_end(key)
                 return df
-        df = self.spark.read.schema(
-            StructType.fromJson(json.loads(schema_json))).parquet(*paths)
+        df = self.spark.read.schema(StructType.fromJson(m["schema"])).parquet(*paths)
         if one_split:
             df = df.coalesce(1)
         with self._scans_lock:
@@ -755,17 +722,19 @@ class CubeCatalog(TableFormatAdapter):
 
     # -- statistics (metadata-only routing) ------------------------------
     def cell_count(self, name: str) -> int | None:
-        """Total cells from manifest statistics — no Spark job."""
+        """Total cells from manifest statistics — no Spark job; None
+        when the cube has no committed snapshot."""
         m = self.manifest(name)
         if m is None:
             return None
-        return sum(p["rows"] for p in m.get("partitions", {}).values())
+        return sum(p["rows"] for p in m["partitions"].values())
 
     def level_counts(self, name: str) -> dict[int, int] | None:
-        """Per-lattice-level cell counts (level mask → rows), recorded
-        at create/refresh time; None for plain cubes."""
+        """Per-lattice-level cell counts (level mask → rows), kept by
+        every commit; None for plain cubes and for a cube with no
+        committed snapshot."""
         m = self.manifest(name)
-        if m is None or m.get("level_counts") is None:
+        if m is None or m["level_counts"] is None:
             return None
         return {int(k): v for k, v in m["level_counts"].items()}
 
@@ -775,17 +744,9 @@ class CubeCatalog(TableFormatAdapter):
         cube (the concurrent-writer topology the CAS supports) a single
         shared watermark would let writer B's id clobber writer A's —
         replays double-apply or pending batches get wrongly skipped.
-        The manifest therefore keeps ``last_batch_ids: {stream: id}``;
-        the legacy ``last_batch_id`` field mirrors the default stream."""
+        The manifest therefore keeps ``last_batch_ids: {stream: id}``."""
         m = self.manifest(name)
-        if m is None:
-            return -1
-        ids = m.get("last_batch_ids") or {}
-        if stream_id in ids:
-            return ids[stream_id]
-        if stream_id == "default":
-            return m.get("last_batch_id", -1)
-        return -1
+        return -1 if m is None else m["last_batch_ids"].get(stream_id, -1)
 
     def current_version(self, name: str) -> int:
         """The committed snapshot version (0 = no manifest yet) — the
@@ -798,9 +759,9 @@ class CubeCatalog(TableFormatAdapter):
         """Committed snapshot versions with a readable manifest,
         ascending — the time-travel surface. A listed version's DATA
         may still have been reclaimed by ``vacuum`` (only the CURRENT
-        manifest pins files); ``OlapEngine.query(as_of=…)`` checks the
-        referenced directories before serving, so a reclaimed snapshot
-        refuses instead of reading a partial cube."""
+        manifest pins files); a pinned read checks the referenced
+        directories first, so a reclaimed snapshot refuses instead of
+        reading a partial cube."""
         d = os.path.join(self._dir(name), "manifests")
         if not os.path.isdir(d):
             return []
@@ -891,15 +852,11 @@ class CubeCatalog(TableFormatAdapter):
         lattice: bool = False,
         batch_id: int | None = None,
         stream_id: str = "default",
-        extra: dict | None = None,
         expected_prev_version: int | None = None,
     ) -> None:
         """Full snapshot: all partitions from this write. Data is
         written once (writer-unique dir); only the cheap manifest CAS
-        rebases and retries on a concurrent commit. ``extra`` merges
-        additional manifest keys (evolve marks its commit so pinned
-        reads of pre-embedding versions can detect a later spec
-        change).
+        rebases and retries on a concurrent commit.
 
         ``expected_prev_version`` (r16): a full snapshot whose cells
         were DERIVED from a prior version (evolve reads the current
@@ -927,23 +884,15 @@ class CubeCatalog(TableFormatAdapter):
                         "version": (prev or {}).get("version", 0) + 1,
                         "partitions": entries,
                         "level_counts": level_counts,
-                        # r15: spec AND cell schema travel WITH the
+                        # spec AND cell schema travel WITH the
                         # snapshot, so time travel across a later
                         # evolve() resolves the spec that wrote these
                         # cells and reads them with their own schema
                         "spec": spec.to_json(),
                         "schema": cells.schema.jsonValue(),
-                        **_merge_batch_ids(prev, batch_id, stream_id),
-                        **(extra or {}),
+                        "last_batch_ids": _merge_batch_ids(prev, batch_id, stream_id),
                     },
                 )
-                # the schema FILE is only the fallback for pre-r15
-                # manifests without an embedded schema; write it after
-                # the commit lands so a refused CAS (evolve racing a
-                # CDC pump) cannot leave it describing columns that
-                # were never committed
-                with open(self._schema_path(spec.name), "w") as f:
-                    json.dump(cells.schema.jsonValue(), f)
                 return
             except CommitConflict:
                 if expected_prev_version is not None:
@@ -986,9 +935,7 @@ class CubeCatalog(TableFormatAdapter):
         writer's touched partitions in between."""
         spec = self.get_spec(name)
         lattice = self.lattice_levels(name) is not None
-        rel_dir = self._next_write_dir(
-            name, (self.manifest(name) or {}).get("version", 0) + 1
-        )
+        rel_dir = self._next_write_dir(name, self._snapshot(name)["version"] + 1)
         new_entries = self._write_data(spec, cells, rel_dir, lattice=lattice)
         unexpected = set(new_entries) - set(touched_keys)
         if unexpected:
@@ -997,11 +944,7 @@ class CubeCatalog(TableFormatAdapter):
                 f"declared touched set: {sorted(unexpected)}"
             )
         for attempt in range(_MAX_COMMIT_RETRIES):
-            prev = self.manifest(name) or {
-                "version": 0,
-                "partitions": {},
-                "level_counts": None,
-            }
+            prev = self._snapshot(name)
             if read_version is not None and prev["version"] != read_version:
                 base = self.manifest(name, read_version) or {"partitions": {}}
                 for k in touched_keys:
@@ -1017,23 +960,15 @@ class CubeCatalog(TableFormatAdapter):
                 if k not in set(touched_keys)
             }
             partitions.update(new_entries)
-            # lattice stats stay exact under maintenance: every entry
-            # carries per-level rows, so the totals are a dict sum
-            # (falls back to the previous totals only for
-            # pre-lattice-stats legacy entries)
-            if lattice and all("level_rows" in e for e in partitions.values()):
-                level_counts = _sum_level_rows(partitions)
-            else:
-                level_counts = prev.get("level_counts")
             manifest = {
                 "version": prev["version"] + 1,
                 "partitions": partitions,
-                "level_counts": level_counts,
-                **({"spec": prev["spec"]} if prev.get("spec")
-                   else {"spec": spec.to_json()}),
-                **({"schema": prev["schema"]} if prev.get("schema")
-                   else {"schema": self._cell_schema(name).jsonValue()}),
-                **_merge_batch_ids(prev, batch_id, stream_id),
+                # every lattice entry carries its per-level rows, so
+                # the level totals stay exact under maintenance
+                "level_counts": _sum_level_rows(partitions) if lattice else None,
+                "spec": prev["spec"],
+                "schema": prev["schema"],
+                "last_batch_ids": _merge_batch_ids(prev, batch_id, stream_id),
             }
             try:
                 self._commit_manifest(name, manifest)

@@ -57,14 +57,9 @@ def merge_cells(
     are NULL by construction; the level id disambiguates them from
     genuinely-NULL dim values).
     """
-    from mongo_olap_spark.cube.query import upgrade_legacy_cells
-
     dims = [*spec.dim_names, *extra_keys]
-    # pre-r15 snapshots lack the topk mass column; synthesize NULL so
-    # the merge resolves — NULL + delta mass stays NULL ("unknown"),
-    # which the certified serve refuses by name (query_cube __leg)
-    c = upgrade_legacy_cells(cells, spec).alias("c")
-    d = upgrade_legacy_cells(deltas, spec).alias("d")
+    c = cells.alias("c")
+    d = deltas.alias("d")
     if dims:
         cond = reduce(
             lambda a, b: a & b,

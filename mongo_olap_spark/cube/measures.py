@@ -219,31 +219,6 @@ def topk_union_agg(col: str, max_items: int) -> Column:
     return F.when(F.size(lst) == 0, F.lit(None)).otherwise(merged)
 
 
-def _legacy(tkn: str) -> Column:
-    """A cell row that is present (non-null ``{m}_tk`` map) but has a
-    NULL mass: a snapshot written before the mass column existed
-    ("mass unknown", see ``query.upgrade_legacy_cells``)."""
-    return F.col(tkn[:-1]).isNotNull() & F.col(tkn).isNull()
-
-
-def _rollup_mass(col: str, m) -> Column:
-    # one legacy cell poisons the group's mass to NULL ("unknown")
-    # instead of letting F.sum skip it and mint an undercount
-    leg = F.when(_legacy(col), 1).otherwise(0)
-    return (F.when(F.sum(leg) > 0, F.lit(None).cast("long"))
-            .otherwise(F.sum(col).cast("long")))
-
-
-def _merge_mass(a: str, b: str, m) -> Column:
-    # signed long addition; a side whose row is present with a NULL
-    # mass stays NULL ("unknown"), a side absent from the full-outer
-    # join (map NULL too) contributes 0
-    def side(c):
-        return F.when(_legacy(c), F.lit(None).cast("long")).otherwise(
-            F.coalesce(F.col(c), F.lit(0)))
-    return (side(a) + side(b)).cast("long")
-
-
 def _one_sided(f: Callable[[Column, Column, Measure], Column]):
     """Pairwise merge for partials whose merge function propagates
     NULL: a side missing from the full-outer join passes the other
@@ -405,7 +380,7 @@ PARTIALS: dict[str, Partial] = {
                    empty="map()"),
     # the map travels with its MASS (signed count of non-null rows):
     # serve-time mass conservation certifies the exact regime
-    "_tkn": Partial(_rollup_mass, _merge_mass, empty="0"),
+    "_tkn": Partial(lambda c, m: F.sum(c), _add_long, empty="0"),
 }
 
 

@@ -29,7 +29,6 @@ from mongo_olap_spark.cube.measures import (
     rollup_aggs,
     rollup_expr,
     row_count_col,
-    storage,
 )
 from mongo_olap_spark.cube.spec import CubeSpec, Measure
 
@@ -90,32 +89,6 @@ def _slice(cells: DataFrame, spec: CubeSpec, group_by: list[str] | None,
     return (cells if where is None else cells.filter(where)), group_by
 
 
-def upgrade_legacy_cells(cells: DataFrame, spec: CubeSpec) -> DataFrame:
-    """Resolve cell tables written before a storage column existed.
-
-    The only storage column ever added after GA is the topk mass
-    partial ``{m}_tkn`` (r15's exactness certificate). Snapshots
-    persisted before it lack the column, so any plan that selects
-    ``m.storage_cols()`` — the serve's certificate, IVM's merge,
-    combine/hybrid regrouping — would die with an unresolved-column
-    AnalysisException. Synthesize NULL instead: NULL is "mass
-    unknown", which downstream treats as UNCERTIFIABLE (the certified
-    serve refuses loudly, never silently passes) while the
-    ``on_inexact='sketch'`` route and all non-topk measures keep
-    working on legacy state unchanged. Any other missing storage
-    column is a real schema mismatch and still fails naturally.
-    """
-    missing = [
-        c
-        for m in spec.measures
-        for c, s in storage(m)
-        if s == "_tkn" and c not in cells.columns
-    ]
-    for c in missing:
-        cells = cells.withColumn(c, F.lit(None).cast("long"))
-    return cells
-
-
 def query_cube(
     cells: DataFrame,
     spec: CubeSpec,
@@ -164,7 +137,7 @@ def query_cube(
     if on_inexact not in ("error", "sketch"):
         raise ValueError(
             f"on_inexact must be 'error' or 'sketch', got {on_inexact!r}")
-    df, group_by = _slice(upgrade_legacy_cells(cells, spec), spec, group_by, where)
+    df, group_by = _slice(cells, spec, group_by, where)
     asks = measure_asks(spec, measures)
     topks = [(out, m) for out, m, _ in asks if m.op == "topk"]
     if not topks:
@@ -215,44 +188,18 @@ def query_cube(
             # column pruning can never drop it.
             got = counted.groupBy(*group_by).agg(
                 F.sum("__cnt").cast("long").alias(f"__got_{out}"))
-            # __leg counts cells with a MAP but no mass — legacy
-            # snapshots written before the r15 mass column
-            # (upgrade_legacy_cells synthesizes NULL = "mass
-            # unknown"). A group touching even one such cell is
-            # UNCERTIFIABLE: its Σmass undercounts, so refuse by name
-            # instead of reporting a bogus mass loss. The map-non-null
-            # conjunct matters (same convention as combine_cells /
-            # merge_cells): an evolve(add=topk) join-miss row written
-            # by pre-fix code carries NULL map AND NULL mass — that is
-            # an EMPTY group (no postings, zero mass), not a legacy
-            # cell, and must serve an empty array rather than refuse.
-            mass = F.col(f"{m.name}_tkn")
-            tk_cell = F.col(f"{m.name}_tk")
             want = df.groupBy(*group_by).agg(
-                F.sum(mass).cast("long").alias(f"__want_{out}"),
-                F.sum(F.when(tk_cell.isNotNull() & mass.isNull(), 1)
-                      .otherwise(0))
-                .cast("long").alias(f"__leg_{out}"))
+                F.sum(f"{m.name}_tkn").cast("long").alias(f"__want_{out}"))
             if group_by:
                 base = (base.join(got, list(group_by), "left")
                         .join(want, list(group_by), "left"))
             else:
                 base = base.crossJoin(got).crossJoin(want)
-            legacy = (F.coalesce(F.col(f"__leg_{out}"), F.lit(0))
-                      > F.lit(0))
             mismatch = (F.coalesce(F.col(f"__got_{out}"), F.lit(0))
                         != F.coalesce(F.col(f"__want_{out}"), F.lit(0)))
             base = base.withColumn(
                 out,
-                F.when(legacy, F.raise_error(F.lit(
-                    f"{TOPK_CERT_SENTINEL} topk measure {m.name!r}: "
-                    f"cells written before "
-                    f"the exactness certificate (no {m.name}_tkn mass "
-                    f"column) cannot certify the exact regime. "
-                    f"refresh()/rebuild the cube to mint the mass "
-                    f"column, or pass on_inexact='sketch' for the "
-                    f"documented bounded-error serve.")))
-                .when(mismatch, F.raise_error(F.concat(
+                F.when(mismatch, F.raise_error(F.concat(
                     F.lit(f"{TOPK_CERT_SENTINEL} topk measure "
                           f"{m.name!r}: frequent-items "
                           f"map lost mass ("),
@@ -267,7 +214,7 @@ def query_cube(
                           f"pass on_inexact='sketch' for the "
                           f"bounded-error serve."))))
                 .otherwise(F.col(out)))
-            base = base.drop(f"__got_{out}", f"__want_{out}", f"__leg_{out}")
+            base = base.drop(f"__got_{out}", f"__want_{out}")
     return base.select(*group_by, *[out for out, _, _ in asks])
 
 
@@ -822,7 +769,7 @@ def combine_cells(spec: CubeSpec, *frames: DataFrame) -> DataFrame:
     if not frames:
         raise ValueError("combine_cells needs at least one frame")
     cols = spec.cell_columns
-    up = [upgrade_legacy_cells(f, spec).select(*cols) for f in frames]
+    up = [f.select(*cols) for f in frames]
     df = up[0]
     for f in up[1:]:
         df = df.unionByName(f)
@@ -859,6 +806,5 @@ def hybrid_query(
 
     tail_cells = build_cube(tail.sparkSession, spec, tail)
     cols = spec.cell_columns
-    combined = (upgrade_legacy_cells(cells, spec).select(*cols)
-                .unionByName(tail_cells.select(*cols)))
+    combined = cells.select(*cols).unionByName(tail_cells.select(*cols))
     return query_cube(combined, spec, group_by=group_by, measures=measures)

@@ -342,8 +342,7 @@ class OlapEngine:
             # r15: a pinned snapshot resolves the spec that WROTE it —
             # time travel across a later evolve_cube() answers with the
             # historical measure set, not the current one
-            spec = self.catalog.get_spec(
-                cube, version=as_of if as_of is not None else None)
+            spec = self.catalog.get_spec(cube, version=as_of)
             if as_of is not None:
                 if tail is not None or time_range is not None:
                     raise ValueError(
@@ -352,30 +351,6 @@ class OlapEngine:
                         "listing are CURRENT-epoch state; mixing them "
                         "with a historical snapshot silently answers "
                         "from two points in time"
-                    )
-                import os
-
-                m = self.catalog.manifest(cube, as_of)
-                if m is None:
-                    raise ValueError(
-                        f"query: cube {cube!r} has no committed snapshot "
-                        f"version {as_of} (available: "
-                        f"{self.catalog.list_versions(cube)})"
-                    )
-                missing = [
-                    p["path"] for p in m.get("partitions", {}).values()
-                    if not os.path.isdir(
-                        os.path.join(self.catalog._dir(cube), p["path"]))
-                ]
-                if missing:
-                    raise ValueError(
-                        f"query: snapshot version {as_of} of cube "
-                        f"{cube!r} is no longer readable — vacuum "
-                        f"reclaimed {len(missing)} data director"
-                        f"{'y' if len(missing) == 1 else 'ies'} only it "
-                        f"referenced (e.g. {missing[0]!r}); pinned "
-                        "readers need a vacuum grace window "
-                        "(vacuum(min_age_s=…))"
                     )
                 return query_cube(
                     self.catalog.cells(cube, version=as_of), spec,

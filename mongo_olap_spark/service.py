@@ -225,14 +225,27 @@ def _field(req, name):
         raise _BadRequest(f"missing request field {name!r}") from None
 
 
-def _wire_value(v, dt):
+def _wire_value(v, field):
     """ISO strings → datetime/date for the temporal columns; every
-    other JSON value passes through to the schema verifier."""
-    from pyspark.sql.types import DateType, TimestampType
+    other JSON value passes through to the schema verifier. A
+    ``timestamp_ntz`` column takes wall times only: a string with a
+    UTC offset names an instant, which a zone-less column cannot hold
+    without picking a zone."""
+    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
-    if isinstance(v, str) and isinstance(dt, TimestampType):
+    if not isinstance(v, str):
+        return v
+    if isinstance(field.dataType, TimestampType):
         return _dt.datetime.fromisoformat(v)
-    if isinstance(v, str) and isinstance(dt, DateType):
+    if isinstance(field.dataType, TimestampNTZType):
+        t = _dt.datetime.fromisoformat(v)
+        if t.tzinfo is not None:
+            raise ValueError(
+                f"field {field.name}: {field.dataType} can not accept "
+                f"{v!r}, a timestamp with a UTC offset; send the wall "
+                f"time without one")
+        return t
+    if isinstance(field.dataType, DateType):
         return _dt.date.fromisoformat(v)
     return v
 
@@ -257,7 +270,7 @@ def _wire_batch(spark, rows: list, schema):
     verify, convert = _make_type_verifier(schema), _create_converter(schema)
     data = []
     for r in rows:
-        row = tuple(_wire_value(r.get(f.name), f.dataType) for f in schema.fields)
+        row = tuple(_wire_value(r.get(f.name), f) for f in schema.fields)
         try:
             verify(row)
         except TypeError as e:

@@ -2,12 +2,16 @@
 its data directories plus its schema, and a snapshot whose recorded
 parquet bytes are at most Spark's per-file open cost reads as one
 partition, so a routed read is one job of one task. Freshness does not change: every
-read resolves the manifest, and a new commit names new directories."""
+read resolves the manifest, and a new commit names new directories.
+Every commit writes the whole manifest; a manifest missing a field, a
+version never committed and a cube whose create failed all refuse by
+name."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 import pytest
@@ -55,16 +59,6 @@ def jobs_and_tasks(spark, df, group):
                 for j in jobs for s in tracker.getJobInfo(j).stageIds)
     assert rows
     return len(jobs), tasks
-
-
-def strip_bytes(catalog, name):
-    """Rewrite the current manifest as a legacy one: no ``bytes``."""
-    m = catalog.manifest(name)
-    for entry in m["partitions"].values():
-        entry.pop("bytes")
-    with open(catalog._hist_path(name, m["version"]), "w") as f:
-        json.dump(m, f)
-    catalog._write_pointer(name, m)
 
 
 def test_conf_bytes_parses_spark_byte_strings(spark):
@@ -117,17 +111,6 @@ def test_snapshot_above_one_split_keeps_parallel_scan(spark, engine, key):
         assert rows_set(df) == expected
     finally:
         spark.conf.set(key, old)
-
-
-def test_legacy_entry_without_bytes_reads_as_today(spark, engine):
-    one_split = rows_set(engine.catalog.cells(CUBE))
-    strip_bytes(engine.catalog, CUBE)
-    cells = engine.catalog.cells(CUBE)
-    assert cells.rdd.getNumPartitions() > 1
-    assert "Coalesce" not in cells._jdf.queryExecution().executedPlan().toString()
-    assert rows_set(cells) == one_split
-    assert rows_set(routed(engine)) == rows_set(
-        query_cube(cells, EVENTS_CUBE, group_by=["event_type"], measures=["n", "total_value"]))
 
 
 def test_repeat_read_reuses_the_snapshot_scan(engine):
@@ -275,3 +258,86 @@ def test_concurrent_reads_keep_the_memo_bounded(engine):
     assert not errors, errors
     assert len(sizes) == 8 * ROUNDS
     assert max(sizes) <= catalog_mod._SCAN_MEMO_SIZE
+
+
+MANIFEST_FIELDS = {"version", "partitions", "level_counts", "spec", "schema",
+                   "last_batch_ids"}
+
+
+def assert_whole_manifest(catalog, name):
+    m = catalog.manifest(name)
+    assert MANIFEST_FIELDS <= set(m), sorted(MANIFEST_FIELDS - set(m))
+    entry = {"path", "rows", "bytes"} | (
+        set() if m["level_counts"] is None else {"level_rows"})
+    assert m["partitions"]
+    for e in m["partitions"].values():
+        assert entry <= set(e), sorted(entry - set(e))
+
+
+def test_every_commit_writes_the_whole_manifest(engine, events):
+    cat = engine.catalog
+    assert_whole_manifest(cat, CUBE)  # create
+    key = sorted(cat.manifest(CUBE)["partitions"])[0]
+    cat.commit_partitions(CUBE, cat.cells_for_partitions(CUBE, [key]), [key],
+                          batch_id=3, stream_id="s")
+    assert_whole_manifest(cat, CUBE)
+    cat.overwrite_cells(CUBE, cat.cells(CUBE).localCheckpoint(), batch_id=4)
+    assert_whole_manifest(cat, CUBE)
+    engine.evolve_cube(CUBE, drop=["avg_value"])
+    assert_whole_manifest(cat, CUBE)
+    cat.compact(CUBE)
+    assert_whole_manifest(cat, CUBE)
+    assert cat.manifest(CUBE)["last_batch_ids"] == {"s": 3, "default": 4}
+
+    lat = "events_lattice"
+    cat.create_lattice(CubeSpec(name=lat, source="events",
+                                dimensions=EVENTS_CUBE.dimensions,
+                                measures=EVENTS_CUBE.measures), events)
+    assert_whole_manifest(cat, lat)
+    key = sorted(cat.manifest(lat)["partitions"])[0]
+    cat.commit_partitions(lat, cat.cells_for_partitions(lat, [key]), [key])
+    assert_whole_manifest(cat, lat)
+
+
+@pytest.mark.parametrize("field", ["spec", "schema", "last_batch_ids",
+                                   "partitions[].bytes"])
+def test_manifest_missing_a_field_refuses_by_name(engine, field):
+    cat = engine.catalog
+    m = cat.manifest(CUBE)
+    if field == "partitions[].bytes":
+        for e in m["partitions"].values():
+            del e["bytes"]
+    else:
+        del m[field]
+    with open(cat._hist_path(CUBE, m["version"]), "w") as f:
+        json.dump(m, f)
+    cat._write_pointer(CUBE, m)
+    refusal = rf"cube 'events_daily'.* lacks {re.escape(field)},.*drop and re-create"
+    with pytest.raises(ValueError, match=refusal):
+        cat.cells(CUBE)
+    with pytest.raises(ValueError, match=refusal):
+        cat.get_spec(CUBE, version=m["version"])
+
+
+def test_pinned_read_of_uncommitted_version_refuses(engine):
+    with pytest.raises(ValueError, match="no committed snapshot version 99"):
+        engine.catalog.cells(CUBE, version=99)
+
+
+def test_failed_create_is_refused_by_routing(engine, events):
+    """A create whose build raises leaves the cube listed without a
+    snapshot: routing skips it with a reason instead of failing."""
+    bad = CubeSpec(name="bad", source="events", dimensions=(Dimension("event_type"),),
+                   measures=(Measure("n", "count"), Measure("s", "sum", "no_such_col")))
+    with pytest.raises(Exception, match="no_such_col"):
+        engine.create_cube(bad, events)
+    assert engine.catalog.list_cubes() == ["bad", CUBE]
+    req = AggregateRequest(source="events", group_by=("event_type",), measures=("n",))
+    decision = engine.router.route(req)
+    assert decision.cube == CUBE
+    assert "bad: no committed snapshot" in decision.reason
+    want = query_cube(build_cube(engine.spark, EVENTS_CUBE, events), EVENTS_CUBE,
+                      group_by=["event_type"], measures=["n"])
+    got = engine.query(source="events", group_by=["event_type"], measures=["n"],
+                       source_df=events)
+    assert rows_set(got) == rows_set(want)

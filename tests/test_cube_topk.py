@@ -511,95 +511,3 @@ def test_topk_certificate_raise_carries_sentinel(spark, events):
         query_cube(cells, spec, group_by=["event_type"],
                    measures=["top_users"]).collect()
     assert TOPK_CERT_SENTINEL in "[TOPK-CERT-E417]"
-
-
-# ---------------------------------------------------------------------------
-# legacy snapshots: cells written before the r15 {m}_tkn mass column
-# ---------------------------------------------------------------------------
-
-
-def _legacy(cells):
-    """Simulate a pre-r15 snapshot: the mass column does not exist."""
-    return cells.drop("top_users_tkn")
-
-
-def test_legacy_cells_refuse_certified_serve(spark, events):
-    """A pre-certificate cube cannot prove the exact regime: the
-    default serve refuses BY NAME (rebuild/refresh or opt into
-    'sketch') instead of dying with an unresolved-column error or —
-    worse — silently passing the certificate."""
-    cells = _legacy(build_cube(spark, USERS_TOPK_CUBE, events))
-    rolled = query_cube(
-        cells, USERS_TOPK_CUBE, group_by=["event_type"],
-        measures=["top_users"])
-    with pytest.raises(Exception, match="exactness certificate"):
-        rolled.collect()
-
-
-def test_legacy_cells_serve_with_sketch_optin(spark, events):
-    """on_inexact='sketch' needs no certificate: a legacy cube serves
-    the same answer as a fresh one (test cardinality is exact)."""
-    cells = build_cube(spark, USERS_TOPK_CUBE, events)
-    def as_rows(df):
-        return {
-            (r["event_type"],
-             tuple((e["item"], e["count"]) for e in r["top_users"]))
-            for r in df.collect()
-        }
-
-    want = query_cube(cells, USERS_TOPK_CUBE, group_by=["event_type"],
-                      measures=["top_users"], on_inexact="sketch")
-    got = query_cube(_legacy(cells), USERS_TOPK_CUBE,
-                     group_by=["event_type"], measures=["top_users"],
-                     on_inexact="sketch")
-    assert as_rows(got) == as_rows(want)
-
-
-def test_legacy_merge_propagates_unknown_mass(spark, events):
-    """IVM onto a legacy cube resolves (no unresolved column) but the
-    merged mass stays NULL — 'unknown', not a definite-looking
-    undercount — so the certified serve still refuses by name."""
-    half1 = events.filter(F.col("event_id") % 2 == 0)
-    half2 = events.filter(F.col("event_id") % 2 == 1)
-    cells = _legacy(build_cube(spark, USERS_TOPK_CUBE, half1))
-    deltas = delta_cells(USERS_TOPK_CUBE, half2.withColumn("mult", F.lit(1)))
-    merged = merge_cells(cells, deltas, USERS_TOPK_CUBE)
-    assert "top_users_tkn" in merged.columns
-    # every cell that existed on the legacy side carries NULL mass
-    legacy_keys = {tuple(r) for r in cells.select(
-        *USERS_TOPK_CUBE.dim_names).collect()}
-    for r in merged.collect():
-        key = tuple(r[d] for d in USERS_TOPK_CUBE.dim_names)
-        if key in legacy_keys:
-            assert r["top_users_tkn"] is None
-        else:
-            assert r["top_users_tkn"] is not None
-    rolled = query_cube(merged, USERS_TOPK_CUBE, group_by=["event_type"],
-                        measures=["top_users"])
-    with pytest.raises(Exception, match="exactness certificate"):
-        rolled.collect()
-
-
-def test_legacy_combine_poisons_group_mass(spark, events):
-    """combine_cells over a legacy frame + a fresh frame yields NULL
-    mass for groups the legacy frame touches (F.sum must not skip the
-    unknown and mint a definite undercount)."""
-    from mongo_olap_spark.cube.query import combine_cells
-
-    half1 = events.filter(F.col("event_id") % 2 == 0)
-    half2 = events.filter(F.col("event_id") % 2 == 1)
-    legacy_cells = _legacy(build_cube(spark, USERS_TOPK_CUBE, half1))
-    fresh_cells = build_cube(spark, USERS_TOPK_CUBE, half2)
-    combined = combine_cells(USERS_TOPK_CUBE, legacy_cells, fresh_cells)
-    legacy_keys = {tuple(r) for r in legacy_cells.select(
-        *USERS_TOPK_CUBE.dim_names).collect()}
-    seen_legacy = seen_fresh = 0
-    for r in combined.collect():
-        key = tuple(r[d] for d in USERS_TOPK_CUBE.dim_names)
-        if key in legacy_keys:
-            assert r["top_users_tkn"] is None
-            seen_legacy += 1
-        else:
-            assert r["top_users_tkn"] is not None
-            seen_fresh += 1
-    assert seen_legacy and seen_fresh

@@ -497,43 +497,6 @@ def test_evolve_validations(engine, events, tmp_path):
         engine.evolve_cube("lat_ev", drop=["n"])
 
 
-def test_pinned_read_on_preembedding_manifest(engine, events):
-    """r16 (ADVICE r15): a manifest written before spec embedding
-    (simulated by stripping the embedded spec) must NOT silently
-    resolve against a post-evolve spec.json. No evolve → warning +
-    file fallback; evolve after the pinned version → loud refusal."""
-    import json as _json
-    import warnings as _warnings
-
-    from mongo_olap_spark.cube.spec import Measure
-
-    engine.create_cube(EVENTS_CUBE, events)
-    cat = engine.catalog
-    v1 = cat.current_version("events_daily")
-    # simulate a pre-r15 commit: drop the embedded spec from v1
-    path = cat._hist_path("events_daily", v1)
-    with open(path) as f:
-        m = _json.load(f)
-    m.pop("spec", None)
-    with open(path, "w") as f:
-        _json.dump(m, f)
-
-    # no spec change since v1: fallback works, but says so
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        spec = cat.get_spec("events_daily", version=v1)
-    assert {x.name for x in spec.measures} == {
-        x.name for x in EVENTS_CUBE.measures}
-    assert any("predates spec embedding" in str(w.message) for w in caught)
-
-    # an evolve AFTER v1 makes the file a wrong stand-in: refuse
-    engine.evolve_cube("events_daily",
-                       add=[Measure("max_value", "max", "value")],
-                       source=events)
-    with pytest.raises(ValueError, match="spec CHANGED"):
-        cat.get_spec("events_daily", version=v1)
-
-
 def test_evolve_drop_rebases_over_concurrent_cdc(engine, events, monkeypatch):
     """r16 (VERDICT r15 task 4): a CDC batch landing in evolve's
     read→commit window is NOT silently dropped. Drop-only evolve
@@ -634,78 +597,3 @@ def test_evolve_add_topk_join_miss_serves_empty(engine, events):
         assert by_type[t] == [], (
             f"join-miss group {t!r} must serve an empty array, "
             f"not refuse as legacy")
-
-
-def test_refused_cas_does_not_clobber_schema_file(engine, events):
-    """r16 review fix: _write_snapshot wrote cells_schema.json BEFORE
-    the expected_prev_version CAS check, so a refused evolve left the
-    fallback schema file describing columns that were never
-    committed. The file must only change when a commit lands."""
-    import pytest
-
-    from mongo_olap_spark.cube.catalog import CommitConflict
-
-    engine.create_cube(EVENTS_CUBE, events)
-    cat = engine.catalog
-    schema_path = cat._schema_path("events_daily")
-    with open(schema_path) as f:
-        before = f.read()
-
-    cells = cat.cells("events_daily").withColumn(
-        "phantom_cnt", F.lit(0).cast("long"))
-    with pytest.raises(CommitConflict):
-        cat._write_snapshot(EVENTS_CUBE, cells,
-                            expected_prev_version=999)
-    with open(schema_path) as f:
-        after = f.read()
-    assert after == before
-    assert "phantom_cnt" not in after
-
-
-def test_get_spec_refuses_unmarked_evolve_via_column_drift(engine, events):
-    """r16 review fix: an evolve committed by r15-era code left no
-    'evolved' mark and rewrote spec.json, so a pinned read of a
-    pre-embedding version silently resolved against the post-evolve
-    spec. The column-drift check closes it: evolve always changes the
-    cell storage columns, and the pinned version's parquet footers
-    record what was actually written."""
-    import json as _json
-
-    import pytest
-
-    from mongo_olap_spark.cube.spec import Measure
-
-    engine.create_cube(EVENTS_CUBE, events)
-    cat = engine.catalog
-    # simulate a pre-embedding v1 (r14-era manifest: no spec/schema)
-    for p in (cat._hist_path("events_daily", 1),
-              cat._manifest_path("events_daily")):
-        with open(p) as f:
-            m = _json.load(f)
-        m.pop("spec", None)
-        m.pop("schema", None)
-        with open(p, "w") as f:
-            _json.dump(m, f)
-    # simulate an r15-era evolve: real evolve, then strip the r16 mark
-    # (and the embedded spec evidence) from its manifest
-    engine.evolve_cube("events_daily",
-                       add=[Measure("max_value", "max", "value")],
-                       source=events)
-    for p in (cat._hist_path("events_daily", 2),
-              cat._manifest_path("events_daily")):
-        with open(p) as f:
-            m = _json.load(f)
-        m.pop("evolved", None)
-        m.pop("spec", None)
-        m.pop("schema", None)
-        with open(p, "w") as f:
-            _json.dump(m, f)
-
-    with pytest.raises(ValueError, match="cell columns"):
-        cat.get_spec("events_daily", version=1)
-    # an UN-evolved pre-embedding cube still serves with the warning
-    # (columns match), so the benign upgrade path is unbroken
-    with open(cat._hist_path("events_daily", 2)) as f:
-        m2 = _json.load(f)
-    spec2 = cat.get_spec("events_daily")  # current = post-evolve
-    assert {mm.name for mm in spec2.measures} >= {"max_value"}

@@ -494,7 +494,7 @@ def _wire_rows(spark, rows, schema):
     from mongo_olap_spark.service import _wire_value
 
     return spark.createDataFrame(
-        [tuple(_wire_value(r.get(f.name), f.dataType) for f in schema.fields)
+        [tuple(_wire_value(r.get(f.name), f) for f in schema.fields)
          for r in rows], schema)
 
 
@@ -527,11 +527,15 @@ def _wire_schemas(service):
         (events, [{"event_id": i, "ts": t, "user_id": i * 7, "event_type": "click",
                    "value": None if i == 2 else i / 4, "props": None, "mult": 1 - 2 * (i % 2)}
                   for i, t in enumerate(WIRE_TIMES)]),
-        # l_shipdate reads as timestamp_ntz, which takes datetimes only
+        # l_shipdate reads as timestamp_ntz: in-process datetimes, and
+        # on the wire ISO wall times (an offset is refused)
         (lineitem, [{"l_orderkey": i, "l_linenumber": i, "l_quantity": 2.5,
                      "l_returnflag": "R", "mult": 1,
                      "l_shipdate": t and _dt.datetime.fromisoformat(t)}
                     for i, t in enumerate(WIRE_TIMES)]),
+        (lineitem, [{"l_orderkey": i, "l_linenumber": i, "l_quantity": 2.5,
+                     "l_returnflag": "R", "mult": 1, "l_shipdate": t}
+                    for i, t in enumerate(WIRE_TIMES) if not (t and "+" in t)]),
         (typed, [{"id": i, "ts": t, "d": d, "amt": a, "arr": [1.5, None] if i else [],
                   "mult": 1} for i, (t, d, a) in enumerate(zip(WIRE_TIMES, dates, dec))]),
     ]
@@ -572,14 +576,23 @@ def test_wire_batch_decode_matches_create_dataframe(service, spark, monkeypatch,
     ({"event_id": "x"}, "field event_id:"),
     ({"user_id": 2 ** 70}, "VALUE_OUT_OF_BOUNDS"),
     ({"ts": "nope"}, "Invalid isoformat string"),
+    ({"l_shipdate": "2024-01-02T03:04:05+02:00"}, "field l_shipdate:"),
 ])
 def test_wire_batch_refusals_are_invalid(service, bad, says):
     # a value the source schema cannot hold is refused before Spark
     # sees the batch, as code invalid (a client error), never internal
-    service.handle({"op": "create_cube_from_pipeline", "name": "cdc_bad",
-                    "source": "events", "pipeline": PIPE})
-    doc = {"event_id": 1, "ts": "2024-01-02T03:04:05", "event_type": "click",
-           "user_id": 7, "value": 1.0, "mult": 1, **bad}
+    if "l_shipdate" in bad:
+        source, pipe = "lineitem", [{"$group": {"_id": {"rf": "$l_returnflag"},
+                                                "n": {"$sum": 1}}}]
+        doc = {"l_orderkey": 1, "l_linenumber": 1, "l_quantity": 2.5,
+               "l_returnflag": "R", "mult": 1, **bad}
+    else:
+        source, pipe = "events", PIPE
+        doc = {"event_id": 1, "ts": "2024-01-02T03:04:05", "event_type": "click",
+               "user_id": 7, "value": 1.0, "mult": 1, **bad}
+    r = service.handle({"op": "create_cube_from_pipeline", "name": "cdc_bad",
+                        "source": source, "pipeline": pipe})
+    assert r["ok"], r
     r = service.handle({"op": "apply_cdc", "cube": "cdc_bad", "batch": [doc]})
     assert not r["ok"] and r["error"]["code"] == "invalid", r
     assert says in r["error"]["message"]

@@ -358,7 +358,7 @@ def test_time_local_batch_rewrites_only_touched_partitions(spark, events, tmp_pa
     m1 = cat.manifest(name)
     touched = "2024-01-03T00.00.00"
     assert m1["version"] == m0["version"] + 1  # ONE commit: data + watermark
-    assert m1["last_batch_id"] == 0
+    assert m1["last_batch_ids"]["default"] == 0
     assert m1["partitions"][touched]["path"] != m0["partitions"][touched]["path"]
     for key, entry in m1["partitions"].items():
         if key != touched:
@@ -556,7 +556,7 @@ def test_compact_preserves_cells_and_reclaims_dirs(spark, events, tmp_path):
         {p["path"].split(os.sep)[1] for p in after_manifest["partitions"].values()}
     )
     assert n_dirs_after == 1
-    assert after_manifest["last_batch_id"] == 3  # watermark preserved
+    assert after_manifest["last_batch_ids"]["default"] == 3  # watermark preserved
     assert {tuple(r) for r in cat.cells(EVENTS_CUBE.name).collect()} == before
 
 

@@ -1,11 +1,9 @@
-"""MERGE-semantics contract suite for the table-format swap seam
-(round-5 task 7).
+"""MERGE-semantics contract suite of the cube store.
 
-Every test here is written against ``TableFormatAdapter`` ONLY — no
-manifest files, no ``_write_*`` internals — so the identical suite is
-the acceptance gate for a Delta/Iceberg-backed adapter: add its
-factory to ``ADAPTERS`` (guarded by an import-try) and nothing else
-changes. ``CubeCatalog`` is instance #1.
+Every test here uses the store's public operations only — no manifest
+files, no ``_write_*`` internals — so the same suite states what a
+Delta/Iceberg-backed store would have to keep (the operation mapping is
+in the ``cube/catalog.py`` docstring).
 """
 
 from __future__ import annotations
@@ -15,24 +13,13 @@ from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube import CubeCatalog, build_cube
 from mongo_olap_spark.cube.catalog import CommitConflict, partition_key_col
-from mongo_olap_spark.cube.table_format import DeltaTableFormat, TableFormatAdapter
 from mongo_olap_spark.queries.core import EVENTS_CUBE
 
-#: adapter factories under contract: (id, factory(spark, root)).
-#: A Delta-backed implementation registers itself here once its
-#: environment exists — the suite body is implementation-agnostic.
-ADAPTERS = [("manifest", CubeCatalog)]
-try:  # pragma: no cover - not installed in this environment
-    import delta  # noqa: F401
 
-    ADAPTERS.append(("delta", DeltaTableFormat))
-except ImportError:
-    pass
-
-
-@pytest.fixture(params=ADAPTERS, ids=[a[0] for a in ADAPTERS])
-def fmt(request, spark, tmp_path) -> TableFormatAdapter:
-    return request.param[1](spark, str(tmp_path / "cubes"))
+#: the id names the store under test: the parquet + manifest catalog
+@pytest.fixture(params=["manifest"])
+def fmt(spark, tmp_path) -> CubeCatalog:
+    return CubeCatalog(spark, str(tmp_path / "cubes"))
 
 
 def rows_set(df):
@@ -48,15 +35,6 @@ def day_key(events, day: int) -> str:
 def day_cells(spark, events, *days):
     src = events.filter(F.dayofmonth("ts").isin(*days))
     return build_cube(spark, EVENTS_CUBE, src)
-
-
-def test_catalog_is_instance_one():
-    assert issubclass(CubeCatalog, TableFormatAdapter)
-    # the maintainer's entire storage dependency is on the contract
-    need = {"create", "cells", "cells_for_partitions", "overwrite_cells",
-            "commit_partitions", "current_version", "last_batch_id",
-            "vacuum", "compact"}
-    assert need <= set(TableFormatAdapter.__abstractmethods__)
 
 
 def test_create_read_roundtrip_and_versioning(fmt, spark, events):
@@ -156,8 +134,3 @@ def test_compact_preserves_content(fmt, spark, events):
     fmt.compact(name)
     assert rows_set(fmt.cells(name)) == before
     assert fmt.last_batch_id(name) == 1  # watermark survives compaction
-
-
-def test_delta_adapter_refuses_with_recipe():
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        DeltaTableFormat(None, "/tmp/nope")

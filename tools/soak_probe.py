@@ -216,8 +216,7 @@ class SnapshotReader(threading.Thread):
                 m = self.catalog.manifest(self.name, v)
                 if m is None:
                     continue
-                ids = m.get("last_batch_ids") or {}
-                k = ids.get("default", m.get("last_batch_id", -1))
+                k = m["last_batch_ids"].get("default", -1)
                 if k < 0 or k not in self.expected:
                     continue
                 total = (

@@ -93,7 +93,7 @@ EXPECTED = {
         "s_sum:decimal(38,6)?", "a_sum:decimal(38,6)?", "a_cnt:bigint",
         "lo_min:double?", "hi_max:double?", "q_hist:array<bigint?>?",
         "v_sum:decimal(38,6)?", "v_sum2:decimal(38,6)?", "v_cnt:bigint",
-        "d_hll:binary?", "t_tk:map<bigint,bigint>?", "t_tkn:bigint?",
+        "d_hll:binary?", "t_tk:map<bigint,bigint>?", "t_tkn:bigint",
     ],
 }
 

@@ -45,19 +45,23 @@ def cell_aggs(spec: CubeSpec, mult: str | None = None) -> list:
     return [a for m in spec.measures for a in build_aggs(m, mult)]
 
 
-def _merge_aggs(m: Measure, mult: str | None) -> list:
-    """Second-level aggregates that merge one measure's level-1
-    partials without changing value, dtype OR nullability. The plain
-    build's count partials are non-nullable ``F.count``s, so on the
-    unsigned plan a partial with a non-NULL empty value coalesces to
-    it (it can never fire on a live group); the signed delta path's
-    ``F.sum`` partials stay nullable."""
+def merge_aggs(m: Measure, mult: str | None) -> list:
+    """Aggregates that merge one measure's partials without changing
+    value, dtype OR nullability: the two-level build's level 2 and
+    ``ivm.merge_cells``. The plain build's count partials are
+    non-nullable ``F.count``s, so on the unsigned plan a partial with
+    a non-NULL empty value coalesces to it (it can never fire on a
+    live group); the signed delta path's ``F.sum`` partials stay
+    nullable. A histogram's rollup is cast back to the build's
+    nullable-element array."""
     out = []
     for c, s in storage(m):
         p = PARTIALS[s]
         agg = p.rollup(c, m)
         if mult is None and p.empty is not None:
             agg = F.coalesce(agg, F.expr(p.empty))
+        if s == "_hist":
+            agg = agg.cast("array<bigint>")
         out.append(agg.alias(c))
     return out
 
@@ -99,7 +103,7 @@ def _hist_two_level(df: DataFrame, spec: CubeSpec,
     lvl2: list = []
     for m in spec.measures:
         if m not in hists:
-            lvl2.extend(_merge_aggs(m, mult))
+            lvl2.extend(merge_aggs(m, mult))
         elif len(hists) == 1:
             # outer CAST: nullability parity with the single-level build
             # (an array of sums has nullable elements; the coalesce'd

@@ -420,13 +420,19 @@ class CubeCatalog:
         self._evict_scans([self._dir(name)])
 
     def create(self, spec: CubeSpec, source: DataFrame) -> DataFrame:
-        """Define + initially populate a cube; returns the cell table."""
+        """Define + initially populate a cube; returns the cell table.
+        ``cube.json`` (what ``list_cubes`` lists) is written only after
+        the first snapshot commits, so a build that raises leaves no
+        listed cube behind."""
         os.makedirs(self._dir(spec.name), exist_ok=True)
-        with open(self._spec_path(spec.name), "w") as f:
-            f.write(spec.to_json())
         cells = build_cube(self.spark, spec, source)
         self._write_snapshot(spec, cells)
+        self._write_spec(spec)
         return self.cells(spec.name)
+
+    def _write_spec(self, spec: CubeSpec) -> None:
+        with open(self._spec_path(spec.name), "w") as f:
+            f.write(spec.to_json())
 
     def create_lattice(
         self, spec: CubeSpec, source: DataFrame, levels: list[tuple[str, ...]] | None = None
@@ -437,14 +443,13 @@ class CubeCatalog:
         from mongo_olap_spark.cube.lattice import build_cube_lattice
 
         os.makedirs(self._dir(spec.name), exist_ok=True)
-        with open(self._spec_path(spec.name), "w") as f:
-            f.write(spec.to_json())
         names = spec.dim_names
         levels = levels or [tuple(names[:i]) for i in range(len(names), -1, -1)]
-        with open(os.path.join(self._dir(spec.name), "lattice.json"), "w") as f:
-            json.dump({"levels": [list(lv) for lv in levels]}, f)
         cells = build_cube_lattice(self.spark, spec, source, levels=levels)
         self._write_snapshot(spec, cells, lattice=True)
+        with open(os.path.join(self._dir(spec.name), "lattice.json"), "w") as f:
+            json.dump({"levels": [list(lv) for lv in levels]}, f)
+        self._write_spec(spec)
         return self.cells(spec.name)
 
     def lattice_levels(self, name: str) -> list[tuple[str, ...]] | None:
@@ -591,8 +596,7 @@ class CubeCatalog:
             raise CommitConflict(
                 f"evolve: {name}: gave up after {_MAX_COMMIT_RETRIES} "
                 f"rebases")
-        with open(self._spec_path(name), "w") as f:
-            f.write(new_spec.to_json())
+        self._write_spec(new_spec)
         return self.cells(name)
 
     # -- reads ----------------------------------------------------------
@@ -818,14 +822,17 @@ class CubeCatalog:
         # one directory per engine-formatted key; __p never reaches the
         # data files (partition column) while the real time dim column
         # stays in the data, so reads need no dirname parsing.
-        # repartition on the key first: each partition dir gets one
-        # file per owning task instead of one per shuffle partition —
-        # cell tables are small relative to their sources, and without
-        # this a k-day cube writes k × shuffle_partitions tiny files
-        # (measured 5× slower create + slower reads/footer stats).
+        # repartition on the time dim first: each partition dir gets
+        # one file per owning task instead of one per shuffle partition
+        # — cell tables are small relative to their sources, and
+        # without this a k-day cube writes k × shuffle_partitions tiny
+        # files (measured 5× slower create + slower reads/footer
+        # stats). The key is a function of the dim, so clustering on
+        # the dim clusters the key; and ``merge_cells`` already
+        # clusters on the dim, so Spark drops this exchange there.
         (
-            cells.withColumn("__p", partition_key_col(pdim))
-            .repartition(F.col("__p"))
+            cells.repartition(F.col(pdim))
+            .withColumn("__p", partition_key_col(pdim))
             .write.mode("overwrite")
             .partitionBy("__p")
             .parquet(abs_dir)

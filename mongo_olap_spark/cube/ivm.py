@@ -7,7 +7,7 @@ table:
 
     cdc(mult = +1 insert / −1 delete; update = −1/+1 pair)
       → delta_cells(spec, batch)            # groupBy dims, signed partials
-      → merge_cells(current, deltas, spec)  # full-outer join, add partials
+      → merge_cells(current, deltas, spec)  # union, rollup per dims
       → drop cells whose row count hits 0
 
 Because partials are exact decimals, incremental apply is
@@ -30,7 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube.build import build_cube, delta_cells  # noqa: F401 (re-export)
-from mongo_olap_spark.cube.measures import PARTIALS, row_count_col, storage
+from mongo_olap_spark.cube.build import merge_aggs
+from mongo_olap_spark.cube.catalog import CubeCatalog
+from mongo_olap_spark.cube.measures import row_count_col
 from mongo_olap_spark.cube.spec import CubeSpec
 
 
@@ -43,37 +45,34 @@ def merge_cells(
 ) -> DataFrame:
     """Merge signed cell deltas into the current cell table.
 
-    Pure DataFrame plan: full-outer join on the dimension tuple
-    (null-safe — dimensions may legitimately be null), each partial's
-    pairwise merge (signed addition for the retractable ones), eviction
-    of cells whose row count (``row_count_col``: a count measure, and
-    only a count) reaches 0. This is the ``MERGE INTO`` of §4.3
-    expressed without a transactional table format; swap in Delta's
-    MERGE at deployment for in-place upsert.
+    Pure DataFrame plan: the union of cells and deltas, grouped by the
+    dimension tuple (grouping keys are null-safe — dimensions may
+    legitimately be null) and merged by each partial's rollup, the
+    same aggregate the two-level build's level 2 uses (signed addition
+    for the retractable ones), then eviction of cells whose row count
+    (``row_count_col``: a count measure, and only a count) reaches 0.
+    This is the ``MERGE INTO`` of §4.3 expressed without a
+    transactional table format; swap in Delta's MERGE at deployment
+    for in-place upsert.
 
-    ``extra_keys`` joins additional key columns beyond the dims —
+    The union is hash-partitioned on the cube's partition dim before
+    it groups: that one exchange serves the aggregate (the partition
+    dim is one of the dims) and the partition write after it
+    (``CubeCatalog._write_data`` repartitions on the same column, and
+    Spark drops a repartition its child already satisfies).
+
+    ``extra_keys`` groups by additional key columns beyond the dims —
     lattice cubes pass ``(LEVEL_COL,)`` so each materialized level's
     cells merge independently (a coarse level's aggregated-away dims
     are NULL by construction; the level id disambiguates them from
     genuinely-NULL dim values).
     """
-    dims = [*spec.dim_names, *extra_keys]
-    c = cells.alias("c")
-    d = deltas.alias("d")
-    if dims:
-        cond = reduce(
-            lambda a, b: a & b,
-            [F.col(f"c.{k}").eqNullSafe(F.col(f"d.{k}")) for k in dims],
-        )
-        joined = c.join(d, cond, "full_outer")
-    else:
-        joined = c.crossJoin(d)
-
-    out = [F.coalesce(F.col(f"c.{k}"), F.col(f"d.{k}")).alias(k) for k in dims]
-    for m in spec.measures:
-        for col, suffix in storage(m):
-            out.append(PARTIALS[suffix].merge(f"c.{col}", f"d.{col}", m).alias(col))
-    merged = joined.select(*out)
+    both = cells.unionByName(deltas)
+    pdim = CubeCatalog.partition_dim(spec)
+    if pdim is not None:
+        both = both.repartition(F.col(pdim))
+    merged = both.groupBy(*spec.dim_names, *extra_keys).agg(
+        *[a for m in spec.measures for a in merge_aggs(m, None)])
     return merged.filter(F.col(row_count_col(spec)) > 0)
 
 
@@ -100,7 +99,7 @@ def recompute_cells(
         pruned = pruned.filter(spec.filter_sql)
     # materialize the cell key on each source row, keep touched cells
     # only — null-safe join conditions throughout (dimensions may
-    # legitimately be null, exactly as merge_cells joins; plain
+    # legitimately be null, as merge_cells' grouping keys are; plain
     # equality would drop null-dim source rows from the semi-join AND
     # keep the stale null-dim cell through the anti-join)
     pruned = pruned.withColumns({d.name: d.expr() for d in spec.dimensions})

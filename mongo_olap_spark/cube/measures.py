@@ -6,9 +6,9 @@ PODS'12): build partials from source rows, merge partials, finalize
 the answer. This module is the only place an op's semantics live:
 
 - :data:`PARTIALS` has one :class:`Partial` per storage-column suffix:
-  the cross-cell merge aggregate (rollup, ``combine_cells``, the
-  two-level build's level 2), the pairwise merge (IVM) and the value of
-  a group with no rows (``evolve`` backfill misses).
+  its one merge, a cross-cell aggregate (rollup, ``combine_cells``,
+  the two-level build's level 2, the IVM merge of deltas into cells),
+  and the value of a group with no rows (``evolve`` backfill misses).
 - :data:`FAMILIES` has one :class:`MeasureFamily` per op: its partials,
   its plain and signed build aggregates, its finalize, and its flags.
   The four dispersion ops share one family; ``serves`` is how a stored
@@ -219,25 +219,6 @@ def topk_union_agg(col: str, max_items: int) -> Column:
     return F.when(F.size(lst) == 0, F.lit(None)).otherwise(merged)
 
 
-def _one_sided(f: Callable[[Column, Column, Measure], Column]):
-    """Pairwise merge for partials whose merge function propagates
-    NULL: a side missing from the full-outer join passes the other
-    through."""
-    def merge(a: str, b: str, m) -> Column:
-        ca, cb = F.col(a), F.col(b)
-        return F.when(ca.isNull(), cb).when(cb.isNull(), ca).otherwise(f(ca, cb, m))
-    return merge
-
-
-def _add_decimal(a: str, b: str, m) -> Column:
-    # NULL + NULL stays NULL: an all-NULL group's sum is an empty SUM
-    return _one_sided(lambda x, y, m: x + y)(a, b, m).cast(SUM_DECIMAL)
-
-
-def _add_long(a: str, b: str, m) -> Column:
-    return (F.coalesce(F.col(a), F.lit(0)) + F.coalesce(F.col(b), F.lit(0))).cast("long")
-
-
 # -- finalize ---------------------------------------------------------------
 
 def hist_quantile_expr(hist: Column, q: float, m: Measure) -> Column:
@@ -350,37 +331,30 @@ class Partial:
     """One storage-column kind, ``<measure name><suffix>``."""
 
     #: cross-cell merge aggregate over the named column: rollup,
-    #: ``combine_cells`` and the two-level build's level 2
+    #: ``combine_cells``, the two-level build's level 2 and IVM
     rollup: Callable[[str, Measure], Column]
-    #: pairwise merge of two sides' (qualified) columns: IVM
-    merge: Callable[[str, str, Measure], Column]
     #: SQL value of a group with no rows, where that is not NULL
     #: (``evolve`` backfill misses; cast to the stored type)
     empty: str | None = None
 
 
 PARTIALS: dict[str, Partial] = {
-    "_cnt": Partial(lambda c, m: F.sum(c), _add_long, empty="0"),
-    "_sum": Partial(lambda c, m: F.sum(c), _add_decimal),
-    "_sum2": Partial(lambda c, m: F.sum(c), _add_decimal),
-    # least/greatest skip NULLs: a side missing from the join passes
-    "_min": Partial(lambda c, m: F.min(c), lambda a, b, m: F.least(F.col(a), F.col(b))),
-    "_max": Partial(lambda c, m: F.max(c), lambda a, b, m: F.greatest(F.col(a), F.col(b))),
-    # hll_union propagates NULL if either side is NULL
-    "_hll": Partial(lambda c, m: F.hll_union_agg(c),
-                    _one_sided(lambda a, b, m: F.hll_union(a, b))),
+    "_cnt": Partial(lambda c, m: F.sum(c), empty="0"),
+    # sums skip NULLs: an all-NULL group's sum stays an empty SUM
+    "_sum": Partial(lambda c, m: F.sum(c)),
+    "_sum2": Partial(lambda c, m: F.sum(c)),
+    "_min": Partial(lambda c, m: F.min(c)),
+    "_max": Partial(lambda c, m: F.max(c)),
+    "_hll": Partial(lambda c, m: F.hll_union_agg(c)),
     # signed element-wise addition: a delete's −1 bins cancel an
     # insert's +1 bins, so merge equals rebuild in any batch order
-    "_hist": Partial(lambda c, m: hist_sum_expr(c, int(m.nbins)),
-                     _one_sided(lambda a, b, m: F.zip_with(a, b, lambda x, y: x + y))),
+    "_hist": Partial(lambda c, m: hist_sum_expr(c, int(m.nbins))),
     # insert deltas only: a delete touching a topk cube takes the
     # bounded cell rescan (ivm.recompute_cells)
-    "_tk": Partial(lambda c, m: topk_union_agg(c, m.capacity),
-                   _one_sided(lambda a, b, m: topk_merge_expr(a, b, m.capacity)),
-                   empty="map()"),
+    "_tk": Partial(lambda c, m: topk_union_agg(c, m.capacity), empty="map()"),
     # the map travels with its MASS (signed count of non-null rows):
     # serve-time mass conservation certifies the exact regime
-    "_tkn": Partial(lambda c, m: F.sum(c), _add_long, empty="0"),
+    "_tkn": Partial(lambda c, m: F.sum(c), empty="0"),
 }
 
 

@@ -749,8 +749,8 @@ def combine_cells(spec: CubeSpec, *frames: DataFrame) -> DataFrame:
     producing STORAGE columns again (not finalized measures).
 
     This is the serving-side complement of ivm.merge_cells (which is
-    join-based and signed, for CDC): here a plain union + one hash
-    aggregate re-merges overlapping cells, so the result feeds ANY
+    signed and evicts emptied cells, for CDC): here a plain union + one
+    hash aggregate re-merges overlapping cells, so the result feeds ANY
     consumer that expects a cell table — including the exact two-level
     routes (distinct_rollup / quantile_rollup / topk_rollup /
     extremes_rollup / top_by_rollup), whose semantics require ONE live

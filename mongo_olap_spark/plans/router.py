@@ -426,7 +426,7 @@ class CubeRouter:
                 continue
             n = self._cost(spec, req, rewritten, distinct)
             if n is None:
-                # listed but never committed (e.g. its create failed)
+                # listed but no committed snapshot (its manifests gone)
                 unbuilt.append(f"{name}: no committed snapshot")
             else:
                 candidates.append((n, name, rewritten, renames, distinct))

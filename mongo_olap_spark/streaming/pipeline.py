@@ -7,7 +7,8 @@
         batch = batch.cache()                        # one file scan
         touched = _touched_keys(spec, batch)         # partition keys
         deltas = delta_cells(spec, batch)            # signed partials
-        merged = merge_cells(touched_cells, deltas)  # §4.3 MERGE
+        merged = merge_cells(touched_cells, deltas)  # §4.3 MERGE: union,
+                                                     # rollup per dims
         [recompute_cells(...) for min/max cubes hit by deletes]
         commit touched partitions + batch id (one atomic manifest flip)
 
@@ -55,14 +56,25 @@ def _touched_keys(
     refuses any written partition outside them. A lattice level that
     aggregates the partition dim away keeps its cells in ``NULL_KEY``,
     which every non-empty batch touches. None for a cube without a
-    time dim (one unpartitioned cell table)."""
+    time dim (one unpartitioned cell table).
+
+    A batch that is already on the driver (``isLocal``: every wire
+    batch) is collected as is, with no Spark job — the optimizer folds
+    the filter and projection into the local relation — and deduped
+    here; a file-backed batch (``pump_cdc``, a streamed micro-batch)
+    dedupes in Spark."""
     pdim = CubeCatalog.partition_dim(spec)
     if pdim is None:
         return None
+    local = batch.isLocal()
     if spec.filter_sql:
         batch = batch.filter(spec.filter_sql)
     [dim] = [d for d in spec.dimensions if d.name == pdim]
-    keys = [r[0] for r in batch.select(partition_key_col(dim.expr())).distinct().collect()]
+    batch = batch.select(partition_key_col(dim.expr()))
+    if local:
+        keys = list(dict.fromkeys(r[0] for r in batch.collect()))
+    else:
+        keys = [r[0] for r in batch.distinct().collect()]
     if (keys and NULL_KEY not in keys and levels is not None
             and any(pdim not in lv for lv in levels)):
         keys.append(NULL_KEY)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube import build_cube, query_cube
 from mongo_olap_spark.cube.catalog import _conf_bytes
+from mongo_olap_spark.cube.lattice import build_cube_lattice
 from mongo_olap_spark.cube.spec import CubeSpec, Dimension, Measure
 from mongo_olap_spark.engine import OlapEngine
 from mongo_olap_spark.plans.router import AggregateRequest
@@ -324,13 +325,18 @@ def test_pinned_read_of_uncommitted_version_refuses(engine):
         engine.catalog.cells(CUBE, version=99)
 
 
+BAD = CubeSpec(name="bad", source="events", dimensions=(Dimension("event_type"),),
+               measures=(Measure("n", "count"), Measure("s", "sum", "no_such_col")))
+
+
 def test_failed_create_is_refused_by_routing(engine, events):
-    """A create whose build raises leaves the cube listed without a
-    snapshot: routing skips it with a reason instead of failing."""
-    bad = CubeSpec(name="bad", source="events", dimensions=(Dimension("event_type"),),
-                   measures=(Measure("n", "count"), Measure("s", "sum", "no_such_col")))
+    """A create whose build raises leaves no listed cube. A listed cube
+    without a snapshot (its spec file, but no manifest) is skipped by
+    routing with a reason instead of failing."""
     with pytest.raises(Exception, match="no_such_col"):
-        engine.create_cube(bad, events)
+        engine.create_cube(BAD, events)
+    assert engine.catalog.list_cubes() == [CUBE]
+    engine.catalog._write_spec(BAD)
     assert engine.catalog.list_cubes() == ["bad", CUBE]
     req = AggregateRequest(source="events", group_by=("event_type",), measures=("n",))
     decision = engine.router.route(req)
@@ -341,3 +347,23 @@ def test_failed_create_is_refused_by_routing(engine, events):
     got = engine.query(source="events", group_by=["event_type"], measures=["n"],
                        source_df=events)
     assert rows_set(got) == rows_set(want)
+
+
+@pytest.mark.parametrize("lattice", [False, True])
+def test_recreate_after_failed_create_succeeds(engine, events, lattice):
+    cat = engine.catalog
+    create = cat.create_lattice if lattice else cat.create
+    with pytest.raises(Exception, match="no_such_col"):
+        create(BAD, events)
+    assert cat.list_cubes() == [CUBE]
+    assert cat.lattice_levels("bad") is None
+    good = CubeSpec(name="bad", source="events", dimensions=(Dimension("event_type"),),
+                    measures=(Measure("n", "count"), Measure("s", "sum", "value")))
+    create(good, events)
+    assert cat.list_cubes() == ["bad", CUBE]
+    assert cat.get_spec("bad") == good
+    assert cat.current_version("bad") == 1
+    assert (cat.lattice_levels("bad") is not None) == lattice
+    want = (build_cube_lattice(engine.spark, good, events, levels=[("event_type",), ()])
+            if lattice else build_cube(engine.spark, good, events))
+    assert rows_set(cat.cells("bad")) == rows_set(want)

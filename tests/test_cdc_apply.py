@@ -2,11 +2,16 @@
 not from the deltas, and ``apply_batch`` caches nothing.
 
 ``_touched_keys`` must name exactly the partitions the deltas land in
-(``commit_partitions`` refuses anything else), the step runs as at
-most two Spark jobs, and an apply leaves no persisted RDD behind —
-also when its commit loses a race. A file-backed batch (``pump_cdc``,
-a streamed micro-batch) is cached once by the caller that owns it and
-released after."""
+(``commit_partitions`` refuses anything else). For a wire batch (a
+local relation, already on the driver) the step runs no Spark job, and
+a whole wire ``apply_cdc`` runs at most three: the delta aggregate,
+the merge's one exchange on the partition dim, and the partition
+write. An apply leaves no persisted RDD behind — also when its commit
+loses a race. A file-backed batch (``pump_cdc``, a streamed
+micro-batch) is cached once by the caller that owns it and released
+after; its touched keys dedupe in Spark. That side is exercised only
+by the pump and streaming tests below: no benchmark workload measures
+it (the ``ingest`` workload sends wire batches)."""
 
 from __future__ import annotations
 
@@ -53,6 +58,20 @@ def test_touched_keys_equal_delta_keys(events, case):
     assert (NULL_KEY in keys) == (case in ("null_time", "lattice"))
     if case == "filtered":
         assert keys != sorted(pipeline._touched_keys(EVENTS_CUBE, batch))
+
+
+@pytest.mark.parametrize("case", ["plain", "filtered", "null_time", "lattice"])
+def test_touched_keys_of_local_batch_in_no_jobs(spark, events, case):
+    spec = FILTERED if case == "filtered" else EVENTS_CUBE
+    batch = _batch(events, null_time=case == "null_time")
+    levels = LEVELS if case == "lattice" else None
+    local = spark.createDataFrame(batch.toArrow(), batch.schema)  # as a wire batch
+    assert local.isLocal() and not batch.isLocal()
+    keys, jobs = _jobs_in_group(
+        spark, "local_keys", lambda: pipeline._touched_keys(spec, local, levels))
+    assert jobs == 0
+    assert len(keys) == len(set(keys))
+    assert sorted(keys) == sorted(pipeline._touched_keys(spec, batch, levels))
 
 
 def test_touched_keys_of_empty_filtered_lattice_batch(events):
@@ -102,7 +121,7 @@ def service(spark, events, sf_dir, tmp_path):
     return OlapService(engine, sf_dir)
 
 
-def test_apply_cdc_touched_keys_in_two_jobs_and_nothing_persisted(spark, service, monkeypatch):
+def test_apply_cdc_touched_keys_in_no_jobs_and_nothing_persisted(spark, service, monkeypatch):
     resolved = []
     touched_keys = pipeline._touched_keys
 
@@ -118,8 +137,21 @@ def test_apply_cdc_touched_keys_in_two_jobs_and_nothing_persisted(spark, service
     assert r["ok"], r
     [(keys, jobs)] = resolved
     assert keys == ["2024-01-02T00.00.00", "2024-01-05T00.00.00", NULL_KEY]
-    assert jobs <= 2
+    assert jobs == 0
     assert _persisted(spark) == before
+
+
+def test_wire_apply_cdc_runs_at_most_three_jobs(spark, service):
+    def apply(batch_id):
+        return service.handle({"op": "apply_cdc", "cube": EVENTS_CUBE.name,
+                               "batch": WIRE_BATCH, "batch_id": batch_id})
+
+    # the service's first apply also loads the source table for the
+    # batch schema (a parquet footer read); time the second
+    assert apply(1)["ok"]
+    r, jobs = _jobs_in_group(spark, "apply_cdc", lambda: apply(2))
+    assert r["ok"], r
+    assert jobs <= 3
 
 
 def test_commit_conflict_leaves_nothing_persisted(spark, service, monkeypatch):

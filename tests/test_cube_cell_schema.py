@@ -86,14 +86,16 @@ EXPECTED = {
         "v_sum:decimal(38,6)?", "v_sum2:decimal(38,6)?", "v_cnt:bigint?",
         "d_hll:binary", "t_tk:map<bigint,bigint>?", "t_tkn:bigint?",
     ],
-    # sums stay nullable, as build_cube writes them: an all-NULL
-    # group's empty SUM is NULL after a merge too
+    # the build's row: the merge groups the union of cells and deltas
+    # with the same aggregates as the two-level build's level 2; sums
+    # stay nullable (an all-NULL group's empty SUM is NULL after a
+    # merge too)
     "merge_cells": [
         "event_type:string?", "day:timestamp?", "n_cnt:bigint",
         "s_sum:decimal(38,6)?", "a_sum:decimal(38,6)?", "a_cnt:bigint",
-        "lo_min:double?", "hi_max:double?", "q_hist:array<bigint?>?",
+        "lo_min:double?", "hi_max:double?", "q_hist:array<bigint?>",
         "v_sum:decimal(38,6)?", "v_sum2:decimal(38,6)?", "v_cnt:bigint",
-        "d_hll:binary?", "t_tk:map<bigint,bigint>?", "t_tkn:bigint",
+        "d_hll:binary", "t_tk:map<bigint,bigint>", "t_tkn:bigint",
     ],
 }
 

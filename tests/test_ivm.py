@@ -199,6 +199,24 @@ def test_delete_last_value_of_group_answers_null_avg(spark):
     assert got == {"a": (1, 0.0, None), "b": (1, 1.0, 1.0)}
 
 
+def test_no_dim_cube_emptied_by_deletes_takes_later_inserts(spark, tmp_path):
+    """A cube without dimensions holds one cell; once deletes evict it,
+    the next insert must create it again (the merge used to cross-join
+    the deltas with the empty cell table and drop them)."""
+    from mongo_olap_spark.cube.catalog import CubeCatalog
+    from mongo_olap_spark.streaming.pipeline import CubeMaintainer
+
+    spec = CubeSpec("g", "src", (), (Measure("n", "count"), Measure("s", "sum", "value")))
+    cat = CubeCatalog(spark, str(tmp_path / "cubes"))
+    cat.create(spec, spark.createDataFrame([(1.0,), (2.0,)], "value double"))
+    m = CubeMaintainer(cat, spec)
+    schema = "value double, mult int"
+    assert m.apply_batch(spark.createDataFrame([(1.0, -1), (2.0, -1)], schema), 1)
+    assert cat.cells("g").collect() == []
+    assert m.apply_batch(spark.createDataFrame([(7.0, 1)], schema), 2)
+    assert [tuple(r) for r in cat.cells("g").collect()] == [(1, 7)]
+
+
 def test_minmax_recompute_repairs_null_dim_cells(spark, events):
     """ADVICE r1: recompute_cells must join null-safely — deleting the
     max inside a NULL-valued dimension cell has to repair that cell,

@@ -72,6 +72,7 @@ import re
 import shutil
 import threading
 from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -420,19 +421,8 @@ class CubeCatalog:
         self._evict_scans([self._dir(name)])
 
     def create(self, spec: CubeSpec, source: DataFrame) -> DataFrame:
-        """Define + initially populate a cube; returns the cell table.
-        ``cube.json`` (what ``list_cubes`` lists) is written only after
-        the first snapshot commits, so a build that raises leaves no
-        listed cube behind."""
-        os.makedirs(self._dir(spec.name), exist_ok=True)
-        cells = build_cube(self.spark, spec, source)
-        self._write_snapshot(spec, cells)
-        self._write_spec(spec)
-        return self.cells(spec.name)
-
-    def _write_spec(self, spec: CubeSpec) -> None:
-        with open(self._spec_path(spec.name), "w") as f:
-            f.write(spec.to_json())
+        """Define + initially populate a cube; returns the cell table."""
+        return self._create(spec, lambda: build_cube(self.spark, spec, source))
 
     def create_lattice(
         self, spec: CubeSpec, source: DataFrame, levels: list[tuple[str, ...]] | None = None
@@ -442,15 +432,39 @@ class CubeCatalog:
         (cube/lattice.py)."""
         from mongo_olap_spark.cube.lattice import build_cube_lattice
 
-        os.makedirs(self._dir(spec.name), exist_ok=True)
         names = spec.dim_names
         levels = levels or [tuple(names[:i]) for i in range(len(names), -1, -1)]
-        cells = build_cube_lattice(self.spark, spec, source, levels=levels)
-        self._write_snapshot(spec, cells, lattice=True)
-        with open(os.path.join(self._dir(spec.name), "lattice.json"), "w") as f:
-            json.dump({"levels": [list(lv) for lv in levels]}, f)
+        return self._create(
+            spec, lambda: build_cube_lattice(self.spark, spec, source, levels=levels), levels)
+
+    def _create(
+        self,
+        spec: CubeSpec,
+        build: Callable[[], DataFrame],
+        levels: list[tuple[str, ...]] | None = None,
+    ) -> DataFrame:
+        """Write the first snapshot of ``build()``'s cells, then
+        ``lattice.json`` (for a lattice) and ``cube.json`` (what
+        ``list_cubes`` lists). A build or write that raises before any
+        snapshot of the cube commits removes the cube directory, with
+        whatever data files the failed write left in it, so the name
+        is free for a re-create."""
+        os.makedirs(self._dir(spec.name), exist_ok=True)
+        try:
+            self._write_snapshot(spec, build(), lattice=levels is not None)
+        except BaseException:
+            if self.manifest(spec.name) is None:
+                shutil.rmtree(self._dir(spec.name), ignore_errors=True)
+            raise
+        if levels is not None:
+            with open(os.path.join(self._dir(spec.name), "lattice.json"), "w") as f:
+                json.dump({"levels": [list(lv) for lv in levels]}, f)
         self._write_spec(spec)
         return self.cells(spec.name)
+
+    def _write_spec(self, spec: CubeSpec) -> None:
+        with open(self._spec_path(spec.name), "w") as f:
+            f.write(spec.to_json())
 
     def lattice_levels(self, name: str) -> list[tuple[str, ...]] | None:
         """The materialized dim subsets of a lattice cube, or None for

@@ -62,7 +62,13 @@ def _touched_keys(
     batch) is collected as is, with no Spark job — the optimizer folds
     the filter and projection into the local relation — and deduped
     here; a file-backed batch (``pump_cdc``, a streamed micro-batch)
-    dedupes in Spark."""
+    dedupes in Spark. The split is by size: a local batch's rows are
+    already in driver memory, but a file-backed batch has no bound
+    (a stream's backlog, a raised ``max_changes``), and collecting
+    every row's key costs O(rows) on the driver — on a cached batch
+    of 15 days, local[4], a collect and dedupe took 74 ms at 10 000
+    rows against 103 ms for ``distinct``, but 474 against 120 ms at
+    100 000 rows and 4.3 s against 0.3 s at 1 000 000."""
     pdim = CubeCatalog.partition_dim(spec)
     if pdim is None:
         return None

@@ -336,6 +336,7 @@ def test_failed_create_is_refused_by_routing(engine, events):
     with pytest.raises(Exception, match="no_such_col"):
         engine.create_cube(BAD, events)
     assert engine.catalog.list_cubes() == [CUBE]
+    os.makedirs(engine.catalog._dir("bad"))
     engine.catalog._write_spec(BAD)
     assert engine.catalog.list_cubes() == ["bad", CUBE]
     req = AggregateRequest(source="events", group_by=("event_type",), measures=("n",))
@@ -350,13 +351,23 @@ def test_failed_create_is_refused_by_routing(engine, events):
 
 
 @pytest.mark.parametrize("lattice", [False, True])
-def test_recreate_after_failed_create_succeeds(engine, events, lattice):
+@pytest.mark.parametrize("fails_at", ["analysis", "run"])
+def test_recreate_after_failed_create_succeeds(engine, events, lattice, fails_at):
+    """A create that raises, at analysis or while its write runs,
+    leaves no cube directory behind, and the name can be re-created."""
     cat = engine.catalog
     create = cat.create_lattice if lattice else cat.create
+    if fails_at == "analysis":
+        spec, source = BAD, events
+    else:
+        spec = CubeSpec(name="bad", source="events", dimensions=(Dimension("event_type"),),
+                        measures=(Measure("n", "count"), Measure("s", "sum", "value")))
+        source = events.withColumn(
+            "value", F.coalesce(F.raise_error(F.lit("no_such_col")).cast("double"), "value"))
     with pytest.raises(Exception, match="no_such_col"):
-        create(BAD, events)
+        create(spec, source)
     assert cat.list_cubes() == [CUBE]
-    assert cat.lattice_levels("bad") is None
+    assert not os.path.exists(cat._dir("bad"))
     good = CubeSpec(name="bad", source="events", dimensions=(Dimension("event_type"),),
                     measures=(Measure("n", "count"), Measure("s", "sum", "value")))
     create(good, events)
